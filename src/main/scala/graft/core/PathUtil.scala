@@ -42,35 +42,10 @@ object PathUtil {
     canonCol(org.apache.spark.sql.functions.url_decode(
       regexp_replace(c, "\\+", "%2B")))
 
-  /** Candidate `_metadata.file_path` strings Spark may report for `p`:
-    * the filesystem-qualified Hadoop Path rendered as a URI (percent-
-    * encoded — the same qualification Spark's file listing applies to
-    * the strings we hand `spark.read`), plus its authority permutations —
-    * a LocalFileSystem listing surfaces `file:/tmp/x` (authority null)
-    * where qualification yields `file:///tmp/x` (authority empty). Scans
-    * use these to serve the per-FILE-constant `__file` from a
-    * driver-built broadcast dictionary instead of running
-    * [[metaPathCol]]'s regexes + url_decode on every ROW — on a wide
-    * lineage scan the per-row string munging dominated the whole read. */
-  def sparkMetaPaths(p: String, conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val q = hp.getFileSystem(conf).makeQualified(hp)
-    val u = q.toUri
-    val authorityForms =
-      if (u.getAuthority == null || u.getAuthority.isEmpty)
-        Seq(null, "").flatMap { a =>
-          try Some(new java.net.URI(u.getScheme, a, u.getPath, null, null).toString)
-          catch { case _: java.net.URISyntaxException => None }
-        }
-      else Nil
-    (Seq(q.toUri.toString, hp.toUri.toString) ++ authorityForms).distinct
-  }
-
   /** `path` lives under the table's own data directory ⇒ the LIBRARY wrote
     * it: parquet field-ids are present, stored file_path values are canon
     * form. Externally-registered files (add_files) fail this and resolve
-    * by name mapping instead. ONE definition — the DSv2 columnar decision
-    * and the library scan's external-read branch must agree. */
+    * by name mapping instead. */
   def underDataRoot(tableLocation: String, path: String): Boolean =
     canon(path).startsWith(canon(s"$tableLocation/data/"))
 }

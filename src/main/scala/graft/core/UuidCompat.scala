@@ -1,7 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Cross-engine UUID read compatibility.
@@ -11,12 +9,11 @@ import org.apache.spark.sql.types._
   * writer stores canonical strings (Spark's parquet writer cannot emit
   * fixed-length binary — documented deviation, core/Types.scala). Scans
   * must read BOTH: uuid leaves are requested as BINARY — parquet serves
-  * fixed[16] and UTF8-annotated string columns alike — then normalized to
-  * canonical lowercase strings by byte length (16 = fixed vector,
-  * otherwise UTF-8 text). The public Spark type for uuid stays StringType.
-  *
-  * Coverage: top-level fields, struct members, list elements, map
-  * keys/values (rebuilt via map_entries so converted keys stay keys).
+  * fixed[16] and UTF8-annotated string columns alike — and the reader
+  * (graft.spark.ParquetShape) renders them as canonical lowercase strings
+  * by byte length (16 = fixed vector, otherwise UTF-8 text), in struct
+  * members, list elements and map keys/values too. The public Spark type
+  * for uuid stays StringType.
   */
 object UuidCompat {
 
@@ -34,8 +31,7 @@ object UuidCompat {
     * TIMESTAMP(NANOS) columns are requested as LONG
     * (`spark.sql.legacy.parquet.nanosAsLong`) and floor-divided to the
     * microsecond domain right after the read — the reference's
-    * ns→us downcast (io/pyarrow.py:1654) expressed in whole-stage
-    * codegen arithmetic instead of an arrow cast. */
+    * ns→us downcast (io/pyarrow.py:1654). */
   def hasNs(t: IceType): Boolean = t match {
     case ITimestampNs | ITimestamptzNs => true
     case IStruct(fs) => fs.exists(f => hasNs(f.fieldType))
@@ -64,52 +60,4 @@ object UuidCompat {
     SchemaConv.toSparkField(f).copy(dataType = readType(f.fieldType))
 
   def readSchema(s: Schema): StructType = StructType(s.fields.map(readField))
-
-  /** Canonical lowercase uuid string from a column read as binary:
-    * 16 bytes → 8-4-4-4-12 hex; anything else is already UTF-8 text. */
-  private def uuidString(c: Column): Column = {
-    val h = lower(hex(c))
-    when(c.isNull, lit(null).cast(StringType))
-      .otherwise(when(length(c) === 16,
-        concat_ws("-",
-          substring(h, 1, 8), substring(h, 9, 4), substring(h, 13, 4),
-          substring(h, 17, 4), substring(h, 21, 12)))
-        .otherwise(c.cast(StringType)))
-  }
-
-  /** ns-long column → microsecond-domain timestamp. Integral floor
-    * division (not `/`, which goes through double and loses precision
-    * past 2^53 ns); the NTZ branch pins the intermediate cast to UTC so
-    * the wall-clock value is the raw micros regardless of session zone. */
-  private def nsTimestamp(c: Column, t: IceType): Column = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, IntegralDivide, Literal => CLit, Pmod, Subtract}
-    import org.apache.spark.sql.GraftBridge
-    val ns = GraftBridge.expression(c)
-    val w = CLit(1000L, LongType)
-    val us = GraftBridge.column(IntegralDivide(Subtract(ns, Pmod(ns, w)), w))
-    val tz = timestamp_micros(us)
-    t match {
-      case ITimestamptzNs => tz
-      case _ => GraftBridge.column(
-        Cast(GraftBridge.expression(tz), TimestampNTZType, Some("UTC")))
-    }
-  }
-
-  /** Rewrite a physically-read column back to the public shape
-    * (string uuid, us-downcast timestamp). Identity elsewhere. */
-  def convert(c: Column, t: IceType): Column = t match {
-    case IUUID => uuidString(c)
-    case ITimestampNs | ITimestamptzNs => nsTimestamp(c, t)
-    case IStruct(fs) if hasUuid(t) || hasNs(t) =>
-      when(c.isNull, lit(null).cast(t.toSpark)).otherwise(
-        struct(fs.map(f => convert(c.getField(f.name), f.fieldType).as(f.name)): _*))
-    case IList(_, el, _) if hasUuid(el) || hasNs(el) =>
-      transform(c, x => convert(x, el))
-    case IMap(_, k, _, v, _) if hasUuid(t) || hasNs(t) =>
-      // rebuild from entries so uuid/ns leaves in KEYS convert too
-      map_from_entries(transform(map_entries(c), e =>
-        struct(convert(e.getField("key"), k).as("key"),
-          convert(e.getField("value"), v).as("value"))))
-    case _ => c
-  }
 }

@@ -193,8 +193,8 @@ object Iceberg {
     """SELECT o_orderkey, o_orderstatus AS status, o_totalprice, CAST(NULL AS VARCHAR) AS note
       |FROM orders WHERE o_orderstatus = 'O' ORDER BY o_orderkey""".stripMargin
 
-  /** A (deletes). merge-on-read position deletes applied via row_index
-    * anti-join (ref read path io/pyarrow.py:1629; MoR write is our
+  /** A (deletes). merge-on-read position deletes applied by the scan's
+    * reader (ref read path io/pyarrow.py:1629; MoR write is our
     * extension). */
   def positionDeletes(s: SparkSession, dir: String): DataFrame = {
     val orders = t(s, dir, "orders")
@@ -2576,10 +2576,9 @@ object Iceberg {
 
   /** A+D. row-level deletes over ORC-registered files: half the table
     * parquet, half ORC via add_files, a rename, then ONE positional
-    * delete spanning BOTH formats — the parquet half resolves positions
-    * through `_metadata.row_index` + the shared anti-join, the ORC half
-    * through the DSv2 ORC reader (Spark's ORC source has no row_index),
-    * matching the reference's format-agnostic delete application
+    * delete spanning BOTH formats — the scan's parquet and ORC readers
+    * both track row positions and apply the deletes, matching the
+    * reference's format-agnostic delete application
     * (io/pyarrow.py:1629). */
   def orcMor(s: SparkSession, dir: String): DataFrame = {
     val part = t(s, dir, "part")

@@ -180,10 +180,103 @@ object GraftSparkTable {
   /** v3 row lineage metadata columns (spec §Row Lineage): advertised only
     * on format-version ≥ 3 tables; served inherited (first_row_id +
     * position) or from the MATERIALIZED reserved columns of rewritten
-    * files, whichever is non-null — the SQL face of
-    * `IceScan.toDFWithLineage`. */
+    * files, whichever is non-null — `IceScan.toDFWithLineage` reads the
+    * same columns of the same reader. */
   val RowIdColumn: String = graft.core.RowLineage.RowIdName
   val LastUpdatedColumn: String = graft.core.RowLineage.LastUpdatedName
+
+  def metadataColumnsOf(table: IceTable)
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    Array(
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = GraftSparkTable.FileColumn
+        override def dataType(): org.apache.spark.sql.types.DataType =
+          org.apache.spark.sql.types.StringType
+        override def isNullable: Boolean = false
+        override def comment(): String = "Path of the file the row belongs to"
+      },
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = GraftSparkTable.PosColumn
+        override def dataType(): org.apache.spark.sql.types.DataType =
+          org.apache.spark.sql.types.LongType
+        override def isNullable: Boolean = false
+        override def comment(): String = "Row position in the file"
+      }) ++ (if (table.metadata.formatVersion < 3) Nil else Seq(
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = GraftSparkTable.RowIdColumn
+        override def dataType(): org.apache.spark.sql.types.DataType =
+          org.apache.spark.sql.types.LongType
+        override def isNullable: Boolean = false
+        override def comment(): String =
+          "v3 row lineage: unique id assigned when the row was first added"
+      },
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = GraftSparkTable.LastUpdatedColumn
+        override def dataType(): org.apache.spark.sql.types.DataType =
+          org.apache.spark.sql.types.LongType
+        override def isNullable: Boolean = false
+        override def comment(): String =
+          "v3 row lineage: sequence number of the commit that last updated the row"
+      }))
+}
+
+/** Read-only face of one [[PlannedRead]]: the table-API scans
+  * (`IceScan.toDF*`) and the library's internal reads of planned tasks
+  * run as a DSv2 relation over it, so [[GraftScan]] is the only code that
+  * turns planned tasks into rows. Spark's V2ScanRelationPushDown prunes
+  * its columns and pushes filters and limits into the scan as for any
+  * catalog table; metadata columns are [[GraftSparkTable]]'s. It is a
+  * FileTable only so that `Dataset.inputFiles` names the planned data
+  * files — Spark asks a DSv2 table for them through FileTable's index;
+  * the index is built from the planned paths and sizes, nothing is
+  * listed. */
+class GraftPlannedTable(table: IceTable, read: PlannedRead)
+    extends org.apache.spark.sql.execution.datasources.v2.FileTable(table.spark,
+      CaseInsensitiveStringMap.empty(), Nil, Some(read.schema.toSpark))
+    with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
+  override def name(): String = table.name
+  override lazy val schema: StructType = read.schema.toSpark
+  override lazy val fileIndex: org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =
+    new PlannedFileIndex(table.spark, read.tasks.map(_.file))
+  override def partitioning(): Array[Transform] = Array.empty
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new GraftScanBuilder(table, None, options, planned = Some(read))
+  override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
+      : org.apache.spark.sql.connector.write.WriteBuilder =
+    throw new UnsupportedOperationException(s"${table.name}: a planned read is read-only")
+  override def inferSchema(files: Seq[org.apache.hadoop.fs.FileStatus]): Option[StructType] =
+    Some(schema)
+  override def formatName: String = "graft"
+  override def fallbackFileFormat
+      : Class[_ <: org.apache.spark.sql.execution.datasources.FileFormat] =
+    classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]
+  override def metadataColumns()
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    GraftSparkTable.metadataColumnsOf(table)
+}
+
+/** The planned data files as a file index: statuses come from the
+  * manifests (path, size), so building it touches no file system. */
+private[spark] final class PlannedFileIndex(spark: org.apache.spark.sql.SparkSession,
+    files: Seq[graft.meta.DataFile])
+    extends org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex(
+      spark, Map.empty, None) {
+  private lazy val statuses: Seq[(Path, org.apache.hadoop.fs.FileStatus)] = files.map { f =>
+    val p = new Path(f.filePath)
+    val q = p.getFileSystem(hadoopConf).makeQualified(p)
+    q -> new org.apache.hadoop.fs.FileStatus(f.fileSizeInBytes, false, 1, 0L, 0L, q)
+  }
+  override lazy val leafFiles
+      : scala.collection.mutable.LinkedHashMap[Path, org.apache.hadoop.fs.FileStatus] =
+    scala.collection.mutable.LinkedHashMap(statuses: _*)
+  override def leafDirToChildrenFiles: Map[Path, Array[org.apache.hadoop.fs.FileStatus]] =
+    Map.empty
+  override def partitionSpec(): org.apache.spark.sql.execution.datasources.PartitionSpec =
+    org.apache.spark.sql.execution.datasources.PartitionSpec.emptySpec
+  override def rootPaths: Seq[Path] = statuses.map(_._1)
+  override def refresh(): Unit = ()
 }
 
 /** `branch` routes every write (INSERT/overwrite/DELETE) to that branch's
@@ -249,37 +342,7 @@ class GraftSparkTable(table: IceTable, snapshotId: Option[Long] = None,
 
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    Array(
-      new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = GraftSparkTable.FileColumn
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.StringType
-        override def isNullable: Boolean = false
-        override def comment(): String = "Path of the file the row belongs to"
-      },
-      new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = GraftSparkTable.PosColumn
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.LongType
-        override def isNullable: Boolean = false
-        override def comment(): String = "Row position in the file"
-      }) ++ (if (table.metadata.formatVersion < 3) Nil else Seq(
-      new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = GraftSparkTable.RowIdColumn
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.LongType
-        override def isNullable: Boolean = false
-        override def comment(): String =
-          "v3 row lineage: unique id assigned when the row was first added"
-      },
-      new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = GraftSparkTable.LastUpdatedColumn
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.LongType
-        override def isNullable: Boolean = false
-        override def comment(): String =
-          "v3 row lineage: sequence number of the commit that last updated the row"
-      }))
+    GraftSparkTable.metadataColumnsOf(table)
 
   /** SQL `UPDATE` / `MERGE INTO` / rewritten `DELETE` (ref upsert,
     * table/__init__.py:800). The mode follows the Iceberg table
@@ -356,7 +419,7 @@ class GraftRowLevelOperation(table: IceTable,
     val pin = branch.filter(_ != "main")
       .flatMap(b => table.metadata.refs.get(b).map(_.snapshotId))
     new GraftScanBuilder(table, pin, options, onScanBuilt = configuredScan = _,
-      schemaAtOrNull = None)
+      schemaAtOrNull = None, wholeFiles = true)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -1626,7 +1689,9 @@ class GraftStagingWriter(dir: String, schemaJson: String, partitionId: Int,
 class GraftScanBuilder(table: IceTable, snapshotId: Option[Long] = None,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
     onScanBuilt: GraftScan => Unit = _ => (),
-    schemaAtOrNull: Option[Long] = null)
+    schemaAtOrNull: Option[Long] = null,
+    planned: Option[PlannedRead] = None,
+    wholeFiles: Boolean = false)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit with SupportsPushDownAggregates {
 
@@ -1634,7 +1699,8 @@ class GraftScanBuilder(table: IceTable, snapshotId: Option[Long] = None,
     if (schemaAtOrNull == null) snapshotId else schemaAtOrNull
   private var pushed: Array[sources.Filter] = Array.empty
   private var expr: Expr = AlwaysTrue
-  private var required: StructType = GraftSparkTable.schemaOf(table, schemaAt).toSpark
+  private var required: StructType =
+    planned.map(_.schema).getOrElse(GraftSparkTable.schemaOf(table, schemaAt)).toSpark
   private var emitFile: Boolean = false
   private var emitPos: Boolean = false
   private var emitLineage: Boolean = false
@@ -1692,13 +1758,15 @@ class GraftScanBuilder(table: IceTable, snapshotId: Option[Long] = None,
     aggMemo._2
   }
 
+  // a planned read covers an explicit task subset with its own deletes;
+  // manifest stats describe the whole snapshot, so they cannot answer it
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    computeAgg(agg).isDefined
+    planned.isEmpty && computeAgg(agg).isDefined
 
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    aggResult = computeAgg(agg)
+    aggResult = if (planned.isEmpty) computeAgg(agg) else None
     aggResult.isDefined
   }
 
@@ -1709,7 +1777,10 @@ class GraftScanBuilder(table: IceTable, snapshotId: Option[Long] = None,
         Option(options.get("max-snapshots-per-trigger")).map(_.toInt), emitFile, emitPos,
         schemaAtOrNull = schemaAt, emitLineage = emitLineage,
         maxBytesPerTrigger =
-          Option(options.get("max-bytes-per-trigger")).map(_.toLong))
+          Option(options.get("max-bytes-per-trigger")).map(_.toLong),
+        // a group-based row-level operation rewrites EVERY row of each
+        // selected file: there, pushed filters select files, never rows
+        pushedFilters = if (wholeFiles) Array.empty else pushed, planned = planned)
       // the row-level operation's write needs THIS scan at commit (the
       // CoW replacement group / the delta conflict filter)
       onScanBuilt(scan)
@@ -2104,13 +2175,138 @@ final case class GraftInputPartition(
     /** the file's inherited first_row_id (v3 lineage), -1 when absent. */
     firstRowId: Long = -1L,
     /** the file entry's data sequence number (v3 lineage). */
-    dataSeq: Long = -1L) extends InputPartition
+    dataSeq: Long = -1L,
+    /** columns resolve by NAME: `readSchemaJson` carries the name
+      * mapping's registration-time names at every nesting level (files
+      * registered by add_files carry no field ids). */
+    byName: Boolean = false,
+    /** pushed filters, pruning parquet row groups by their statistics;
+      * `filterIds` maps each filter column (current name) to its field
+      * id, so the reader can rename it to this file's own column. */
+    filters: Array[sources.Filter] = Array.empty,
+    filterIds: Map[String, Int] = Map.empty) extends InputPartition
+
+/** Tasks an [[graft.table.IceScan]] has already planned, and the schema
+  * their columns resolve against: the table-API reads run on
+  * [[GraftScan]] through this instead of re-planning. */
+final case class PlannedRead(tasks: Seq[graft.table.FileScanTask], schema: Schema)
 
 object GraftScan {
   /** Test seam: partition count of the last planInputPartitions in this
     * JVM, and whether a runtime filter had been pushed by then. */
   @volatile var lastPlannedPartitions: Int = -1
   @volatile var lastRuntimeFiltered: Boolean = false
+
+  /** `schema` restricted to the columns of `required` — struct members
+    * too, so Spark's nested schema pruning reaches the parquet request. */
+  private[spark] def prunedTo(schema: Schema, required: StructType): Schema = {
+    def tpe(t: IceType, dt: DataType): IceType = (t, dt) match {
+      case (IStruct(fs), st: StructType) =>
+        IStruct(st.fields.toSeq.flatMap(sf => fs.find(_.name == sf.name).map(f =>
+          f.copy(fieldType = tpe(f.fieldType, sf.dataType)))))
+      case (IList(eid, el, req), at: ArrayType) => IList(eid, tpe(el, at.elementType), req)
+      case (IMap(kid, k, vid, v, req), mt: MapType) =>
+        IMap(kid, tpe(k, mt.keyType), vid, tpe(v, mt.valueType), req)
+      case _ => t
+    }
+    Schema(required.fields.toSeq.flatMap(sf => schema.fields.find(_.name == sf.name).map(f =>
+      f.copy(fieldType = tpe(f.fieldType, sf.dataType)))))
+  }
+
+  /** `schema` under the name mapping's registration-time names at every
+    * nesting level (ref name_mapping.py:73 MappedField nests through
+    * elements and key/value); unmapped ids keep their current names. */
+  private[spark] def mapped(schema: Schema, mapping: Seq[MappedField]): Schema = {
+    def field(scope: Seq[MappedField], f: NestedField): NestedField =
+      f.copy(name = NameMapping.nameOf(scope, f.id).getOrElse(f.name),
+        fieldType = tpe(NameMapping.childScope(scope, f.id), f.fieldType))
+    def tpe(scope: Seq[MappedField], t: IceType): IceType = t match {
+      case IStruct(fs) => IStruct(fs.map(field(scope, _)))
+      case IList(eid, el, req) => IList(eid, tpe(NameMapping.childScope(scope, eid), el), req)
+      case IMap(kid, k, vid, v, req) => IMap(kid, tpe(NameMapping.childScope(scope, kid), k),
+        vid, tpe(NameMapping.childScope(scope, vid), v), req)
+      case other => other
+    }
+    Schema(schema.fields.map(field(mapping, _)))
+  }
+
+  /** How each data file of one scan is read — shared by the batch scan
+    * and the micro-batch stream. Library-written parquet resolves columns
+    * by field id; every other file (add_files parquet, any ORC file)
+    * resolves by the name mapping. Rows come out positionally, so only
+    * the requested names differ. */
+  private[spark] final class FileReads(table: IceTable, readSchema: Schema,
+      eqSchema: Schema, filters: Array[sources.Filter]) {
+    private def json(s: Schema): String = MetadataJson.schemaToJson(s).toString
+    private val readJson = json(readSchema)
+    private val eqJson = if (eqSchema.fields.isEmpty) "" else json(eqSchema)
+    private lazy val mapping = table.nameMappingNested
+    private lazy val mappedReadJson = json(mapped(readSchema, mapping))
+    private lazy val mappedEqJson =
+      if (eqSchema.fields.isEmpty) "" else json(mapped(eqSchema, mapping))
+    // fixed16 uuid tables read through the Group-API row reader: it
+    // decodes FLBA(16) uuids without a binary detour
+    private val uuidFixed16 =
+      table.metadata.properties.get("write.uuid.fixed16").contains("true") &&
+        readSchema.fields.exists(_.fieldType == IUUID)
+    // row groups prune only on columns whose stored values ARE the public
+    // ones: not uuid / ns (rewritten after decode), not the lineage pair
+    // (coalesced with inheritance), not `unknown` (never stored)
+    private val filterIds: Map[String, Int] = readSchema.fields.collect {
+      case f if f.fieldType.isPrimitive && f.fieldType != IUnknown &&
+          !UuidCompat.hasUuid(f.fieldType) && !UuidCompat.hasNs(f.fieldType) &&
+          !RowLineage.fields.exists(_.id == f.id) => f.name -> f.id
+    }.toMap
+    private val usable = filters.filter(_.references.forall(filterIds.contains))
+
+    /** Columnar batches leave Spark's decoder untouched: no column may
+      * need a per-row rewrite (uuid, ns timestamps, `unknown`, initial
+      * defaults). */
+    val vectorizable: Boolean = !UuidCompat.hasUuid(readSchema) &&
+      !UuidCompat.hasNs(readSchema) &&
+      !readSchema.fields.exists(f => f.fieldType == IUnknown || f.initialDefault.isDefined)
+
+    private def own(f: graft.meta.DataFile): Boolean =
+      graft.core.PathUtil.underDataRoot(table.location, f.filePath)
+
+    /** library-written parquet: field ids drive the vectorized decoder,
+      * the file may split and serve columnar batches */
+    def parquetOwn(f: graft.meta.DataFile): Boolean =
+      f.fileFormat.toUpperCase == "PARQUET" && !uuidFixed16 && own(f)
+
+    def partition(t: graft.table.FileScanTask, limit: Long,
+        columnar: Boolean): GraftInputPartition = {
+      val fmt = t.file.fileFormat.toUpperCase
+      // typed rejection, not a decode crash: the manifest FileFormat enum
+      // admits AVRO (ref manifest.py:114) but neither this engine nor the
+      // reference reads avro-format DATA files
+      if (fmt != "PARQUET" && fmt != "ORC")
+        throw new UnsupportedOperationException(
+          s"Cannot read data files in format $fmt (file: ${t.file.filePath}); " +
+            "supported: PARQUET, ORC")
+      val byName = fmt == "ORC" || !own(t.file)
+      val (eqFiles, posFiles) =
+        t.deletes.partition(_.content == graft.meta.FileContent.EqualityDeletes)
+      // ship delete SOURCES (paths + blob ranges), not positions: each
+      // reader resolves its own file's deletes executor-side, so driver
+      // memory is independent of delete volume (ref per-task delete reads
+      // io/pyarrow.py:1441 _task_to_table)
+      val dels = posFiles.map { f =>
+        if (f.isDeletionVector)
+          DeleteFileRef(f.filePath,
+            f.contentOffset.getOrElse(throw new IllegalStateException(
+              s"Deletion vector ${f.filePath} lacks content-offset")),
+            f.contentSizeInBytes.getOrElse(f.fileSizeInBytes))
+        else DeleteFileRef(f.filePath, -1L, -1L,
+          canonicalPaths = graft.core.PathUtil.underDataRoot(table.location, f.filePath))
+      }.toArray
+      val eqs = eqFiles.map(f => EqDeleteRef(f.filePath, f.equalityIds.toArray)).toArray
+      GraftInputPartition(t.file.filePath, if (byName) mappedReadJson else readJson,
+        dels, limit, columnar, eqs, if (byName) mappedEqJson else eqJson,
+        idBearing = parquetOwn(t.file), fileFormat = fmt, byName = byName,
+        filters = if (fmt == "PARQUET") usable else Array.empty, filterIds = filterIds)
+    }
+  }
 }
 
 /** An input partition carrying its file's partition-tuple key, so Spark
@@ -2136,13 +2332,26 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
     maxSnapshotsPerTrigger: Option[Int] = None,
     emitFile: Boolean = false, emitPos: Boolean = false,
     schemaAtOrNull: Option[Long] = null, emitLineage: Boolean = false,
-    maxBytesPerTrigger: Option[Long] = None)
+    maxBytesPerTrigger: Option[Long] = None,
+    pushedFilters: Array[sources.Filter] = Array.empty,
+    planned: Option[PlannedRead] = None)
     extends Scan with Batch with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
     with SupportsReportStatistics with SupportsReportPartitioning {
 
   private val schemaAt: Option[Long] =
     if (schemaAtOrNull == null) snapshotId else schemaAtOrNull
+
+  /** The schema columns resolve against: the planned read's own, else the
+    * pinned snapshot's (current when unpinned). */
+  private val engineSchema: Schema =
+    planned.map(_.schema).getOrElse(GraftSparkTable.schemaOf(table, schemaAt))
+
+  /** The residual reaches the readers as a per-file row-group predicate;
+    * Spark still re-applies every filter to the rows. */
+  override def description(): String =
+    s"GraftScan ${table.name} PushedFilters: ${pushedFilters.mkString("[", ", ", "]")}, " +
+      s"ReadSchema: ${readSchema().catalogString}"
 
   override def readSchema(): StructType =
     if (!emitFile && !emitLineage) required
@@ -2162,15 +2371,16 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
   /** One planning pass shared by estimateStatistics (logical planning) and
     * planInputPartitions (physical), re-run only when runtime filtering
     * tightens the predicate between the two. */
-  @volatile private var planned: ((Expr, Option[Set[String]]), Seq[graft.table.FileScanTask]) = null
+  @volatile private var planCache: ((Expr, Option[Set[String]]), Seq[graft.table.FileScanTask]) = null
 
   private def combinedExpr: Expr =
     if (runtimeExpr == AlwaysTrue) expr else And(expr, runtimeExpr)
 
   private[spark] def plannedTasks(): Seq[graft.table.FileScanTask] = {
     val key = (combinedExpr, runtimeFiles)
-    val cached = planned
-    if (cached != null && cached._1 == key) cached._2
+    val cached = planCache
+    if (planned.isDefined) planned.get.tasks
+    else if (cached != null && cached._1 == key) cached._2
     else {
       val base = table.scan.filter(GraftFilters.normalizeLiterals(key._1))
       val pinned0 = snapshotId.fold(base)(base.useSnapshot)
@@ -2185,7 +2395,7 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
           keep.contains(graft.core.PathUtil.canon(t.file.filePath)))
         case None => all
       }
-      planned = (key, tasks)
+      planCache = (key, tasks)
       tasks
     }
   }
@@ -2214,7 +2424,7 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
     // scale bytes to the pruned column set via on-disk column sizes, so a
     // 2-column projection of a wide table reports 2 columns' bytes
     val names = required.fieldNames.toSet
-    val wantedIds = GraftSparkTable.schemaOf(table, schemaAt).fields
+    val wantedIds = engineSchema.fields
       .filter(f => names.contains(f.name)).map(_.id).toSet
     val (wantedBytes, allBytes) = tasks.foldLeft((0L, 0L)) { case ((w, a), t) =>
       val cs = t.file.columnSizes
@@ -2239,6 +2449,8 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
     * dimension join reads only matching partitions. Offered attributes are
     * the partition-transform SOURCE columns: only those can prune files. */
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
+    // a planned read's file set is fixed: nothing left to prune at runtime
+    if (planned.isDefined) return Array.empty
     val specSourceIds = table.metadata.partitionSpecs.flatMap(_.fields.map(_.sourceId)).distinct
     // only columns surviving column pruning: Spark resolves these against
     // the scan OUTPUT, and an unresolvable reference fails analysis of any
@@ -2300,7 +2512,7 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
     if (specIds.sizeIs != 1) return None
     val spec = table.metadata.specById(specIds.head)
     if (spec.fields.isEmpty) return None
-    val schema = GraftSparkTable.schemaOf(table, schemaAt)
+    val schema = engineSchema
     import org.apache.spark.sql.connector.expressions.{Expressions => Xs}
     val exprs = spec.fields.map { pf =>
       val src = schema.byId.get(pf.sourceId).getOrElse(return None)
@@ -2343,16 +2555,14 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
     val tasks = plannedTasks()
     GraftScan.lastPlannedPartitions = tasks.size
     GraftScan.lastRuntimeFiltered = runtimeExpr != AlwaysTrue
-    // requested engine schema = snapshot-schema fields matching the pruned
-    // columns (time travel projects with the schema as of that snapshot)
-    val engineSchema = GraftSparkTable.schemaOf(table, schemaAt)
-    val names = required.fieldNames.toSet
-    // lineage scans additionally request the reserved materialized-lineage
-    // columns by field id (rewritten files carry them; everything else
-    // null-fills) — the append-reader coalesces them with inheritance
-    val readSchema = Schema(engineSchema.fields.filter(f => names.contains(f.name)) ++
+    // requested engine schema = the engine schema pruned to the required
+    // columns, nested members included (time travel projects with the
+    // schema as of that snapshot). Lineage scans additionally request the
+    // reserved materialized-lineage columns by field id (rewritten files
+    // carry them; everything else null-fills) — the append-reader
+    // coalesces them with inheritance
+    val readSchema = Schema(GraftScan.prunedTo(engineSchema, required).fields ++
       (if (emitLineage) graft.core.RowLineage.fields else Nil))
-    val json = MetadataJson.schemaToJson(readSchema).toString
     if (emitLineage) {
       // ORC lineage works too: GraftOrcPartitionReader tracks absolute
       // row positions (HasRowPosition) just like the parquet row readers
@@ -2365,74 +2575,40 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
     val eqIds = tasks.flatMap(_.deletes)
       .filter(_.content == graft.meta.FileContent.EqualityDeletes)
       .flatMap(_.equalityIds).distinct
-    val eqJson = if (eqIds.isEmpty) ""
-      else MetadataJson.schemaToJson(
-        Schema(engineSchema.fields.filter(f => eqIds.contains(f.id)))).toString
-
-    // ship delete SOURCES (paths + blob ranges), not positions: each reader
-    // resolves its own file's deletes executor-side, so driver memory is
-    // independent of delete volume (the old driver-side collect was
-    // VERDICT W2; ref per-task delete reads io/pyarrow.py:1441 _task_to_table)
-    // format gate: addFiles can register an ORC file UNDER the data root;
-    // the columnar/id-bearing paths open the vectorized PARQUET reader, so
-    // they must never see a non-parquet task
-    // fixed16 uuid tables read through the Group-API row reader: the
-    // vectorized readers request uuid as STRING, which Spark's updater
-    // rejects over FLBA(16) — the documented write.uuid.fixed16 tradeoff
-    val uuidFixed16 = table.metadata.properties.get("write.uuid.fixed16").contains("true") &&
-      GraftSparkTable.schemaOf(table, schemaAt).fields.exists(_.fieldType == graft.core.IUUID)
-    def parquetOwn(path: String, fmt: String): Boolean =
-      fmt.toUpperCase == "PARQUET" && !uuidFixed16 &&
-        graft.core.PathUtil.underDataRoot(table.location, path)
+    val eqSchema = Schema(engineSchema.fields.filter(f => eqIds.contains(f.id)))
+    val reads = new GraftScan.FileReads(table, readSchema, eqSchema, pushedFilters)
     // _file emission rides the row readers (a constant-per-file column
     // appended post-decode); row-level-op scans are not the hot read path
-    val allColumnar = !emitFile && !emitLineage && tasks.forall(t => t.deletes.isEmpty &&
-      parquetOwn(t.file.filePath, t.file.fileFormat))
+    val allColumnar = !emitFile && !emitLineage && reads.vectorizable &&
+      tasks.forall(t => t.deletes.isEmpty && reads.parquetOwn(t.file))
     // when the scan reported a KeyGroupedPartitioning, every partition
     // MUST carry its key (Spark groups them; a keyless partition would
     // fail the whole scan) — same gating as outputPartitioning
     val grouping = if (spjEnabled) keyGrouping(tasks) else None
-    tasks.map { t =>
-      val (eqFiles, posFiles) =
-        t.deletes.partition(_.content == graft.meta.FileContent.EqualityDeletes)
-      val dels = posFiles.map { f =>
-        if (f.isDeletionVector)
-          DeleteFileRef(f.filePath,
-            f.contentOffset.getOrElse(throw new IllegalStateException(
-              s"Deletion vector ${f.filePath} lacks content-offset")),
-            f.contentSizeInBytes.getOrElse(f.fileSizeInBytes))
-        else DeleteFileRef(f.filePath, -1L, -1L,
-          canonicalPaths = graft.core.PathUtil.underDataRoot(table.location, f.filePath))
-      }.toArray
-      val eqs = eqFiles.map(f => EqDeleteRef(f.filePath, f.equalityIds.toArray)).toArray
-      val base = GraftInputPartition(t.file.filePath, json, dels, pushedLimit, allColumnar,
-        eqs, eqJson,
-        idBearing = parquetOwn(t.file.filePath, t.file.fileFormat),
-        fileFormat = t.file.fileFormat.toUpperCase,
+    val pairs = tasks.map { t =>
+      (t, reads.partition(t, pushedLimit, allColumnar).copy(
         emitFile = emitFile, emitPos = emitPos,
         emitLineage = emitLineage,
         firstRowId = if (!emitLineage) -1L else t.file.firstRowId.getOrElse(
           throw new IllegalStateException(
             s"${t.file.filePath} has no first_row_id — written before the table became v3? " +
               "Row lineage covers rows committed under format version 3")),
-        dataSeq = t.dataSequenceNumber)
-      (t, base)
-    } match { case pairs =>
-      // key-grouped partitions are packed by Spark itself (same-key splits
-      // land in one task group); everything else is range-split and
-      // bin-packed so a million-file table isn't a million tasks and one
-      // 4 GB file isn't one task
-      grouping match {
-        case Some((_, types)) =>
-          pairs.map { case (t, base) =>
-            val key = t.file.partition.zip(types)
-              .map { case (v, _) => GraftFunctions.internalOf(v) }.toArray
-            new GraftKeyedInputPartition(base, key): InputPartition
-          }.toArray
-        case None =>
-          val target = splitTarget(pairs.map(_._1.file.fileSizeInBytes))
-          binPack(pairs.flatMap { case (t, b) => splitRanges(t, b, target) }, target)
-      }
+        dataSeq = t.dataSequenceNumber))
+    }
+    // key-grouped partitions are packed by Spark itself (same-key splits
+    // land in one task group); everything else is range-split and
+    // bin-packed so a million-file table isn't a million tasks and one
+    // 4 GB file isn't one task
+    grouping match {
+      case Some((_, types)) =>
+        pairs.map { case (t, base) =>
+          val key = t.file.partition.zip(types)
+            .map { case (v, _) => GraftFunctions.internalOf(v) }.toArray
+          new GraftKeyedInputPartition(base, key): InputPartition
+        }.toArray
+      case None =>
+        val target = splitTarget(pairs.map(_._1.file.fileSizeInBytes))
+        binPack(pairs.flatMap { case (t, b) => splitRanges(t, b, target) }, target)
     }
   }
 
@@ -2489,14 +2665,15 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
     val bin = Seq.newBuilder[GraftInputPartition]
     var binW = 0L
     var binN = 0
-    weighted.foreach { case (p, w0) =>
-      val w = w0 + OpenCost
+    // Spark's FilePartition rule: a file joins the bin while the bin's
+    // weight plus the file's bytes fit; every file then adds its open cost
+    weighted.foreach { case (p, w) =>
       if (binN > 0 && binW + w > target) {
         val b = bin.result()
         out += (if (b.sizeIs == 1) b.head else GraftMultiFilePartition(b.toArray))
         bin.clear(); binW = 0L; binN = 0
       }
-      bin += p; binW += w; binN += 1
+      bin += p; binW += w + OpenCost; binN += 1
     }
     if (binN > 0) {
       val b = bin.result()
@@ -2507,6 +2684,9 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(GraftReaderFactory.sessionConfEntries(table.spark))
+
+  override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new GraftBytesReadMetric)
 
   /** Streaming face: micro-batches of committed APPENDS; offsets are
     * snapshot ids (SURVEY §2.J — each micro-batch = one snapshot range,
@@ -2633,24 +2813,12 @@ class GraftMicroBatchStream(table: IceTable, required: StructType,
     val from = start.asInstanceOf[SnapshotOffset].snapshotId
     val to = end.asInstanceOf[SnapshotOffset].snapshotId
     if (to == 0L || from == to) return Array.empty
-    val names = required.fieldNames.toSet
-    val readSchema = Schema(table.schema.fields.filter(f => names.contains(f.name)))
-    val json = MetadataJson.schemaToJson(readSchema).toString
+    val reads = new GraftScan.FileReads(table, GraftScan.prunedTo(table.schema, required),
+      Schema(Nil), Array.empty)
     val files = table.incrementalAppendFiles(from, to)
-    // same format gate as the batch planner: only library-written parquet
-    // may take the vectorized-parquet columnar / id-bearing routes
-    // (fixed16 uuid tables fall back to the Group-API row reader)
-    val uuidFixed16 = table.metadata.properties.get("write.uuid.fixed16").contains("true") &&
-      table.schema.fields.exists(_.fieldType == graft.core.IUUID)
-    def parquetOwn(f: graft.meta.DataFile): Boolean =
-      f.fileFormat.toUpperCase == "PARQUET" && !uuidFixed16 &&
-        graft.core.PathUtil.underDataRoot(table.location, f.filePath)
-    val allColumnar = files.forall(parquetOwn)
+    val allColumnar = reads.vectorizable && files.forall(reads.parquetOwn)
     files
-      .map(f => GraftInputPartition(f.filePath, json, Array.empty[DeleteFileRef], -1L,
-        allColumnar,
-        idBearing = parquetOwn(f),
-        fileFormat = f.fileFormat.toUpperCase)
+      .map(f => reads.partition(graft.table.FileScanTask(f, Nil, BTrue), -1L, allColumnar)
         : InputPartition)
       .toArray
   }
@@ -2689,21 +2857,21 @@ class GraftReaderFactory(confEntries: Array[(String, String)] = Array.empty)
   }
 
   private def singleRowReaderInner(p: GraftInputPartition): PartitionReader[InternalRow] = {
-    // library-written (field-id-bearing) files decode through the
-    // VECTORIZED parquet reader even in row mode — deletes are applied as
-    // per-row position skips / key probes over batch-decoded rows, ~5-10×
-    // faster per byte than the Group-API materialization. Id-less external
-    // files keep the Group reader for its name-fallback resolution; both
-    // emit InternalRow, so they may mix freely within one scan.
+    // parquet decodes through the VECTORIZED reader even in row mode —
+    // deletes are applied as per-row position skips / key probes over
+    // batch-decoded rows, ~5-10× faster per byte than the Group-API
+    // materialization; library-written files resolve by field id,
+    // add_files files by the name mapping. Only library-written files of
+    // write.uuid.fixed16 tables keep the Group reader. All emit
+    // InternalRow, so they may mix freely within one scan.
     if (p.fileFormat == "ORC") {
       // deletes apply regardless of data format (ref io/pyarrow.py:1629):
       // the ORC reader resolves position skips / equality probes with the
       // same executor-side machinery as the parquet readers
       new GraftOrcPartitionReader(p.filePath, p.readSchemaJson, p.limit, buildConf(),
         p.deletes, p.eqDeletes, p.eqSchemaJson)
-    } else if (p.idBearing)
-      new GraftVectorizedRowReader(p.filePath, p.readSchemaJson, p.deletes, p.limit,
-        buildConf(), p.eqDeletes, p.eqSchemaJson, p.splitStart, p.splitLength)
+    } else if (p.idBearing || p.byName)
+      new GraftVectorizedRowReader(p, buildConf())
     else
       new GraftPartitionReader(p.filePath, p.readSchemaJson, p.deletes, p.limit, buildConf(),
         p.eqDeletes, p.eqSchemaJson)
@@ -2726,13 +2894,9 @@ class GraftReaderFactory(confEntries: Array[(String, String)] = Array.empty)
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     unwrap(partition) match {
-      case Seq(one) =>
-        new GraftColumnarReader(one.filePath, one.readSchemaJson, one.limit, buildConf(),
-          one.splitStart, one.splitLength)
+      case Seq(one) => new GraftColumnarReader(one, buildConf())
       case many => new GraftChainedColumnarReader(many,
-        p => new GraftColumnarReader(p.filePath, p.readSchemaJson, p.limit, buildConf(),
-          p.splitStart, p.splitLength),
-        many.head.limit)
+        p => new GraftColumnarReader(p, buildConf()), many.head.limit)
     }
 }
 
@@ -2745,6 +2909,7 @@ class GraftChainedRowReader(parts: Seq[GraftInputPartition],
   private val it = parts.iterator
   private var cur: PartitionReader[InternalRow] = _
   private var emitted = 0L
+  private val metrics = new GraftChainedMetrics
   override def next(): Boolean = {
     if (limit >= 0 && emitted >= limit) return false
     while (true) {
@@ -2753,12 +2918,28 @@ class GraftChainedRowReader(parts: Seq[GraftInputPartition],
         cur = mk(it.next())
       }
       if (cur.next()) { emitted += 1; return true }
-      cur.close(); cur = null
+      metrics.retire(cur); cur.close(); cur = null
     }
     false
   }
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    metrics.current(cur)
   override def get(): InternalRow = cur.get()
   override def close(): Unit = if (cur != null) cur.close()
+}
+
+/** Task metrics of readers run back to back: those of the closed
+  * readers plus the open one's. */
+private[spark] final class GraftChainedMetrics {
+  private var closedBytes = 0L
+  private def bytesOf(r: PartitionReader[_]): Long =
+    if (r == null) 0L
+    else r.currentMetricsValues().filter(_.name() == ParquetVectorized.BytesReadMetric)
+      .map(_.value()).sum
+  def retire(r: PartitionReader[_]): Unit = closedBytes += bytesOf(r)
+  def current(r: PartitionReader[_])
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    ParquetVectorized.bytesRead(closedBytes + bytesOf(r))
 }
 
 /** Columnar twin of [[GraftChainedRowReader]]: per-file vectorized readers
@@ -2770,6 +2951,7 @@ class GraftChainedColumnarReader(parts: Seq[GraftInputPartition],
   private val it = parts.iterator
   private var cur: PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = _
   private var emitted = 0L
+  private val metrics = new GraftChainedMetrics
   override def next(): Boolean = {
     if (limit >= 0 && emitted >= limit) return false
     while (true) {
@@ -2778,10 +2960,12 @@ class GraftChainedColumnarReader(parts: Seq[GraftInputPartition],
         cur = mk(it.next())
       }
       if (cur.next()) return true
-      cur.close(); cur = null
+      metrics.retire(cur); cur.close(); cur = null
     }
     false
   }
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    metrics.current(cur)
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
     val batch = cur.get()
     if (limit >= 0 && emitted + batch.numRows() > limit)
@@ -2793,41 +2977,306 @@ class GraftChainedColumnarReader(parts: Seq[GraftInputPartition],
 }
 
 object ParquetVectorized {
-  /** Open Spark's VectorizedParquetRecordReader against one file with the
-    * engine schema — field-id metadata included — as the requested Spark
-    * schema (the conf keys ParquetReadSupport consults are normally
-    * installed by ParquetFileFormat.buildReaderWithPartitionValues).
-    * `rowMode = true` skips enableReturningBatches: getCurrentValue then
-    * yields InternalRow views over the decoded batch — vectorized decode
-    * with row-granular consumption, the same fallback shape Spark's own
-    * parquet path uses when batch output is off. */
-  def open(path: String, sparkSchema: StructType, conf: Configuration,
-      rowMode: Boolean, splitStart: Long = 0L, splitLength: Long = Long.MaxValue)
+  /** Spark's temporary row-index column: requested after the data
+    * columns, the decoder fills it with every row's position in the file
+    * (ParquetRowIndexUtil) — exact even when row groups are skipped. */
+  val RowIndexColumn: String =
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      .ROW_INDEX_TEMPORARY_COLUMN_NAME
+
+  /** Task-metric name of the parquet bytes a scan's readers read. */
+  val BytesReadMetric = "parquetBytesRead"
+
+  def bytesRead(n: Long): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+      override def name(): String = BytesReadMetric
+      override def value(): Long = n
+    })
+}
+
+/** The sum over tasks of the parquet bytes (footers, dictionaries, pages)
+  * a scan's readers read — what row-group pruning saves. */
+class GraftBytesReadMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = ParquetVectorized.BytesReadMetric
+  override def description(): String = "parquet bytes read"
+}
+
+/** One parquet data file, opened once: its footer (the row groups of the
+  * split's byte range) is read through the same byte-counting stream the
+  * decoder then reads dictionaries and pages from. */
+final class ParquetFile(path: String, conf: Configuration,
+    splitStart: Long = 0L, splitLength: Long = Long.MaxValue) {
+  private val input = HadoopInputFile.fromPath(new Path(path), conf)
+  private var counted = 0L
+  def bytesRead: Long = counted
+
+  private val inner = input.newStream()
+  private val stream = new org.apache.parquet.io.SeekableInputStream {
+    private def add(n: Long): Unit = if (n > 0) counted += n
+    override def getPos: Long = inner.getPos
+    override def seek(p: Long): Unit = inner.seek(p)
+    override def read(): Int = { val b = inner.read(); if (b >= 0) add(1); b }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      val n = inner.read(b, off, len); add(n); n
+    }
+    override def readFully(b: Array[Byte]): Unit = { inner.readFully(b); add(b.length) }
+    override def readFully(b: Array[Byte], off: Int, len: Int): Unit = {
+      inner.readFully(b, off, len); add(len)
+    }
+    override def read(buf: java.nio.ByteBuffer): Int = { val n = inner.read(buf); add(n); n }
+    override def readFully(buf: java.nio.ByteBuffer): Unit = {
+      val n = buf.remaining(); inner.readFully(buf); add(n)
+    }
+    override def skip(n: Long): Long = inner.skip(n)
+    override def available(): Int = inner.available()
+    override def close(): Unit = inner.close()
+  }
+
+  val footer: org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val b = org.apache.parquet.HadoopReadOptions.builder(conf, new Path(path))
+    val opts = (if (splitLength == Long.MaxValue) b
+      else b.withRange(splitStart, splitStart + splitLength)).build()
+    ParquetFileReader.readFooter(input, opts, stream)
+  }
+
+  def schema: MessageType = footer.getFileMetaData.getSchema
+
+  /** Spark's VectorizedParquetRecordReader over this file with the engine
+    * schema — field-id metadata included — as the requested Spark schema
+    * (the conf keys ParquetReadSupport consults are normally installed by
+    * ParquetFileFormat.buildReaderWithPartitionValues). `rowMode = true`
+    * skips enableReturningBatches: getCurrentValue then yields InternalRow
+    * views over the decoded batch — vectorized decode with row-granular
+    * consumption, the same fallback shape Spark's own parquet path uses
+    * when batch output is off. `byName` resolves columns by
+    * (case-insensitive) name instead of field id; `filter` skips the row
+    * groups whose statistics or dictionaries cannot match. */
+  def open(sparkSchema: StructType, rowMode: Boolean, byName: Boolean,
+      filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate])
       : org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader = {
     conf.set("parquet.read.support.class",
       "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
     conf.set("org.apache.spark.sql.parquet.row.requested_schema", sparkSchema.json)
     conf.set("spark.sql.session.timeZone", "UTC")
-    conf.setBoolean("spark.sql.caseSensitive", true)
+    conf.setBoolean("spark.sql.caseSensitive", !byName)
     conf.setBoolean("spark.sql.parquet.binaryAsString", false)
     conf.setBoolean("spark.sql.parquet.int96AsTimestamp", true)
-    conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", true)
+    conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", !byName)
     conf.setBoolean("spark.sql.parquet.fieldId.read.ignoreMissing", true)
-    conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
+    // ns timestamps are requested as LONG and downcast after decode
+    conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", true)
     conf.setBoolean("spark.sql.parquet.inferTimestampNTZ.enabled", true)
+    filter.foreach { f =>
+      org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(conf, f)
+      // whole row groups only: page-level skipping inside a kept row
+      // group is left off, so sequential row counts stay file positions
+      conf.setBoolean(org.apache.parquet.hadoop.ParquetInputFormat.COLUMN_INDEX_FILTERING_ENABLED,
+        false)
+    }
     val r = new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC", /*offHeap*/ false, /*capacity*/ 4096)
-    // the base reader casts to the old-API split class; a bounded range
-    // selects the row groups whose midpoint falls inside (parquet's
-    // split-assignment rule), enabling sub-file task splitting
+    // the footer above already holds only the split's row groups (parquet's
+    // midpoint rule), enabling sub-file task splitting
     val split = new org.apache.hadoop.mapred.FileSplit(
       new Path(path), splitStart, splitLength, Array.empty[String])
     val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
       conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
-    r.initialize(split, ctx)
+    r.initialize(split, ctx, Some(input), Some(stream), Some(footer))
     r.initBatch(new StructType(), InternalRow.empty)
     if (!rowMode) r.enableReturningBatches()
     r
+  }
+}
+
+/** Pushed filters as ONE file's parquet row-group predicate. Each filter
+  * column is renamed to the file's own column (by field id for
+  * library-written files, by the name mapping for the rest), so a renamed
+  * or re-used name never prunes against the wrong column; a filter over a
+  * column the file lacks is left out. Under a NOT only exact translations
+  * are kept (dropping a conjunct there would strengthen the predicate). */
+private[spark] object RowGroupFilter {
+  import org.apache.spark.sql.sources._
+
+  def of(fileSchema: MessageType, filters: Array[Filter], fileName: String => Option[String])
+      : Option[org.apache.parquet.filter2.predicate.FilterPredicate] = {
+    val renamed = filters.flatMap(rename(_, fileName, weaken = true))
+    if (renamed.isEmpty) None
+    else {
+      val pf = new org.apache.spark.sql.execution.datasources.parquet.ParquetFilters(
+        fileSchema, true, true, true, true, 10, true,
+        org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec(
+          org.apache.spark.sql.internal.LegacyBehaviorPolicy.CORRECTED))
+      renamed.toSeq.flatMap(pf.createFilter)
+        .reduceOption(org.apache.parquet.filter2.predicate.FilterApi.and(_, _))
+    }
+  }
+
+  private def rename(f: Filter, n: String => Option[String], weaken: Boolean): Option[Filter] =
+    f match {
+      case EqualTo(a, v) => n(a).map(EqualTo(_, v))
+      case EqualNullSafe(a, v) => n(a).map(EqualNullSafe(_, v))
+      case GreaterThan(a, v) => n(a).map(GreaterThan(_, v))
+      case GreaterThanOrEqual(a, v) => n(a).map(GreaterThanOrEqual(_, v))
+      case LessThan(a, v) => n(a).map(LessThan(_, v))
+      case LessThanOrEqual(a, v) => n(a).map(LessThanOrEqual(_, v))
+      case In(a, vs) => n(a).map(In(_, vs))
+      case IsNull(a) => n(a).map(IsNull(_))
+      case IsNotNull(a) => n(a).map(IsNotNull(_))
+      case StringStartsWith(a, v) => n(a).map(StringStartsWith(_, v))
+      case And(l, r) => (rename(l, n, weaken), rename(r, n, weaken)) match {
+        case (Some(a), Some(b)) => Some(And(a, b))
+        case (a, b) if weaken => a.orElse(b)
+        case _ => None
+      }
+      case Or(l, r) => for (a <- rename(l, n, weaken); b <- rename(r, n, weaken)) yield Or(a, b)
+      case Not(c) => rename(c, n, weaken = false).map(Not(_))
+      case _ => None
+    }
+}
+
+/** One parquet file's physical request and the rewrite of its decoded
+  * rows to the engine schema's public shape: uuid leaves are requested as
+  * BINARY (fixed[16] from other engines and our string-stored uuids
+  * alike) and rendered as canonical strings; ns timestamps are requested
+  * as LONG and floor-divided to micros (ref io/pyarrow.py:1654); v3
+  * `unknown` columns are never stored and read as NULL (ref
+  * io/pyarrow.py:818); a top-level column the file lacks reads its
+  * initial default (ref ArrowProjectionVisitor). */
+private[spark] final class ParquetShape(footer: MessageType, val schema: Schema,
+    byName: Boolean, filters: Array[sources.Filter], filterIds: Map[String, Int]) {
+
+  /** the file's own top-level column for a top-level field id */
+  private def fileName(id: Int): Option[String] =
+    if (byName) schema.fields.find(_.id == id).flatMap(f =>
+      footer.getFields.asScala.find(_.getName.equalsIgnoreCase(f.name)).map(_.getName))
+    else footer.getFields.asScala
+      .find(ft => ft.getId != null && ft.getId.intValue() == id).map(_.getName)
+
+  val predicate: Option[org.apache.parquet.filter2.predicate.FilterPredicate] =
+    if (filters.isEmpty) None
+    else RowGroupFilter.of(footer, filters, a => filterIds.get(a).flatMap(fileName))
+
+  /** stored columns, in request order (`unknown` is never stored) */
+  val physical: Seq[NestedField] = schema.fields.filter(_.fieldType != IUnknown)
+
+  def request(extra: Seq[NestedField], rowIndex: Boolean): StructType =
+    StructType(UuidCompat.readSchema(Schema(physical ++ extra)).fields ++
+      (if (rowIndex) Seq(StructField(ParquetVectorized.RowIndexColumn, LongType)) else Nil))
+
+  private val defaults: Map[Int, Any] = schema.fields.zipWithIndex.collect {
+    case (f, i) if f.initialDefault.isDefined && fileName(f.id).isEmpty =>
+      i -> (Literals.coerce(f.initialDefault.get, f.fieldType) match {
+        case CVal(v) => ParquetShape.internal(v, f.fieldType)
+        case _ => null
+      })
+  }.toMap
+
+  private val fixes: Array[Any => Any] =
+    physical.map(f => ParquetShape.fixOf(f.fieldType).orNull).toArray
+  private val physTypes: Array[DataType] =
+    physical.map(f => UuidCompat.readType(f.fieldType)).toArray
+
+  /** decoded rows already have the public shape */
+  val identity: Boolean = physical.size == schema.fields.size && defaults.isEmpty &&
+    fixes.forall(_ == null)
+
+  /** public row from a decoded row (data columns lead, extras trail) */
+  def apply(row: InternalRow): InternalRow = {
+    val out = new GenericInternalRow(schema.fields.size)
+    var i = 0
+    var p = 0
+    while (i < schema.fields.size) {
+      if (schema.fields(i).fieldType != IUnknown) {
+        if (defaults.contains(i)) out.update(i, defaults(i))
+        else if (!row.isNullAt(p)) {
+          val v = row.get(p, physTypes(p))
+          out.update(i, if (fixes(p) == null) v else fixes(p)(v))
+        }
+        p += 1
+      }
+      i += 1
+    }
+    out
+  }
+}
+
+private[graft] object ParquetShape {
+  import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
+
+  private val Hex = "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  /** 16 bytes (a fixed[16] uuid) → canonical 8-4-4-4-12 lowercase hex;
+    * anything else is already UTF-8 text (a string-stored uuid). */
+  private def uuidText(b: Array[Byte]): UTF8String =
+    if (b.length != 16) UTF8String.fromBytes(b)
+    else {
+      val out = new Array[Byte](36)
+      var i = 0
+      var j = 0
+      while (i < 16) {
+        if (i == 4 || i == 6 || i == 8 || i == 10) { out(j) = '-'; j += 1 }
+        out(j) = Hex((b(i) >> 4) & 0xf)
+        out(j + 1) = Hex(b(i) & 0xf)
+        j += 2
+        i += 1
+      }
+      UTF8String.fromBytes(out)
+    }
+
+  /** decoded (physical) value → public value; None = unchanged */
+  def fixOf(t: IceType): Option[Any => Any] = t match {
+    case IUUID => Some(v => uuidText(v.asInstanceOf[Array[Byte]]))
+    case ITimestampNs | ITimestamptzNs => Some(v => Math.floorDiv(v.asInstanceOf[Long], 1000L))
+    case IStruct(fs) =>
+      val subs = fs.map(f => fixOf(f.fieldType).orNull).toArray
+      val types = fs.map(f => UuidCompat.readType(f.fieldType)).toArray
+      if (subs.forall(_ == null)) None
+      else Some { v =>
+        val r = v.asInstanceOf[InternalRow]
+        val out = new GenericInternalRow(subs.length)
+        subs.indices.foreach { i =>
+          if (!r.isNullAt(i)) {
+            val x = r.get(i, types(i))
+            out.update(i, if (subs(i) == null) x else subs(i)(x))
+          }
+        }
+        out
+      }
+    case IList(_, el, _) => fixOf(el).map { f =>
+      val et = UuidCompat.readType(el)
+      v => elements(v.asInstanceOf[ArrayData], et, f)
+    }
+    case IMap(_, k, _, vt, _) =>
+      val (fk, fv) = (fixOf(k), fixOf(vt))
+      if (fk.isEmpty && fv.isEmpty) None
+      else {
+        val (kt, vdt) = (UuidCompat.readType(k), UuidCompat.readType(vt))
+        val id: Any => Any = x => x
+        Some { v =>
+          val m = v.asInstanceOf[MapData]
+          new ArrayBasedMapData(elements(m.keyArray(), kt, fk.getOrElse(id)),
+            elements(m.valueArray(), vdt, fv.getOrElse(id)))
+        }
+      }
+    case _ => None
+  }
+
+  private def elements(a: ArrayData, t: DataType, f: Any => Any): ArrayData =
+    new GenericArrayData(Array.tabulate[Any](a.numElements())(i =>
+      if (a.isNullAt(i)) null else f(a.get(i, t))))
+
+  /** engine literal value → Spark internal value */
+  def internal(v: Any, t: IceType): Any = (v, t) match {
+    case (null, _) => null
+    case (n: Number, IInt | IDate) => n.intValue()
+    case (n: Number, ILong | ITime | ITimestamp | ITimestamptz) => n.longValue()
+    case (n: Number, IFloat) => n.floatValue()
+    case (n: Number, IDouble) => n.doubleValue()
+    case (d: java.math.BigDecimal, IDecimal(p, s)) => Decimal(d, p, s)
+    case (s: String, _) => UTF8String.fromString(s)
+    case (u: java.util.UUID, _) => UTF8String.fromString(u.toString)
+    case (other, _) => other
   }
 }
 
@@ -2835,27 +3284,31 @@ object ParquetVectorized {
   * VectorizedParquetRecordReader (the engine behind FileSourceScanExec's
   * parquet batches) against one data file, with the engine schema —
   * field-id metadata included — as the requested Spark schema, so rename
-  * safety and add-column null-fill match the row reader. */
-class GraftColumnarReader(path: String, schemaJson: String, limit: Long = -1L,
-    conf: Configuration = new Configuration(),
-    splitStart: Long = 0L, splitLength: Long = Long.MaxValue)
+  * safety and add-column null-fill match the row reader. Only scans whose
+  * columns need no per-row rewrite come here (FileReads.vectorizable). */
+class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  private val schema: Schema = MetadataJson.schemaFromJson(mapper.readTree(schemaJson))
+  private val file = new ParquetFile(p.filePath, conf, p.splitStart, p.splitLength)
+  private val shape = new ParquetShape(file.schema,
+    MetadataJson.schemaFromJson(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(p.readSchemaJson)), p.byName, p.filters, p.filterIds)
 
-  private val reader = ParquetVectorized.open(path, schema.toSpark, conf, rowMode = false,
-    splitStart, splitLength)
+  private val reader = file.open(shape.request(Nil, rowIndex = false), rowMode = false,
+    p.byName, shape.predicate)
+
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    ParquetVectorized.bytesRead(file.bytesRead)
 
   private var emitted: Long = 0L
 
   override def next(): Boolean =
-    (limit < 0 || emitted < limit) && reader.nextBatch()
+    (p.limit < 0 || emitted < p.limit) && reader.nextBatch()
 
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
     val batch = reader.resultBatch()
-    if (limit >= 0 && emitted + batch.numRows() > limit)
-      batch.setNumRows((limit - emitted).toInt)
+    if (p.limit >= 0 && emitted + batch.numRows() > p.limit)
+      batch.setNumRows((p.limit - emitted).toInt)
     emitted += batch.numRows()
     batch
   }
@@ -2869,9 +3322,10 @@ class GraftColumnarReader(path: String, schemaJson: String, limit: Long = -1L,
   * v3 deletion-vector blobs) AND equality deletes are resolved HERE, in
   * the executor task — positions as a sorted row-index skip, equality keys
   * as a per-file hash-set probe (the planner only ships a delete with data
-  * files it applies to, so sequence scoping is already done). This Group
-  * reader is the FALLBACK for id-less external files (name resolution);
-  * library-written files use GraftVectorizedRowReader below. */
+  * files it applies to, so sequence scoping is already done). The Group
+  * reader serves the library-written files of write.uuid.fixed16 tables;
+  * every other parquet file reads through GraftVectorizedRowReader below.
+  * Its companion holds the delete resolution all readers share. */
 object GraftPartitionReader {
   /** Per-JVM cache of equality-delete key sets, keyed by (immutable delete
     * file path, equality ids). Soft values: reclaimable under pressure. */
@@ -3082,6 +3536,9 @@ class GraftFileAppendReader(inner: PartitionReader[InternalRow],
     out
   }
 
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    inner.currentMetricsValues()
+
   override def close(): Unit = inner.close()
 }
 
@@ -3221,72 +3678,82 @@ object GraftVectorizedRowReader {
   val opened = new java.util.concurrent.atomic.AtomicLong(0L)
 }
 
-/** MoR row reader over Spark's VECTORIZED parquet decoder: the file is
-  * library-written (field-id-bearing), so the id-keyed vectorized reader
-  * is safe, and deletes are applied per row against batch-decoded rows —
-  * a sorted position skip on the sequential row index plus equality
-  * hash-set probes (VERDICT r5 W3: the Group-API row loop was ~5-10×
-  * slower per byte than this path). Emits InternalRow, so it mixes freely
-  * with the Group-API reader (used for id-less external files) in one
-  * row-mode scan. */
-class GraftVectorizedRowReader(path: String, schemaJson: String,
-    deletes: Array[DeleteFileRef] = Array.empty, limit: Long = -1L,
-    conf: Configuration = new Configuration(),
-    eqDeletes: Array[EqDeleteRef] = Array.empty, eqSchemaJson: String = "",
-    splitStart: Long = 0L, splitLength: Long = Long.MaxValue)
+/** Row reader over Spark's VECTORIZED parquet decoder, for every parquet
+  * file but the fixed16-uuid library files: field ids resolve
+  * library-written files, the name mapping resolves add_files files.
+  * Deletes are applied per row against batch-decoded rows — a sorted
+  * position skip plus equality hash-set probes (VERDICT r5 W3: the
+  * Group-API row loop was ~5-10× slower per byte than this path). Row
+  * positions are counted sequentially, or — when a pushed filter may skip
+  * row groups — taken from Spark's row-index column. Emits InternalRow,
+  * so it mixes freely with the other row readers in one row-mode scan. */
+class GraftVectorizedRowReader(p: GraftInputPartition, conf: Configuration)
     extends PartitionReader[InternalRow] with HasRowPosition {
 
   // a bounded split is only planned for DELETE-FREE files: the
-  // position-delete skip below indexes the sequential whole-file row
-  // position, which a ranged read would misalign
-  require((splitStart == 0L && splitLength == Long.MaxValue) || deletes.isEmpty,
+  // position-delete skip below indexes the whole-file row position
+  require((p.splitStart == 0L && p.splitLength == Long.MaxValue) || p.deletes.isEmpty,
     "ranged reads cannot carry position deletes")
 
   GraftVectorizedRowReader.opened.incrementAndGet()
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  private val schema: Schema = MetadataJson.schemaFromJson(mapper.readTree(schemaJson))
+  private val file = new ParquetFile(p.filePath, conf, p.splitStart, p.splitLength)
+  private val shape = new ParquetShape(file.schema,
+    MetadataJson.schemaFromJson(mapper.readTree(p.readSchemaJson)), p.byName,
+    p.filters, p.filterIds)
+  private val schema: Schema = shape.schema
   private val eqSchema: Schema =
-    if (eqDeletes.isEmpty) Schema(Nil)
-    else MetadataJson.schemaFromJson(mapper.readTree(eqSchemaJson))
+    if (p.eqDeletes.isEmpty) Schema(Nil)
+    else MetadataJson.schemaFromJson(mapper.readTree(p.eqSchemaJson))
 
   // equality-delete key fields outside the pruned projection are APPENDED
   // to the read schema (read to probe, projected away before emitting);
   // only ids THIS partition's deletes reference — eqSchemaJson is
   // scan-global and may cover other files' keys
-  private val baseIds = schema.fields.map(_.id).toSet
-  private val neededEqIds = eqDeletes.flatMap(_.ids).toSet
+  private val baseIds = shape.physical.map(_.id).toSet
+  private val neededEqIds = p.eqDeletes.flatMap(_.ids).toSet
   private val extraEqFields =
     eqSchema.fields.filter(f => neededEqIds.contains(f.id) && !baseIds.contains(f.id))
-  private val readFields = schema.fields ++ extraEqFields
-  private val readSparkSchema: StructType = Schema(readFields).toSpark
+  private val readFields = shape.physical ++ extraEqFields
   private val ordinalById: Map[Int, Int] =
     readFields.zipWithIndex.map { case (f, i) => f.id -> i }.toMap
 
   private val deletedPositions: Array[Long] =
-    GraftPartitionReader.resolvePositions(path, deletes, conf)
+    GraftPartitionReader.resolvePositions(p.filePath, p.deletes, conf)
 
   private val eqKeySets: Seq[(Array[Int], java.util.HashSet[Seq[Any]])] =
-    GraftPartitionReader.eqKeySetsOf(eqDeletes, eqSchema, conf)
+    GraftPartitionReader.eqKeySetsOf(p.eqDeletes, eqSchema, conf)
 
-  private val reader = ParquetVectorized.open(path, readSparkSchema, conf, rowMode = true,
-    splitStart, splitLength)
+  // positions matter for deletes and the _pos / lineage columns; once a
+  // filter may skip row groups, counting rows no longer yields them
+  private val rowIndexOrd: Int =
+    if (shape.predicate.isDefined && (deletedPositions.nonEmpty || p.emitPos || p.emitLineage))
+      readFields.size
+    else -1
 
-  /** Strips appended eq-key columns before emitting. Codegen'd unsafe
-    * projection over the leading |schema| ordinals; identity when the keys
-    * were already in the projection. */
+  private val readSparkSchema: StructType = shape.request(extraEqFields, rowIndexOrd >= 0)
+
+  private val reader = file.open(readSparkSchema, rowMode = true, p.byName, shape.predicate)
+
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    ParquetVectorized.bytesRead(file.bytesRead)
+
+  /** Strips appended eq-key / row-index columns before emitting.
+    * Codegen'd unsafe projection over the leading ordinals; identity when
+    * nothing was appended. */
   private val emitProjection: org.apache.spark.sql.catalyst.expressions.UnsafeProjection =
-    if (extraEqFields.isEmpty) null
+    if (!shape.identity || readSparkSchema.size == shape.physical.size) null
     else org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
-      schema.fields.indices.map { i =>
+      shape.physical.indices.map { i =>
         org.apache.spark.sql.catalyst.expressions.BoundReference(
           i, readSparkSchema.fields(i).dataType, readSparkSchema.fields(i).nullable)
       })
 
   /** Plain JVM key tuple from a decoded row — same value forms as the
     * delete-file side (GraftPartitionReader.convertPlain), so tuple
-    * equality is exact. Library-written files store uuid canonically as
-    * strings, so IUUID reads as a string column here. */
+    * equality is exact. uuid leaves decode as binary and compare as their
+    * canonical strings. */
   private def plainValue(row: InternalRow, ord: Int, t: IceType): Any = {
     if (row.isNullAt(ord)) return null
     t match {
@@ -3295,7 +3762,8 @@ class GraftVectorizedRowReader(path: String, schemaJson: String,
       case ILong | ITime | ITimestamp | ITimestamptz => row.getLong(ord)
       case IFloat => row.getFloat(ord)
       case IDouble => row.getDouble(ord)
-      case IString | IUUID => row.getUTF8String(ord).toString
+      case IString => row.getUTF8String(ord).toString
+      case IUUID => ParquetShape.fixOf(IUUID).get(row.getBinary(ord)).toString
       case IBinary | IFixed(_) => row.getBinary(ord).toSeq
       case IDecimal(p, s) => row.getDecimal(ord, p, s).toJavaBigDecimal
       case other => throw new UnsupportedOperationException(s"DSv2 eq-delete key: $other")
@@ -3319,26 +3787,25 @@ class GraftVectorizedRowReader(path: String, schemaJson: String,
   override def currentPosition: Long = rowIdx
 
   override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    // whole-file read with no parquet-level skips → the sequential row
-    // count IS the file row position the deletes index
+    if (p.limit >= 0 && emitted >= p.limit) return false
     while (reader.nextKeyValue()) {
-      rowIdx += 1
+      val row = reader.getCurrentValue.asInstanceOf[InternalRow]
+      rowIdx = if (rowIndexOrd >= 0) row.getLong(rowIndexOrd) else rowIdx + 1
       while (delPtr < deletedPositions.length && deletedPositions(delPtr) < rowIdx) delPtr += 1
-      if (delPtr >= deletedPositions.length || deletedPositions(delPtr) != rowIdx) {
-        val row = reader.getCurrentValue.asInstanceOf[InternalRow]
-        if (!isEqDeleted(row)) {
-          current = row
-          emitted += 1
-          return true
-        }
+      if ((delPtr >= deletedPositions.length || deletedPositions(delPtr) != rowIdx) &&
+          !isEqDeleted(row)) {
+        current = row
+        emitted += 1
+        return true
       }
     }
     false
   }
 
   override def get(): InternalRow =
-    if (emitProjection == null) current else emitProjection(current)
+    if (!shape.identity) shape(current)
+    else if (emitProjection == null) current
+    else emitProjection(current)
 
   override def close(): Unit = reader.close()
 }

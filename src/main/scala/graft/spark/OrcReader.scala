@@ -16,7 +16,8 @@ import graft.meta.MetadataJson
 /** DSv2 row reader for ORC data files (the reference reads ORC:
   * io/pyarrow.py:1119–1125). Resolution mirrors the parquet Group-API
   * fallback: `iceberg.id` type attributes first (ORC_FIELD_ID_KEY
-  * io/pyarrow.py:740), then top-level name; unresolved fields null-fill.
+  * io/pyarrow.py:740), then the (name-mapped) name, at every nesting
+  * level of structs, lists and maps; unresolved fields null-fill.
   * Decoding drives ORC's own vectorized RecordReader with a column
   * `include` mask (only requested columns are decompressed) and walks the
   * VectorizedRowBatch row-wise into InternalRow — the same
@@ -57,16 +58,22 @@ class GraftOrcPartitionReader(path: String, schemaJson: String, limit: Long = -1
     GraftPartitionReader.resolvePositions(path, deletes, conf)
 
   /** (output index, root-child column index or None, type). */
-  private case class FieldPlan(outIdx: Int, colIdx: Option[Int], t: IceType)
+  private case class FieldPlan(outIdx: Int, colIdx: Option[Int], t: IceType) {
+    val read: (ColumnVector, Int) => Any =
+      colIdx.map(c => converter(fileSchema.getChildren.get(c), t)).orNull
+  }
 
   private def idOf(td: TypeDescription): Option[Int] =
     Option(td.getAttributeValue("iceberg.id"))
       .flatMap(v => scala.util.Try(v.toInt).toOption)
 
   /** id-first, name-fallback: root-child column index for an engine field. */
-  private def resolveCol(id: Int, name: String): Option[Int] = {
-    val names = fileSchema.getFieldNames
-    val children = fileSchema.getChildren
+  private def resolveCol(id: Int, name: String): Option[Int] = childOf(fileSchema, id, name)
+
+  /** id-first, name-fallback: index of a struct's child for an engine field. */
+  private def childOf(struct: TypeDescription, id: Int, name: String): Option[Int] = {
+    val names = struct.getFieldNames
+    val children = struct.getChildren
     var hit = -1
     var nameHit = -1
     var c = 0
@@ -144,21 +151,65 @@ class GraftOrcPartitionReader(path: String, schemaJson: String, limit: Long = -1
   }
 
   override def get(): InternalRow = {
-    // `emitPos` appends the absolute file position as a trailing long —
-    // the position-delete writers need (file, pos) tuples for ORC files,
-    // which Spark's ORC source cannot supply (no _metadata.row_index)
+    // `emitPos` appends the absolute file position as a trailing long
     val row = new GenericInternalRow(plans.size + (if (emitPos) 1 else 0))
     val r = batchPos
     plans.foreach { p =>
       p.colIdx match {
         case None => row.update(p.outIdx, null)
-        case Some(c) => row.update(p.outIdx, convert(batch.cols(c), r, p.t))
+        case Some(c) => row.update(p.outIdx, p.read(batch.cols(c), r))
       }
     }
     if (emitPos) row.update(plans.size, rowBase + batchPos)
     batchPos += 1
     emitted += 1
     row
+  }
+
+  /** Reader of one column: nested structs, lists and maps resolve their
+    * children by id, then by (name-mapped) name, at every level. */
+  private def converter(td: TypeDescription, t: IceType): (ColumnVector, Int) => Any = {
+    import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+    def at(v: ColumnVector, r: Int): Int = if (v.isRepeating) 0 else r
+    def isNull(v: ColumnVector, i: Int): Boolean = !v.noNulls && v.isNull(i)
+    (td.getCategory, t) match {
+      case (TypeDescription.Category.STRUCT, IStruct(fs)) =>
+        val kids = fs.map(f => childOf(td, f.id, f.name)
+          .map(c => (c, converter(td.getChildren.get(c), f.fieldType)))).toArray
+        (v, r) => {
+          val sv = v.asInstanceOf[StructColumnVector]
+          val i = at(sv, r)
+          if (isNull(sv, i)) null
+          else new GenericInternalRow(kids.map {
+            case Some((c, read)) => read(sv.fields(c), i)
+            case None => null
+          })
+        }
+      case (TypeDescription.Category.LIST, IList(_, el, _)) =>
+        val read = converter(td.getChildren.get(0), el)
+        (v, r) => {
+          val lv = v.asInstanceOf[ListColumnVector]
+          val i = at(lv, r)
+          if (isNull(lv, i)) null
+          else new GenericArrayData(Array.tabulate[Any](lv.lengths(i).toInt)(k =>
+            read(lv.child, lv.offsets(i).toInt + k)))
+        }
+      case (TypeDescription.Category.MAP, IMap(_, kt, _, vt, _)) =>
+        val (readK, readV) =
+          (converter(td.getChildren.get(0), kt), converter(td.getChildren.get(1), vt))
+        (v, r) => {
+          val mv = v.asInstanceOf[MapColumnVector]
+          val i = at(mv, r)
+          if (isNull(mv, i)) null
+          else {
+            val (off, len) = (mv.offsets(i).toInt, mv.lengths(i).toInt)
+            new ArrayBasedMapData(
+              new GenericArrayData(Array.tabulate[Any](len)(k => readK(mv.keys, off + k))),
+              new GenericArrayData(Array.tabulate[Any](len)(k => readV(mv.values, off + k))))
+          }
+        }
+      case _ => (v, r) => convert(v, r, t)
+    }
   }
 
   private def convert(v: ColumnVector, r: Int, t: IceType): Any = {

@@ -49,13 +49,14 @@ object TableChanges {
     *
     *  - data files ADDED by the commit → their rows as inserts;
     *  - data files REMOVED by the commit (copy-on-write delete/
-    *    overwrite/upsert) → their rows as deletes;
+    *    overwrite/upsert) → their rows live at the parent snapshot (the
+    *    parent's deletes applied) as deletes;
     *  - carry-overs cancelled: a CoW rewrite re-writes surviving rows
     *    into new files, so per-commit `delete ∩ insert` multiset overlap
     *    is removed (exceptAll both ways) leaving only true changes;
     *  - position-delete files / DVs ADDED by the commit → the referenced
-    *    data rows (joined back by (file, row-position) through the
-    *    `_metadata` columns) as deletes;
+    *    data rows live at the parent (joined back by (file, row-position))
+    *    as deletes;
     *  - equality-delete files ADDED → parent-visible rows matching the
     *    key set as deletes;
     *  - 'replace' commits (compaction, manifest rewrite) → no logical
@@ -68,11 +69,9 @@ object TableChanges {
     * commit's own new manifests plus whatever it dropped from the
     * parent's list, cache-served) — a steady-state stream's per-trigger
     * metadata cost is proportional to each commit's churn, never the
-    * table's live file count. Positions written
-    * over already-masked rows (impossible through this library's
-    * writers, which plan deletes against visible rows) would be
-    * re-reported; foreign writers stacking deletes on dead positions are
-    * out of scope. */
+    * table's live file count. Reading removed and masked rows at the
+    * parent means a row masked by an earlier delete is never reported
+    * twice, even when a later delete or DV restates its position. */
   def changelog(table: IceTable, fromIdExclusive: Option[Long] = None,
       toIdInclusive: Option[Long] = None,
       changeFilter: Option[graft.core.Expr] = None): DataFrame = {
@@ -125,28 +124,26 @@ object TableChanges {
     }
     if (range.isEmpty) return emptyOut
 
-    // cloned session: field-id projection confs stay scoped to these scans
-    val rs = org.apache.spark.sql.GraftBridge.cloneSession(spark)
-    rs.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    rs.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
-    // data files can be ORC (add_files-registered) as well as parquet:
-    // route each format through its reader and union — the reference
-    // applies change reads irrespective of data format (io/pyarrow.py:1629)
-    val mapping = table.nameMappingNested
-    // formats accumulate across the walked range so readData can route
-    // any path this changelog touches
-    var fmtOf: Map[String, String] = Map.empty
-    def orcFrame(paths: Seq[String], keepFilePos: Boolean): DataFrame =
-      graft.table.OrcScanBridge.frame(rs, mapping, schemaAt, graft.core.Schema(Nil),
-        paths.map(p => (p,
-          Array.empty[graft.spark.DeleteFileRef], Array.empty[graft.spark.EqDeleteRef])),
+    // every data-file read runs on the table's one executor (ORC and
+    // name-mapped files included — the reference applies change reads
+    // irrespective of data format, io/pyarrow.py:1629)
+    def read(tasks: Seq[graft.table.FileScanTask], keepFilePos: Boolean): DataFrame =
+      graft.table.IceScan.read(table, tasks, schemaAt,
         keepFile = keepFilePos, keepPos = keepFilePos)
-    def readData(paths: Seq[String]): DataFrame = {
-      val (orc, parq) = paths.partition(p => fmtOf.get(p).exists(_.equalsIgnoreCase("ORC")))
-      val parts = Seq.newBuilder[DataFrame]
-      if (parq.nonEmpty) parts += rs.read.schema(schemaAt.toSpark).parquet(parq: _*)
-      if (orc.nonEmpty) parts += orcFrame(orc, keepFilePos = false)
-      parts.result().reduce(_ unionByName _)
+    def fresh(files: Seq[graft.meta.DataFile]): Seq[graft.table.FileScanTask] =
+      files.map(graft.table.FileScanTask(_, Nil, graft.core.BTrue))
+    /** The PARENT's live tasks for `paths` — its deletes applied, so a row
+      * an earlier merge-on-read delete masked is not read back as a
+      * change of s. A path s itself added reads delete-free. */
+    val planAt = scala.collection.mutable.Map.empty[Long, Seq[graft.table.FileScanTask]]
+    def parentTasks(s: graft.meta.Snapshot, paths: Seq[String],
+        addedBy: Map[String, graft.meta.DataFile]): Seq[graft.table.FileScanTask] = {
+      val want = paths.toSet
+      val live = s.parentSnapshotId.toSeq
+        .flatMap(pid => planAt.getOrElseUpdate(pid, table.planTasksAt(pid)))
+        .filter(t => want.contains(PathUtil.canon(t.file.filePath)))
+      val found = live.map(t => PathUtil.canon(t.file.filePath)).toSet
+      live ++ fresh(paths.filterNot(found).flatMap(addedBy.get))
     }
 
     /** Data manifests of snapshot s (descriptors; cache-served). */
@@ -154,30 +151,6 @@ object TableChanges {
       ManifestIO.readManifestList(s.manifestList).filter(_.content == 0)
     def entriesOf(mf: graft.meta.ManifestFile): Seq[graft.meta.ManifestEntry] =
       ManifestIO.readManifest(mf.manifestPath, m.specById(mf.partitionSpecId), m.schema)
-
-    /** Format of a position-delete's referenced data file. The commit's
-      * own manifest diff usually reveals it (fmtOf accumulates every
-      * entry the diff decodes); otherwise the extension decides, and only
-      * an extension-less path (rare: foreign naming) pays a cache-served
-      * manifest walk that STOPS at the manifest carrying the file — never
-      * an unconditional live-set decode (at 100 TB a snapshot's manifest
-      * list is long; the one unresolved path lives in exactly one). */
-    def isOrc(s: graft.meta.Snapshot, p: String): Boolean =
-      fmtOf.get(p).map(_.equalsIgnoreCase("ORC")).getOrElse {
-        val lower = p.toLowerCase
-        if (lower.endsWith(".parquet")) false
-        else if (lower.endsWith(".orc")) true
-        else {
-          val it = dataManifests(s).iterator
-          while (it.hasNext && !fmtOf.contains(p)) {
-            entriesOf(it.next())
-              .filter(_.status != EntryStatus.Deleted)
-              .foreach(e => fmtOf +=
-                PathUtil.canon(e.dataFile.filePath) -> e.dataFile.fileFormat)
-          }
-          fmtOf.get(p).exists(_.equalsIgnoreCase("ORC"))
-        }
-      }
 
     /** delete files first ADDED by snapshot s (descriptors only). */
     def addedDeleteFiles(s: graft.meta.Snapshot): Seq[graft.meta.DataFile] =
@@ -209,8 +182,10 @@ object TableChanges {
         val curMs = dataManifests(s)
         val newEntries = curMs.filter(_.addedSnapshotId == s.snapshotId)
           .flatMap(mf => entriesOf(mf).map(e => (e, mf.partitionSpecId)))
-        newEntries.foreach { case (e, _) =>
-          fmtOf += PathUtil.canon(e.dataFile.filePath) -> e.dataFile.fileFormat }
+        val addedBy: Map[String, graft.meta.DataFile] = newEntries.collect {
+          case (e, _) if e.status == EntryStatus.Added && e.snapshotId == s.snapshotId =>
+            PathUtil.canon(e.dataFile.filePath) -> e.dataFile
+        }.toMap
         val presentInNew = newEntries.collect {
           case (e, _) if e.status != EntryStatus.Deleted =>
             PathUtil.canon(e.dataFile.filePath)
@@ -226,8 +201,6 @@ object TableChanges {
           .filterNot(mf => curMfPaths.contains(mf.manifestPath))
           .flatMap(mf => entriesOf(mf).map(e => (e, mf.partitionSpecId)))
           .filter(_._1.status != EntryStatus.Deleted)
-        droppedLive.foreach { case (e, _) =>
-          fmtOf += PathUtil.canon(e.dataFile.filePath) -> e.dataFile.fileFormat }
         val removedPaths = (newEntries.collect {
           case (e, sp) if e.status == EntryStatus.Deleted &&
             e.snapshotId == s.snapshotId && fileMightMatch(sp, e.dataFile) =>
@@ -238,10 +211,10 @@ object TableChanges {
               PathUtil.canon(e.dataFile.filePath)
           }.filterNot(presentInNew))
           .distinct.sorted
-        val inserts =
-          if (addedPaths.isEmpty) None else Some(rowFiltered(readData(addedPaths)))
-        val cowDeletes =
-          if (removedPaths.isEmpty) None else Some(rowFiltered(readData(removedPaths)))
+        val inserts = if (addedPaths.isEmpty) None
+          else Some(rowFiltered(read(fresh(addedPaths.flatMap(addedBy.get)), keepFilePos = false)))
+        val cowDeletes = if (removedPaths.isEmpty) None
+          else Some(rowFiltered(read(parentTasks(s, removedPaths, addedBy), keepFilePos = false)))
         // cancel carry-overs only when a commit both removed and added
         // (CoW rewrite); append-only and pure-MoR commits skip the shuffle
         val (netInserts, netCowDeletes) = (inserts, cowDeletes) match {
@@ -258,7 +231,7 @@ object TableChanges {
         val positions: Option[DataFrame] = {
           val parts = Seq.newBuilder[DataFrame]
           if (posParquet.nonEmpty)
-            parts += rs.read.parquet(posParquet.map(_.filePath): _*)
+            parts += spark.read.parquet(posParquet.map(_.filePath): _*)
               .select(PathUtil.canonCol(col("file_path")).as("__path"),
                 col("pos").as("__pos"))
           if (dvs.nonEmpty) {
@@ -272,7 +245,7 @@ object TableChanges {
                 DeletionVector.readPositions(pp, off, len, Io.confFrom(ioEntries))
                   .map(pos => (ref, pos))
               }
-            parts += rs.createDataFrame(rdd).toDF("__path", "__pos")
+            parts += spark.createDataFrame(rdd).toDF("__path", "__pos")
           }
           parts.result().reduceOption(_ unionByName _)
         }
@@ -313,20 +286,10 @@ object TableChanges {
             refPathsAll.filter(keep.contains)
           }.getOrElse(refPathsAll)
           if (refPaths.nonEmpty) {
-            // (file, position) metadata: parquet via _metadata columns;
-            // ORC via the bridge reader's own __file/__pos tracking
-            val (orcRefs, parqRefs) = refPaths.partition(isOrc(s, _))
-            val withPosParts = Seq.newBuilder[DataFrame]
-            if (parqRefs.nonEmpty)
-              withPosParts += graft.table.PathDict.join(
-                rs.read.schema(schemaAt.toSpark).parquet(parqRefs: _*)
-                  .withColumn("__rawfile", col("_metadata.file_path"))
-                  .withColumn("__pos", col("_metadata.row_index")),
-                rs, parqRefs, as = "__path")
-            if (orcRefs.nonEmpty)
-              withPosParts += orcFrame(orcRefs, keepFilePos = true)
-                .withColumnRenamed("__file", "__path")
-            val rows = withPosParts.result().reduce(_ unionByName _)
+            // (file, position) of the rows live at the parent: positions
+            // the commit restates over already-masked rows join nothing
+            val rows = read(parentTasks(s, refPaths, addedBy), keepFilePos = true)
+              .withColumnRenamed("__file", "__path")
               .join(posDf, Seq("__path", "__pos"))
               .drop("__path", "__pos")
             frames += withMeta(rowFiltered(rows), "delete", ordinal, s.snapshotId)
@@ -335,7 +298,7 @@ object TableChanges {
         eqDels.foreach { ef =>
           val keyCols = ef.equalityIds.flatMap(id => m.schema.byId.get(id)).map(_.name)
           if (keyCols.nonEmpty) {
-            val keys = rs.read.parquet(ef.filePath).select(keyCols.map(col): _*).distinct()
+            val keys = spark.read.parquet(ef.filePath).select(keyCols.map(col): _*).distinct()
             val parentRows = s.parentSnapshotId.map { pid =>
               // candidate files only: every parent-visible row predates
               // this delete (seq scoping is implied), so the prune is

@@ -259,18 +259,9 @@ class IceTable(
   def incrementalAppendScan(fromIdExclusive: Long, toIdInclusive: Long): DataFrame = {
     val schemaAt = metadata.schemaById(
       metadata.snapshotById(toIdInclusive).map(_.schemaId).getOrElse(metadata.currentSchemaId))
-    val files = incrementalAppendFiles(fromIdExclusive, toIdInclusive)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schemaAt.toSpark)
-    else {
-      // confs ride a cloned session: the lazy result captures them at
-      // execution without mutating the caller's shared session
-      val rs = org.apache.spark.sql.GraftBridge.cloneSession(spark)
-      rs.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-      rs.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
-      rs.read.schema(schemaAt.toSpark).parquet(files.map(_.filePath): _*)
-    }
+    // appended files carry no deletes of their own at commit time
+    IceScan.read(this, incrementalAppendFiles(fromIdExclusive, toIdInclusive)
+      .map(FileScanTask(_, Nil, BTrue)), schemaAt)
   }
 
   // ---- DML ---------------------------------------------------------------
@@ -1084,38 +1075,23 @@ class IceTable(
         paths.contains(PathUtil.canon(t.file.filePath)))
       case None => retireCandidates(live, retire, joinCols)
     }
-    val branches = Seq.newBuilder[DataFrame]
-    val (orcTasks, pqTasks) = tasks.partition(_.file.fileFormat.toUpperCase == "ORC")
-    if (pqTasks.nonEmpty)
-      branches += PathDict.join(
-        spark.read.schema(schema.toSpark).parquet(pqTasks.map(_.file.filePath): _*)
-          .select(joinCols.map(col) ++ Seq(col("_metadata.file_path").as("__rawfile"),
-            col("_metadata.row_index").as("__dpos")): _*)
-          .transform(graft.ops.Joins.nullSafeSemi(_, retire, joinCols)),
-        spark, pqTasks.map(_.file.filePath), as = "__dfile")
-        .select(col("__dfile"), col("__dpos"))
-    if (orcTasks.nonEmpty)
-      branches += OrcScanBridge.frame(spark, nameMappingNested, schema, Schema(Nil),
-          orcTasks.map(t => (t.file.filePath, Array.empty[graft.spark.DeleteFileRef],
-            Array.empty[graft.spark.EqDeleteRef])),
-          keepFile = true, keepPos = true)
+    // live rows only: a row an earlier delete masks is not retired again
+    val retired = if (tasks.isEmpty) None else Some(
+      IceScan.read(this, tasks, schema, keepFile = true, keepPos = true)
+        .select(joinCols.map(col) ++ Seq(col("__file"), col("__pos")): _*)
         .transform(graft.ops.Joins.nullSafeSemi(_, retire, joinCols))
-        .select(col("__file").as("__dfile"), col("__pos").as("__dpos"))
-    branches.result().reduceOption(_ unionByName _) match {
+        .select(col("__file").as("__dfile"), col("__pos").as("__dpos")))
+    retired match {
       case None =>
         commitSnapshot("overwrite", added = imageFiles, removedPaths = Set.empty,
           extraMeta = cursorStamp, conflictFilter = Some(AlwaysTrue),
           baseSnapshotId = baseSnap)
       case Some(posFrame) =>
-        // materialize under the field-id read conf (the same scoped block
-        // the DV commit re-enters — served from this cache there)
+        // materialized once: the DV commit re-reads it from this cache
         val newPos = posFrame.cache()
         try {
-          val affectedFiles = WriteFiles.withScopedConfs(spark,
-            "spark.sql.parquet.fieldId.read.enabled" -> "true") {
-            newPos.select(col("__dfile")).distinct()
-              .collect().map(_.getString(0)).toSet
-          }
+          val affectedFiles = newPos.select(col("__dfile")).distinct()
+            .collect().map(_.getString(0)).toSet
           if (affectedFiles.isEmpty)
             commitSnapshot("overwrite", added = imageFiles, removedPaths = Set.empty,
               extraMeta = cursorStamp, conflictFilter = Some(AlwaysTrue),
@@ -1176,12 +1152,12 @@ class IceTable(
       val dups = paths.filter(existing)
       require(dups.isEmpty, s"Files already referenced: ${dups.take(3).mkString(",")}")
     }
-    // stale-delete guard (ADVICE r5): scan execution applies position
-    // deletes purely (path, pos)-keyed, so re-registering a path an older
-    // LIVE delete file still names would wrongly delete the new file's
-    // rows — the planner's sequence scoping excludes the delete for the
-    // re-added file, but the shared anti-join does not. Registration of
-    // such paths is rejected outright.
+    // stale-delete guard (ADVICE r5): the changelog's position join and
+    // the DV merge key position deletes by (path, pos) alone, so
+    // re-registering a path an older LIVE delete file still names would
+    // wrongly delete the new file's rows there — only the planner's
+    // sequence scoping excludes the delete for the re-added file.
+    // Registration of such paths is rejected outright.
     val liveDeletes = planned.flatMap(_.deletes).distinctBy(_.filePath)
     if (liveDeletes.nonEmpty) {
       val canonAdds = paths.map(PathUtil.canon).toSet
@@ -1287,41 +1263,19 @@ class IceTable(
           removedPaths = removed ++ deadDeleteFiles(removed))
       return
     }
-    // ORC-registered files can't ride the parquet `_metadata.row_index`
-    // read; their (file, pos) tuples come from the DSv2 ORC reader
-    // (OrcScanBridge), which tracks absolute positions itself
-    val (orcTasks, pqTasks) = tasks.partition(_.file.fileFormat.toUpperCase == "ORC")
     // global sort = range shuffle on (file_path, pos): one file's deletes
     // land contiguously and AQE sizes the output task count to the delete
     // volume — at 100 TB this writes many delete files in parallel instead
     // of funneling everything through one task
     val stage = s"${metadata.properties.getOrElse("write.data.path", s"$location/data")}/${UUID.randomUUID()}"
-    // the read executes inside the write action, so the parquet conf can be
-    // scoped (unlike a returned lazy scan DataFrame)
-    WriteFiles.withScopedConfs(spark,
-      "spark.sql.parquet.fieldId.read.enabled" -> "true") {
-      val branches = Seq.newBuilder[DataFrame]
-      if (pqTasks.nonEmpty)
-        // canonical file_path via the broadcast path dict (per-row
-        // metaPathCol dominated matched-row-heavy deletes)
-        branches += PathDict.join(
-          spark.read.schema(schema.toSpark).parquet(pqTasks.map(_.file.filePath): _*)
-            .where(ToColumn.compile(bound))
-            .select(col("_metadata.file_path").as("__rawfile"),
-              col("_metadata.row_index").as("pos")),
-          spark, pqTasks.map(_.file.filePath), as = "file_path")
-          .select(col("file_path"), col("pos"))
-      if (orcTasks.nonEmpty)
-        branches += OrcScanBridge.frame(spark, nameMappingNested, schema, Schema(Nil),
-            orcTasks.map(t => (t.file.filePath, Array.empty[graft.spark.DeleteFileRef],
-              Array.empty[graft.spark.EqDeleteRef])),
-            keepFile = true, keepPos = true)
-          .where(ToColumn.compile(bound))
-          .select(col("__file").as("file_path"), col("__pos").as("pos"))
-      branches.result().reduce(_ unionByName _)
-        .orderBy(col("file_path"), col("pos"))
-        .write.parquet(stage)
-    }
+    // (file, pos) of the LIVE matching rows: the read applies the deletes
+    // already outstanding, so overlapping deletes never restate a
+    // position an earlier delete file holds
+    IceScan.read(this, tasks, schema, keepFile = true, keepPos = true)
+      .where(ToColumn.compile(bound))
+      .select(col("__file").as("file_path"), col("__pos").as("pos"))
+      .orderBy(col("file_path"), col("pos"))
+      .write.parquet(stage)
     // FULL (untruncated) file_path bounds: equal lower/upper bounds are
     // how readers path-scope a delete file to its single target (the
     // reference's DeleteFileIndex rule) — the 16-char default truncation
@@ -1366,30 +1320,12 @@ class IceTable(
     if (tasks.isEmpty) return
     val affected: Map[String, FileScanTask] =
       tasks.map(t => PathUtil.canon(t.file.filePath) -> t).toMap
-    // matched (file, position) pairs — lazy frames, executed inside the
-    // helper's scoped-conf block
-    val (orcTasks, pqTasks) = tasks.partition(_.file.fileFormat.toUpperCase == "ORC")
-    val branches = Seq.newBuilder[DataFrame]
-    if (pqTasks.nonEmpty)
-      branches += PathDict.join(
-        spark.read.schema(schema.toSpark)
-          .parquet(pqTasks.map(_.file.filePath): _*)
-          .where(ToColumn.compile(bound))
-          .select(col("_metadata.file_path").as("__rawfile"),
-            col("_metadata.row_index").as("__dpos")),
-        spark, pqTasks.map(_.file.filePath), as = "__dfile")
-        .select(col("__dfile"), col("__dpos"))
-    // ORC-registered files: absolute positions from the DSv2 ORC reader
-    // (no _metadata.row_index in Spark's ORC source)
-    if (orcTasks.nonEmpty)
-      branches += OrcScanBridge.frame(spark, nameMappingNested, schema, Schema(Nil),
-          orcTasks.map(t => (t.file.filePath, Array.empty[graft.spark.DeleteFileRef],
-            Array.empty[graft.spark.EqDeleteRef])),
-          keepFile = true, keepPos = true)
-        .where(ToColumn.compile(bound))
-        .select(col("__file").as("__dfile"), col("__pos").as("__dpos"))
-    commitDeletionVectors(affected, branches.result().reduce(_ unionByName _),
-      "delete", Some(expr), baseSnap, Nil)
+    // matched (file, position) pairs of LIVE rows — the read applies the
+    // prior deletes, which the DV commit merges back in
+    val matched = IceScan.read(this, tasks, schema, keepFile = true, keepPos = true)
+      .where(ToColumn.compile(bound))
+      .select(col("__file").as("__dfile"), col("__pos").as("__dpos"))
+    commitDeletionVectors(affected, matched, "delete", Some(expr), baseSnap, Nil)
   }
 
   /** Shared tail of every DV-producing commit: merge `newPos`
@@ -1405,8 +1341,8 @@ class IceTable(
       baseSnap: Option[Long], extraAdded: Seq[DataFile],
       extraMeta: TableMetadata => TableMetadata = identity): Unit = {
     val tasks = affected.values.toSeq
-    // prior deletes for the affected files (metadata only — outside the
-    // scoped block because `priorDVs` also names superseded blobs below)
+    // prior deletes for the affected files (metadata only; `priorDVs`
+    // also names superseded blobs below)
     val priorDeletes = tasks.flatMap(_.deletes)
       .filter(_.content == FileContent.PositionDeletes)
       .distinctBy(f => (f.filePath, f.contentOffset))
@@ -1414,10 +1350,7 @@ class IceTable(
 
     // descriptor per written blob: (puffinPath, puffinSize, referenced
     // data file, blob offset, blob length, cardinality) — metadata-sized
-    // scoped: every consumer of `matches` collects within this block
-    val descriptors: Seq[(String, Long, String, Long, Long, Long)] =
-      WriteFiles.withScopedConfs(spark,
-      "spark.sql.parquet.fieldId.read.enabled" -> "true") {
+    val descriptors: Seq[(String, Long, String, Long, Long, Long)] = {
     val branches = Seq.newBuilder[DataFrame]
     branches += newPos
     if (priorParquet.nonEmpty)

@@ -1,10 +1,11 @@
 package graft.table
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
 import graft.meta._
+import graft.spark.{GraftPlannedTable, GraftSparkTable, PlannedRead}
 
 /** One unit of scan work: a data file, its applicable position deletes,
   * and the per-file residual filter (ref: table/__init__.py:2057
@@ -20,12 +21,27 @@ object IceScan {
   /** Reserved field id of the position-delete `file_path` column — path
     * bounds under it scope a delete file to one data file. */
   val PosPathFieldId: Int = 2147483546
+
+  /** `tasks`' rows as read by the DSv2 [[graft.spark.GraftScan]]:
+    * `schema`'s columns plus the metadata columns `_file`, `_pos` (and on
+    * v3 tables the lineage pair), pruned to what the caller selects. The
+    * one read path of every planned data file in the library. */
+  private[graft] def read(table: IceTable, tasks: Seq[FileScanTask], schema: Schema,
+      keepFile: Boolean = false, keepPos: Boolean = false,
+      lineage: Boolean = false): DataFrame = {
+    val df = org.apache.spark.sql.GraftBridge.v2Frame(table.spark,
+      new GraftPlannedTable(table, PlannedRead(tasks, schema)))
+    df.select(schema.fields.map(f => df.col(s"`${f.name}`")) ++
+      (if (lineage) RowLineage.fields.map(f => df.col(f.name)) else Nil) ++
+      (if (keepFile) Seq(df.col(GraftSparkTable.FileColumn).as("__file")) else Nil) ++
+      (if (keepPos) Seq(df.col(GraftSparkTable.PosColumn).as("__pos")) else Nil): _*)
+  }
 }
 
 /** Snapshot scan: plan on the driver (manifest → partition → stats
-  * pruning), execute as a Spark DataFrame (ref: DataScan
-  * table/__init__.py:2227; ArrowScan io/pyarrow.py:1741 — replaced by
-  * Spark's vectorized parquet reader).
+  * pruning), execute as a Spark DataFrame over the DSv2 GraftScan (ref:
+  * DataScan table/__init__.py:2227; ArrowScan io/pyarrow.py:1741 —
+  * replaced by Spark's vectorized parquet reader).
   */
 final class IceScan(
     val table: IceTable,
@@ -316,11 +332,8 @@ final class IceScan(
   /** v3 ROW LINEAGE scan (spec §Row Lineage — beyond the reference, which
     * only declares the manifest fields): the projection plus
     * `_row_id` (file's first_row_id + physical row position) and
-    * `_last_updated_sequence_number` (the entry's data sequence number).
-    * Per-file constants join in via a broadcast of the metadata-sized
-    * task list; positions ride parquet's `_metadata.row_index`, so rows
-    * surviving a MoR delete keep their ids. ORC data files don't expose
-    * row positions through this path — typed error. */
+    * `_last_updated_sequence_number` (the entry's data sequence number),
+    * so rows surviving a MoR delete keep their ids. */
   def toDFWithLineage: DataFrame =
     toDFWithLineageForTasks(planFiles(keepStats = false))
 
@@ -336,470 +349,40 @@ final class IceScan(
       keepFilePos: Boolean = false): DataFrame = {
     require(metadata.formatVersion >= 3,
       s"Row lineage requires format version >= 3 (table is v${metadata.formatVersion})")
-    // parquet positions ride _metadata.row_index; ORC positions come from
-    // the DSv2 ORC reader's sequential row index (OrcScanBridge keepPos)
-    val proj = projection
-    if (tasks.isEmpty) {
-      val fields = proj.toSpark.fields ++ Seq(
-        org.apache.spark.sql.types.StructField(RowLineage.RowIdName,
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField(RowLineage.LastUpdatedName,
-          org.apache.spark.sql.types.LongType)) ++
-        (if (keepFilePos) Seq(
-          org.apache.spark.sql.types.StructField("__file",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("__pos",
-            org.apache.spark.sql.types.LongType)) else Nil)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType(fields))
-    }
-    val info: Map[String, (Long, Long)] = tasks.map { t =>
-      val first = t.file.firstRowId.getOrElse(throw new IllegalStateException(
-        s"${t.file.filePath} has no first_row_id — written before the table became v3? " +
-          "Row lineage covers rows committed under format version 3"))
-      PathUtil.canon(t.file.filePath) -> ((first, t.dataSequenceNumber))
-    }.toMap
-    // per-file constants ride the path dict itself (one broadcast probe
-    // per row, no second join keyed on the canonical string)
-    val base = toDFForTasks(tasks, applyResidualOnlyWhereNeeded = true,
-      keepFile = true, keepPos = true, lineageCols = true,
-      lineageConstants = Some(info))
-    // a non-null MATERIALIZED value wins over inheritance (spec: readers
-    // must prefer explicit lineage columns — rewritten files carry them)
-    base
-      .select(proj.fields.map(f => col(f.name)) ++ Seq(
-        coalesce(col(RowLineage.RowIdName), col("__first_row_id") + col("__pos"))
-          .as(RowLineage.RowIdName),
-        coalesce(col(RowLineage.LastUpdatedName), col("__last_seq"))
-          .as(RowLineage.LastUpdatedName)) ++
-        (if (keepFilePos) Seq(col("__file"), col("__pos")) else Nil): _*)
+    toDFForTasks(tasks, applyResidualOnlyWhereNeeded = true,
+      keepFile = keepFilePos, keepPos = keepFilePos, lineage = true)
   }
 
-  /** `keepFile` appends a `__file` column (canonical source-file path) to
-    * the output — the MoR-correct replacement for a raw parquet read with
-    * `_metadata.file_path` (upsert file targeting, compaction). */
+  /** The projection of `tasks`' rows, read by the DSv2 [[graft.spark.GraftScan]]
+    * (deletes, field-id and name-mapped resolution, defaults and row
+    * positions all live there). `keepFile` / `keepPos` append `__file`
+    * (canonical source-file path) and `__pos` (row position in that
+    * file) — the MoR-correct coordinates for upsert file targeting,
+    * compaction and position deletes; `lineage` appends the v3 lineage
+    * pair before them. */
   private[table] def toDFForTasks(tasks: Seq[FileScanTask],
       applyResidualOnlyWhereNeeded: Boolean, keepFile: Boolean = false,
-      keepPos: Boolean = false, lineageCols: Boolean = false,
-      lineageConstants: Option[Map[String, (Long, Long)]] = None): DataFrame = {
+      keepPos: Boolean = false, lineage: Boolean = false): DataFrame = {
     val proj = projection
-    val projSpark0 = proj.toSpark
-    val metaFields =
-      (if (keepFile) Seq(org.apache.spark.sql.types.StructField("__file",
-        org.apache.spark.sql.types.StringType)) else Nil) ++
-      (if (keepPos) Seq(org.apache.spark.sql.types.StructField("__pos",
-        org.apache.spark.sql.types.LongType)) else Nil) ++
-      (if (lineageCols) RowLineage.fields.map(f =>
-        org.apache.spark.sql.types.StructField(f.name,
-          org.apache.spark.sql.types.LongType)) else Nil) ++
-      (if (lineageConstants.isDefined) Seq(
-        org.apache.spark.sql.types.StructField("__first_row_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("__last_seq",
-          org.apache.spark.sql.types.LongType)) else Nil)
-    val projSpark = if (metaFields.nonEmpty)
-      org.apache.spark.sql.types.StructType(projSpark0.fields ++ metaFields)
-    else projSpark0
-    if (tasks.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], projSpark)
-
-    val snap = snapshot.get
     val schema = scanSchema
     val bound = boundFilter(schema)
-
-    // id-based resolution: requested columns are matched to parquet fields
-    // by field-id (handles renames); ids absent from a file read as null
-    // (handles add_column over old files). The confs ride a CLONED session
-    // so the returned LAZY DataFrame captures them at execution without
-    // ever touching (or racing on) the caller's shared session — the old
-    // approach set them sticky on the shared session (VERDICT r5 minor).
-    val rs = org.apache.spark.sql.GraftBridge.cloneSession(spark)
-    rs.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    rs.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
-
     // read ALL columns the filter or the projection needs, then project.
     // A filter on a NESTED field needs its top-level ancestor in the read
     // schema (the leaf id itself is not a top-level column)
     val neededTop = Exprs.fieldIds(bound).map(id => schema.topAncestorById.getOrElse(id, id))
-    // v3 `unknown` columns are all-null and never stored in data files
-    // (ref io/pyarrow.py:818 maps them to arrow null) — keep them out of
-    // the parquet read schema (NullType is not readable) and fill NULL
-    // after the read instead
-    // lineage scans additionally request the reserved materialized-lineage
-    // columns by field id: rewritten files carry them (spec §Row Lineage),
-    // all other files null-fill via fieldId.read.ignoreMissing
     val readSchema = Schema(
-      schema.fields.filter(f => (proj.byId.contains(f.id) || neededTop.contains(f.id)) &&
-        f.fieldType != IUnknown) ++ (if (lineageCols) RowLineage.fields else Nil),
+      schema.fields.filter(f => proj.byId.contains(f.id) || neededTop.contains(f.id)),
       schema.schemaId)
-
-    // files written by this table carry parquet field-ids; externally
-    // registered files (add_files) resolve by NAME MAPPING instead
-    // (ref: io/pyarrow.py:1178 pyarrow_to_schema(…, name_mapping))
-    def isExternal(p: String): Boolean = !PathUtil.underDataRoot(table.location, p)
-    val mapping = table.nameMappingNested
-
-    // non-parquet files are ALWAYS name-mapped reads, even when addFiles
-    // registered them under the table's data root (the own-file branch
-    // below is a parquet read and would crash on an ORC payload)
-    val (externalAll, ownTasks) = tasks.partition(t =>
-      isExternal(t.file.filePath) || t.file.fileFormat.toUpperCase != "PARQUET")
-    // ORC under row-level deletes — or when ROW POSITIONS are requested
-    // (keepPos: MoR anti-joins, row lineage) — reads through the DSv2 ORC
-    // reader (own branch below): Spark's ORC source has no
-    // _metadata.row_index
-    val (orcDeleteTasks, externalTasks) = externalAll.partition(t =>
-      (t.deletes.nonEmpty || keepPos) && t.file.fileFormat.toUpperCase == "ORC")
-    val (plainTasks, deleteTasks) = ownTasks.partition(_.deletes.isEmpty)
-
-    // uuid leaves are requested as BINARY (serves fixed[16] files from other
-    // engines and our own string-stored files alike), then normalized to
-    // canonical strings straight after the read — filters and projection
-    // downstream always see the public string shape (UuidCompat)
-    val uuidPresent = UuidCompat.hasUuid(readSchema)
-    // v3 ns timestamps: read the parquet nanos column as LONG and downcast
-    // to micros right after (ref io/pyarrow.py:1654); same physical-read
-    // detour as uuid, one select, stays in whole-stage codegen
-    val nsPresent = UuidCompat.hasNs(readSchema)
-    // ns reads need spark.sql.legacy.parquet.nanosAsLong at PHYSICAL
-    // planning time. Setting it on the shared session conf would linger
-    // past this scan (poisoning unrelated raw nanos reads), so instead the
-    // physical scan is baked into an RDD inside a scoped set/restore: toRdd
-    // forces buildReader (which snapshots the conf into the broadcast
-    // hadoop conf) without running a job, then the frame is re-wrapped as a
-    // leaf. Costs downstream scan pushdown — acceptable: ns tables are
-    // read-only interop fixtures and residuals still filter post-read.
-    def bakeNsRead(df: DataFrame): DataFrame = {
-      import org.apache.spark.sql.GraftBridge
-      val k = "spark.sql.legacy.parquet.nanosAsLong"
-      val prev = rs.conf.getOption(k)
-      rs.conf.set(k, "true")
-      try GraftBridge.frameOfInternalRows(rs, GraftBridge.internalRowRDD(df), df.schema)
-      finally prev match {
-        case Some(v) => rs.conf.set(k, v)
-        case None => rs.conf.unset(k)
-      }
-    }
-    def uuidNormalized(df: DataFrame, metaCols: Seq[String]): DataFrame =
-      if (!uuidPresent && !nsPresent) df
-      else df.select(readSchema.fields.map(f =>
-        UuidCompat.convert(col(f.name), f.fieldType).as(f.name)) ++
-        metaCols.map(col): _*)
-
-    // non-parquet branches (ORC bridge, name-mapped external) get the
-    // lineage constants through a broadcast join on their own __file
-    // column; parquet branches get them from the path dict itself
-    val lineageInfoDf = lineageConstants.map { m =>
-      broadcast(rs.createDataFrame(m.toSeq.map { case (p, (f, sq)) => (p, f, sq) })
-        .toDF("__file", "__first_row_id", "__last_seq"))
-    }
-    def withConstants(df: DataFrame): DataFrame =
-      lineageInfoDf.map(i => df.join(i, Seq("__file"))).getOrElse(df)
-
-    def readFiles(paths: Seq[String], withMeta: Boolean): DataFrame = {
-      val base = rs.read.schema(UuidCompat.readSchema(readSchema)).parquet(paths: _*)
-      val withCols =
-        if (withMeta)
-          // per-file-constant `__file` via the broadcast path dict — per-row
-          // canonicalization (metaPathCol) dominated wide scans' CPU
-          PathDict.join(
-            base.select(col("*"), col("_metadata.file_path").as("__rawfile"),
-              col("_metadata.row_index").as("__pos")),
-            rs, paths, as = "__file",
-            lineage = lineageConstants.map(m => (p: String) => m(p)))
-        else base
-      val baked = if (nsPresent) bakeNsRead(withCols) else withCols
-      uuidNormalized(baked,
-        if (withMeta) Seq("__file", "__pos") ++
-          (if (lineageConstants.isDefined) Seq("__first_row_id", "__last_seq") else Nil)
-        else Nil)
-    }
-
-    /** name-mapped read: request columns under their mapped (registration
-      * time) names with NO id metadata, then alias back to current names —
-      * RECURSIVELY through structs AND list/map element types, so renamed
-      * leaves inside collections resolve too (ref name_mapping.py:73
-      * MappedField nests through elements and key/value). */
-    def readExternal(taskSeq: Seq[FileScanTask], format: String): DataFrame = {
-      // typed rejection, not a parquet decode crash: the manifest FileFormat
-      // enum admits AVRO (ref manifest.py:114) but neither this engine nor
-      // the reference reads avro-format DATA files (io/pyarrow.py raises
-      // ValueError for unsupported formats)
-      if (format != "PARQUET" && format != "ORC")
-        throw new UnsupportedOperationException(
-          s"Unsupported data file format $format " +
-            s"(${taskSeq.head.file.filePath}); only PARQUET and ORC are readable")
-      import org.apache.spark.sql.types.{ArrayType, MapType, StructField, StructType}
-      def mappedName(scope: Seq[MappedField], f: NestedField): String =
-        NameMapping.nameOf(scope, f.id).getOrElse(f.name)
-      // request type with registration-time names at every nesting level
-      def extType(t: IceType, scope: Seq[MappedField]): org.apache.spark.sql.types.DataType =
-        t match {
-          case IStruct(fs) => StructType(fs.map(ch =>
-            StructField(mappedName(scope, ch),
-              extType(ch.fieldType, NameMapping.childScope(scope, ch.id)), nullable = true)))
-          case IList(eid, el, _) =>
-            ArrayType(extType(el, NameMapping.childScope(scope, eid)), containsNull = true)
-          case IMap(kid, k, vid, v, _) =>
-            MapType(extType(k, NameMapping.childScope(scope, kid)),
-              extType(v, NameMapping.childScope(scope, vid)), valueContainsNull = true)
-          // iceberg `timestamp` (ntz) is the plain ORC `timestamp` type,
-          // which Spark's ORC reader surfaces as LTZ — request LTZ here
-          // and cast back to ntz in the projection (UTC sessions make the
-          // round-trip lossless)
-          case ITimestamp if format == "ORC" =>
-            org.apache.spark.sql.types.TimestampType
-          case other => UuidCompat.readType(other)
-        }
-      def containsNtz(t: IceType): Boolean = t match {
-        case ITimestamp => true
-        case IStruct(fs) => fs.exists(f => containsNtz(f.fieldType))
-        case IList(_, el, _) => containsNtz(el)
-        case IMap(_, k, _, v, _) => containsNtz(k) || containsNtz(v)
-        case _ => false
-      }
-      // a subtree needs a restore projection only if some name changed
-      // since registration — primitives and unrenamed trees pass through
-      def renamed(t: IceType, scope: Seq[MappedField]): Boolean = t match {
-        case IStruct(fs) => fs.exists(ch => mappedName(scope, ch) != ch.name ||
-          renamed(ch.fieldType, NameMapping.childScope(scope, ch.id)))
-        case IList(eid, el, _) => renamed(el, NameMapping.childScope(scope, eid))
-        case IMap(kid, k, vid, v, _) =>
-          renamed(k, NameMapping.childScope(scope, kid)) ||
-            renamed(v, NameMapping.childScope(scope, vid))
-        case _ => false
-      }
-      // restore current names: primitives alias; structs rebuild member by
-      // member (null structs preserved — struct() of null children is not
-      // null by itself); collections rebuild elements via transform()
-      def restore(path: org.apache.spark.sql.Column, t: IceType,
-          scope: Seq[MappedField]): org.apache.spark.sql.Column = t match {
-        case IStruct(fs) =>
-          val members = fs.map { ch =>
-            restore(path.getField(mappedName(scope, ch)), ch.fieldType,
-              NameMapping.childScope(scope, ch.id)).as(ch.name)
-          }
-          when(path.isNotNull, struct(members: _*))
-        case IList(eid, el, _) if renamed(el, NameMapping.childScope(scope, eid)) =>
-          transform(path, x => restore(x, el, NameMapping.childScope(scope, eid)))
-        case IMap(kid, k, vid, v, _)
-            if renamed(k, NameMapping.childScope(scope, kid)) ||
-              renamed(v, NameMapping.childScope(scope, vid)) =>
-          map_from_arrays(
-            transform(map_keys(path), x => restore(x, k, NameMapping.childScope(scope, kid))),
-            transform(map_values(path), x => restore(x, v, NameMapping.childScope(scope, vid))))
-        case _ => path
-      }
-      val ext = StructType(readSchema.fields.map(f =>
-        StructField(mappedName(mapping, f),
-          extType(f.fieldType, NameMapping.childScope(mapping, f.id)), nullable = true)))
-      val cols = readSchema.fields.map { f =>
-        val restored = restore(col(mappedName(mapping, f)), f.fieldType,
-          NameMapping.childScope(mapping, f.id))
-        val typed = if (format == "ORC" && containsNtz(f.fieldType))
-          restored.cast(UuidCompat.readType(f.fieldType))
-        else restored
-        typed.as(f.name)
-      } ++
-        (if (keepFile) Seq(PathUtil.metaPathCol(col("_metadata.file_path")).as("__file")) else Nil) ++
-        (if (keepPos) {
-          require(format == "PARQUET",
-            "row positions (_metadata.row_index) are parquet-only for name-mapped reads")
-          Seq(col("_metadata.row_index").as("__pos"))
-        } else Nil)
-      // same projection machinery over either columnar format — Spark's
-      // ORC reader is vectorized and prunes/pushes down just like parquet
-      // (the reference reads ORC data files too, io/pyarrow.py:1119–1125)
-      val rdr = rs.read.schema(ext)
-      val base = if (format == "ORC") rdr.orc(taskSeq.map(_.file.filePath): _*)
-        else rdr.parquet(taskSeq.map(_.file.filePath): _*)
-      uuidNormalized(base.select(cols: _*), if (keepFile) Seq("__file") else Nil)
-    }
-
-    val branches = Seq.newBuilder[DataFrame]
-    if (externalTasks.nonEmpty) {
-      require(externalTasks.forall(_.deletes.isEmpty),
-        "position deletes on externally-registered non-ORC files are not supported")
-      externalTasks.groupBy(_.file.fileFormat.toUpperCase).foreach {
-        case (fmt, ts) =>
-          // typed rejection, not a parquet decode crash: the reference's
-          // FileFormat enum lists AVRO (manifest.py:114) but its reader
-          // raises ValueError for any non-parquet/ORC data file
-          if (fmt != "PARQUET" && fmt != "ORC")
-            throw new UnsupportedOperationException(
-              s"Cannot read data files in format $fmt (file: " +
-                s"${ts.head.file.filePath}); supported: PARQUET, ORC")
-          branches += withConstants(readExternal(ts, fmt))
-      }
-    }
-    if (orcDeleteTasks.nonEmpty) {
-      // Deletes apply regardless of data format (ref io/pyarrow.py:1629
-      // applies deletes before projection). Spark's ORC source exposes no
-      // _metadata.row_index (parquet-only in 4.1), so position deletes
-      // cannot ride the shared (__file, __pos) anti-join; these tasks read
-      // through the DSv2 ORC partition reader, which applies position
-      // skips and equality-key probes executor-side (OrcScanBridge).
-      val eqIds = orcDeleteTasks.flatMap(_.deletes)
-        .filter(_.content == FileContent.EqualityDeletes).flatMap(_.equalityIds).distinct
-      val eqSchema = Schema(schema.fields.filter(f => eqIds.contains(f.id)))
-      branches += withConstants(OrcScanBridge.frame(rs, mapping, readSchema, eqSchema,
-        orcDeleteTasks.map(t => OrcScanBridge.descOf(table.location, t)),
-        keepFile = keepFile, keepPos = keepPos))
-    }
-    if (plainTasks.nonEmpty) {
-      val base = readFiles(plainTasks.map(_.file.filePath), withMeta = keepFile || keepPos)
-      branches += base.drop(
-        (if (keepPos) Nil else Seq("__pos")) ++
-          (if (keepFile) Nil else Seq("__file")): _*)
-    }
-    if (deleteTasks.nonEmpty) {
-      // broadcast the delete side only while it provably fits in executor
-      // memory (we KNOW the delete-file bytes from the manifests); a large
-      // delete set falls back to a shuffle anti-join instead of OOMing
-      // every executor (VERDICT W9)
-      // Spark's typed accessor handles every byte-string form ("10MB",
-      // "-1" = disabled); negative means "never broadcast"
-      val broadcastLimit = spark.sessionState.conf.autoBroadcastJoinThreshold
-        .max(0L) * 4 // parquet→row expansion headroom
-      def maybeBroadcast(d: DataFrame, bytes: Long): DataFrame =
-        if (bytes <= broadcastLimit) broadcast(d) else d
-
-      /** (__dfile, __dpos) rows from position-delete parquet + DV blobs,
-        * with the decoded byte estimate for the broadcast gate.
-        * Position-delete files have columns (file_path, pos) — spec
-        * §Position Delete Files (ref io/pyarrow.py:1130 _read_deletes);
-        * v3 deletion vectors decode to the same shape with a ranged blob
-        * read PER EXECUTOR TASK (the driver never holds positions). */
-      def positionsFrame(posParquet: Seq[DataFile], dvFiles: Seq[DataFile])
-          : (DataFrame, Long) = {
-        // parquet delete bytes + decoded DV rows (cardinality is known from
-        // the manifest; ~16B per (path-ref, pos) row after decode)
-        val bytes = posParquet.map(_.fileSizeInBytes).sum +
-          dvFiles.map(_.recordCount * 16L).sum
-        val posBranches = Seq.newBuilder[DataFrame]
-        val posPaths = posParquet.map(_.filePath).distinct
-        if (posPaths.nonEmpty)
-          posBranches += spark.read.parquet(posPaths: _*)
-            .select(PathUtil.canonCol(col("file_path")).as("__dfile"), col("pos").as("__dpos"))
-        if (dvFiles.nonEmpty) {
-          val refs = dvFiles.map { f =>
-            val ref = f.referencedDataFile.getOrElse(throw new IllegalStateException(
-              s"Deletion vector ${f.filePath} lacks referenced-data-file"))
-            val off = f.contentOffset.getOrElse(throw new IllegalStateException(
-              s"Deletion vector ${f.filePath} lacks content-offset"))
-            (f.filePath, off, f.contentSizeInBytes.getOrElse(f.fileSizeInBytes),
-              PathUtil.canon(ref))
-          }
-          // ship the session Hadoop conf: executor JVMs on a cluster
-          // don't share the driver's Io.confFactory
-          val dvConf = Io.confEntries(spark)
-          val rdd = spark.sparkContext
-            .parallelize(refs, math.min(refs.size, spark.sparkContext.defaultParallelism))
-            .flatMap { case (pp, off, len, ref) =>
-              DeletionVector.readPositions(pp, off, len, Io.confFrom(dvConf))
-                .iterator.map(p => (ref, p))
-            }
-          posBranches += spark.createDataFrame(rdd).toDF("__dfile", "__dpos")
-        }
-        (posBranches.result().reduce(_ unionByName _), bytes)
-      }
-
-      val (eqTasks, posOnlyTasks) =
-        deleteTasks.partition(_.deletes.exists(_.content == FileContent.EqualityDeletes))
-
-      if (posOnlyTasks.nonEmpty) {
-        // position deletes are PATH-KEYED — a delete row can only hit the
-        // data file it names (file paths are unique for the table's
-        // lifetime), so every position-delete/DV task shares ONE branch and
-        // ONE anti-join on (__file, __pos). Per-delete-signature grouping
-        // here would emit one union branch per data file on v3 DV tables
-        // (every file carries its own vector) — a plan explosion at scale.
-        val all = posOnlyTasks.flatMap(_.deletes)
-          .distinctBy(f => (f.filePath, f.contentOffset))
-        val (dvFiles, posParquet) = all.partition(_.isDeletionVector)
-        val (deletes, posBytes) = positionsFrame(posParquet, dvFiles)
-        var dfG = readFiles(posOnlyTasks.map(_.file.filePath), withMeta = true)
-        // broadcast the anti-join so the data side never shuffles
-        dfG = dfG.join(maybeBroadcast(deletes, posBytes),
-          dfG("__file") === deletes("__dfile") && dfG("__pos") === deletes("__dpos"),
-          "left_anti")
-        branches += dfG.drop(
-          (if (keepPos) Nil else Seq("__pos")) ++
-            (if (keepFile) Nil else Seq("__file")): _*)
-      }
-
-      // equality deletes (extension — the reference rejects reading them)
-      // ARE sequence-scoped (a key deletes rows in strictly-older files
-      // regardless of path), so these keep per-signature grouping: within a
-      // group every delete applies to every file
-      val groups = eqTasks.groupBy { t =>
-        (t.deletes.filter(_.content == FileContent.PositionDeletes)
-          .map(f => (f.filePath, f.contentOffset.getOrElse(-1L))).sorted,
-          t.deletes.filter(_.content == FileContent.EqualityDeletes).map(_.filePath).sorted)
-      }
-      groups.foreach { case ((posKeys, _), group) =>
-        val allDeletes = group.head.deletes
-        val eqFiles = allDeletes.filter(_.content == FileContent.EqualityDeletes)
-        val (dvFiles, posParquet) = allDeletes
-          .filter(_.content == FileContent.PositionDeletes).partition(_.isDeletionVector)
-        var dfG = readFiles(group.map(_.file.filePath),
-          withMeta = posKeys.nonEmpty || keepFile || keepPos)
-        if (posKeys.nonEmpty) {
-          val (deletes, posBytes) = positionsFrame(posParquet, dvFiles)
-          dfG = dfG.join(maybeBroadcast(deletes, posBytes),
-            dfG("__file") === deletes("__dfile") && dfG("__pos") === deletes("__dpos"),
-            "left_anti")
-        }
-        if (posKeys.nonEmpty || keepFile || keepPos)
-          dfG = dfG.drop(
-            (if (keepPos) Nil else Seq("__pos")) ++
-              (if (keepFile) Nil else Seq("__file")): _*)
-        // anti-join on the delete file's equality columns, null-safe so a
-        // null key deletes null rows (Iceberg equality semantics)
-        eqFiles.groupBy(_.equalityIds).foreach { case (ids, files) =>
-          val names = ids.map(id => schema.byId(id).name)
-          val keySchema = Schema(schema.fields.filter(f => ids.contains(f.id)))
-          val keys = spark.read.schema(keySchema.toSpark)
-            .parquet(files.map(_.filePath): _*).distinct()
-          val keysAliased = names.foldLeft(keys)((d, n) => d.withColumnRenamed(n, s"__eq_$n"))
-          val cond = names.map(n => dfG(n) <=> keysAliased(s"__eq_$n")).reduce(_ && _)
-          dfG = dfG.join(maybeBroadcast(keysAliased, files.map(_.fileSizeInBytes).sum),
-            cond, "left_anti")
-        }
-        branches += dfG
-      }
-    }
-    var df = branches.result().reduce(_ unionByName _)
-
-    // v3 `unknown` columns surface as NULL (excluded from the read schema
-    // above; the filter and projection below see them like any column)
-    schema.fields
-      .filter(f => f.fieldType == IUnknown &&
-        (proj.byId.contains(f.id) || neededTop.contains(f.id)))
-      .foreach(f => df = df.withColumn(f.name, lit(null)))
-
+    var df = IceScan.read(table, tasks, readSchema, keepFile, keepPos, lineage)
     // row-level filter: the full bound filter is correct for every file;
-    // skip it only when every task's residual is already TRUE
-    val allTrue = tasks.forall(_.residual == BTrue)
-    if (bound != BTrue && !(applyResidualOnlyWhereNeeded && allTrue))
+    // skip it only when every task's residual is already TRUE. Spark
+    // pushes it into the scan, where it prunes parquet row groups
+    if (bound != BTrue && !(applyResidualOnlyWhereNeeded && tasks.forall(_.residual == BTrue)))
       df = df.filter(ToColumn.compile(bound))
-
-    // id-based projection: select + fill defaults for columns missing
-    // entirely (initial-default semantics, ref ArrowProjectionVisitor)
-    val outCols = proj.fields.map { f =>
-      val c = col(f.name)
-      f.initialDefault match {
-        case Some(d) => coalesce(c, Literals.toSparkLit(
-          Literals.coerce(d, f.fieldType) match { case CVal(v) => v; case _ => null },
-          f.fieldType)).as(f.name)
-        case None => c.as(f.name)
-      }
-    } ++ (if (keepFile) Seq(col("__file")) else Nil) ++
-      (if (keepPos) Seq(col("__pos")) else Nil) ++
-      (if (lineageCols) RowLineage.fields.map(f => col(f.name)) else Nil) ++
-      (if (lineageConstants.isDefined)
-        Seq(col("__first_row_id"), col("__last_seq")) else Nil)
-    df = df.select(outCols: _*)
+    df = df.select(proj.fields.map(f => col(s"`${f.name}`")) ++
+      (if (lineage) RowLineage.fields.map(f => col(f.name)) else Nil) ++
+      (if (keepFile) Seq(col("__file")) else Nil) ++
+      (if (keepPos) Seq(col("__pos")) else Nil): _*)
     // Spark's LocalLimit is Int-bounded — `n.toInt` on a >2³¹ limit would
     // silently wrap. DOCUMENTED DEVIATION for limit > Int.MaxValue: only
     // the plan-level file truncation bounds the result (it keeps the last

@@ -7,9 +7,9 @@ import graft.catalog.Catalog
 /** SQL face: expose engine tables to `spark.sql` as temp views.
   *
   * The view body is the table's scan DataFrame, which bottoms out in a
-  * parquet relation over the snapshot's (already manifest-pruned) file
-  * list — so SQL `WHERE`/`SELECT` over the view still get Catalyst's
-  * filter pushdown and column pruning into the parquet scan. What a view
+  * DSv2 relation over the snapshot's (already manifest-pruned) tasks —
+  * so SQL `WHERE`/`SELECT` over the view still get Catalyst's filter
+  * pushdown and column pruning into the scan. What a view
   * cannot do is re-run manifest/partition pruning per query (the file
   * list is fixed at registration); for that, call
   * `table.scan(filter).toDF`, use `sql` below (re-plans per invocation),
@@ -19,15 +19,10 @@ import graft.catalog.Catalog
   */
 object GraftSql {
 
-  /** Register the table's current snapshot as a temp view. The scan frame
-    * is re-bound to the TABLE's session first: scan DataFrames are built
-    * on a conf-carrying clone (Scan.toDFForTasks), and a view registered
-    * there would be invisible to `spark.sql` on the user's session. The
-    * underlying parquet relation keeps its creating session, so the
-    * field-id read confs still apply at execution. */
+  /** Register the table's current snapshot as a temp view on the
+    * table's session. */
   def register(table: IceTable, viewName: String): Unit =
-    org.apache.spark.sql.GraftBridge.onSession(table.spark, table.scan.toDF)
-      .createOrReplaceTempView(viewName)
+    table.scan.toDF.createOrReplaceTempView(viewName)
 
   /** Register every table of a catalog warehouse directory. */
   def registerAll(catalog: Catalog, names: Seq[String]): Unit =

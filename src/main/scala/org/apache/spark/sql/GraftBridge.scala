@@ -34,15 +34,16 @@ object GraftBridge {
       : Array[org.apache.spark.sql.sources.Filter] =
     internal.connector.PredicateUtils.toV1(ps)
 
-  /** Wrap an executor-produced InternalRow RDD as a DataFrame —
-    * `internalCreateDataFrame` is private[sql], hence this bridge. Used
-    * for the rare read path Spark's file sources can't express (ORC
-    * files under row-level deletes: the ORC source has no
-    * _metadata.row_index, so positions must come from a custom reader). */
-  def frameOfInternalRows(s: SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    s.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+  /** Frame over a DSv2 table with its metadata columns in the output —
+    * Spark's V2ScanRelationPushDown then prunes columns and pushes filters
+    * and limits into the table's scan builder, as for a catalog table.
+    * `Dataset.ofRows` is private[sql], hence this bridge. */
+  def v2Frame(s: SparkSession, table: org.apache.spark.sql.connector.catalog.Table)
+      : DataFrame = {
+    val rel = org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+      .create(table, None, None)
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], rel.withMetadataColumns())
+  }
 
   /** Batch plan served as ONE streaming micro-batch: a V1
     * `Source.getBatch` result must carry isStreaming=true

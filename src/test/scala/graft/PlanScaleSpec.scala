@@ -327,28 +327,6 @@ class PlanScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     info(f"prunedDiffTasks at 100k files: $sec%.2fs cold, $sec2%.2fs cached")
   }
 
-  test("path-dict construction at 100k files is driver-cheap") {
-    // r14: every coordinate-bearing read broadcast-joins the
-    // (encoded -> canonical) path dict instead of regex-deriving __file
-    // per ROW; the dict itself is built on the driver, so its cost must
-    // stay trivial at full 100-TB-scan file counts (the broadcast payload
-    // is ~2 short strings per file — a few MB at 100k files)
-    val hconf = spark.sessionState.newHadoopConf()
-    val paths = (0 until 100000).map(i =>
-      s"$warehouse/planscale/data/d=${i / 10}/f-${i % 10}.parquet")
-    val t0 = System.nanoTime()
-    val dict = paths.flatMap(p =>
-      PathUtil.sparkMetaPaths(p, hconf).map(enc => (enc, PathUtil.canon(p))))
-    val sec = (System.nanoTime() - t0) / 1e9
-    assert(dict.size >= paths.size)
-    // every encoded variant must round-trip to its own canonical path
-    assert(dict.forall { case (enc, canon) =>
-      PathUtil.canon(java.net.URLDecoder.decode(
-        enc.replace("+", "%2B"), "UTF-8")) == canon })
-    assert(sec < 10.0, f"path-dict build took $sec%.1fs at 100k files")
-    info(f"path dict at 100k files: ${dict.size} entries in $sec%.2fs")
-  }
-
   test("metadata parse cache: refresh costs a pointer probe, drop invalidates") {
     val spark2 = spark
     import spark2.implicits._

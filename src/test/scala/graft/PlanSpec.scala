@@ -53,11 +53,10 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!readSchema.contains("l_comment") && !readSchema.contains("l_returnflag"), readSchema)
   }
 
-  test("MoR scan pushes residual filters through the path-dict join") {
-    // r14: coordinate-bearing reads carry a broadcast dict join + the
-    // assert_true miss guard BELOW the residual filter — neither may
-    // block the filter's conjuncts from reaching the parquet scan, or
-    // row-group pruning dies on every deleted-from table
+  test("MoR scan pushes residual filters into the delete-applying reader") {
+    // deletes apply inside the scan's reader, so nothing may sit between
+    // the residual filter and the scan: its conjuncts must reach the
+    // reader (parquet row-group pruning) on every deleted-from table
     val wh = new HadoopCatalog(
       java.nio.file.Files.createTempDirectory("plan_mor").toString, spark)
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
@@ -67,6 +66,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     t.append(li)
     t.deleteAsDeletionVector("l_orderkey = 1")
     val t1 = wh.loadTable("li_mor")
+    assert(t1.scan.planFiles().exists(_.deletes.nonEmpty))
     val df = t1.scan("l_quantity > 45.0").select("l_orderkey", "l_quantity").toDF
     val plan = planOf(df)
     assert(plan.contains("PushedFilters: [") && plan.contains("GreaterThan(l_quantity"),
@@ -81,16 +81,19 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       "expected a broadcast join for the customer dimension")
   }
 
-  test("position-delete application is a broadcast anti-join (no data shuffle)") {
+  test("position-delete application adds no exchange (no data shuffle)") {
     val wh = new HadoopCatalog(
       java.nio.file.Files.createTempDirectory("plan_wh2").toString, spark)
     val o = spark.read.parquet(s"$dir/orders.parquet")
     val t = wh.createTable("o", Schema.fromSpark(o.schema))
     t.append(o)
     t.deletePositional("o_orderkey <= 100")
-    val plan = planOf(t.scan.toDF)
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      plan.linesIterator.filter(l => l.contains("Join")).mkString("\n"))
+    assert(t.scan.planFiles().exists(_.deletes.nonEmpty))
+    val df = t.scan.toDF
+    val plan = planOf(df)
+    // deletes apply inside the scan's reader: no join, no shuffle
+    assert(!plan.contains("Exchange") && !plan.contains("Join"), plan)
+    assert(df.count() === o.filter("o_orderkey > 100").count())
   }
 
   test("day-partitioned range filter folds residuals to metadata-only") {

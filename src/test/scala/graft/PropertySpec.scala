@@ -388,20 +388,16 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("uuid fixed[16] Spark-side normalization agrees with the JVM codec") {
-    import org.apache.spark.sql.functions._
-    // UuidCompat's hex/substring expression and Conversions.fromBytes are
-    // two independent decoders of the same 16-byte layout — random bits
-    // must agree (including bytes that are not valid UTF-8)
+    // the scan reader's hex rendering (ParquetShape) and
+    // Conversions.fromBytes are two independent decoders of the same
+    // 16-byte layout — random bits must agree (including bytes that are
+    // not valid UTF-8)
+    val render = graft.spark.ParquetShape.fixOf(IUUID).get
     forAllSampled(Gen.zip(Gen.long, Gen.long), 60) { case (hi, lo) =>
       val u = new java.util.UUID(hi, lo)
       val bytes = Conversions.toBytes(IUUID, u.toString)
       assert(Conversions.fromBytes(IUUID, bytes) === u.toString)
-      val df = spark.createDataFrame(
-        java.util.List.of(Row(bytes)),
-        StructType(Seq(StructField("u", BinaryType))))
-      val got = df.select(UuidCompat.convert(col("u"), IUUID).as("u"))
-        .head.getString(0)
-      assert(got === u.toString)
+      assert(render(bytes).toString === u.toString)
     }
   }
 

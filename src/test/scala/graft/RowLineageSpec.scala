@@ -279,12 +279,11 @@ class RowLineageSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("path dict serves partition values containing % and + (URI-encoding worst case)") {
-    // r14: __file comes from the broadcast path dict (PathDict) keyed by
-    // the driver-PREDICTED _metadata.file_path; a prediction mismatch
-    // raises loudly instead of silently dropping rows, so this pin covers
-    // the nastiest encodings in one partition directory: literal '%'
+    // the reader stamps each row with its task's canonical path and its
+    // row position, and a DV is keyed by that path: this pin covers the
+    // nastiest encodings in one partition directory, literal '%'
     // (URI-escapes to %25) and literal '+' (stays literal in URI paths
-    // but url_decode would eat it — the old per-row fallback's edge)
+    // but url_decode would eat it)
     val schema = Schema.fromSpark(orders.schema)
     val tagged = orders.limit(200).withColumn("o_orderpriority",
       concat(lit("p"), col("o_orderkey") % 2, lit("% +x")))
@@ -301,30 +300,6 @@ class RowLineageSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t1.scan.toDF.count() === 199,
       "DV delete must land inside the %-and-+ partition")
     assert(t1.scan.toDFWithLineage.count() === 199)
-  }
-
-  test("a path-dict miss raises loudly — never a silent row drop") {
-    // the guard is an assert_true FILTER; this pin exists because the
-    // optimizer is allowed to move it (e.g. into a join condition), and
-    // any move that lets a miss row pass through null-extended would
-    // silently drop it downstream — the exact corruption the guard
-    // prevents. Drive a real file through a dict built for a DIFFERENT
-    // path and require the typed error, not an empty result.
-    val dir = java.nio.file.Files.createTempDirectory("pdmiss").toString
-    orders.limit(10).write.parquet(s"$dir/real")
-    val realFile = new java.io.File(s"$dir/real").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
-    val base = spark.read.parquet(realFile)
-      .select(col("*"),
-        col("_metadata.file_path").as("__rawfile"),
-        col("_metadata.row_index").as("__pos"))
-    val joined = graft.table.PathDict.join(
-      base, spark, Seq(s"$dir/not-the-file.parquet"), as = "__file")
-    val e = intercept[Exception](joined.count())
-    def msgs(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
-    assert(msgs(e).exists(m => m != null && m.contains("path-dict miss")),
-      s"expected a loud path-dict miss, got: ${e.getMessage}")
   }
 
   test("upsert preserves survivor ids, keeps updated rows' ids with a new seq") {
