@@ -5,11 +5,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{GroupType, MessageType, Type => PType}
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table => SparkTable, TableCapability, TableProvider}
@@ -2109,22 +2107,19 @@ object GraftFilters {
   }
 }
 
-/** A delete source applicable to one data file, resolved EXECUTOR-side by
-  * the partition reader. `contentOffset >= 0` marks a v3 deletion-vector
-  * blob inside a puffin file (ranged read); `-1` marks a parquet
-  * position-delete file (filtered to this data file while reading).
-  * `canonicalPaths` = the library wrote this delete file, so its stored
-  * file_path values are exactly `PathUtil.canon` forms — a parquet-level
-  * equality filter is then safe; foreign delete files are streamed in full
-  * and canon-compared per record (an arbitrary stored path form cannot be
-  * matched byte-wise without risking wrongly-pruned delete rows). */
+/** A delete source applicable to one data file, resolved EXECUTOR-side
+  * through the [[DeleteIndex]]. `contentOffset >= 0` marks a v3
+  * deletion-vector blob inside a puffin file (ranged read); `-1` marks a
+  * parquet position-delete file. `fileSize` is the manifest's
+  * `file_size_in_bytes` of the delete (or puffin) file: with the path it
+  * names one immutable file. */
 final case class DeleteFileRef(path: String, contentOffset: Long, contentSize: Long,
-    canonicalPaths: Boolean = false)
+    fileSize: Long)
 
 /** An equality-delete file applicable to one data file (already
   * sequence-filtered by the planner: it only ships with data files
   * strictly older than the delete). `ids` are the equality field ids. */
-final case class EqDeleteRef(path: String, ids: Array[Int])
+final case class EqDeleteRef(path: String, fileSize: Long, ids: Array[Int])
 
 final case class GraftInputPartition(
     filePath: String,
@@ -2148,12 +2143,6 @@ final case class GraftInputPartition(
       * those fields may be absent from the pruned read schema but must
       * still be read from the data file to apply the deletes. */
     eqSchemaJson: String = "",
-    /** PER-PARTITION: the file is library-written (field-id-bearing), so a
-      * row reader may drive the vectorized parquet decoder with id-keyed
-      * projection. Unlike `columnar` this may vary across partitions —
-      * every row-mode reader emits InternalRow regardless of how it
-      * decodes, so Spark's no-mixing rule is untouched. */
-    idBearing: Boolean = false,
     /** data-file format ("PARQUET" | "ORC") — selects the reader. */
     fileFormat: String = "PARQUET",
     /** byte range of the file this partition reads (row groups whose
@@ -2244,11 +2233,6 @@ object GraftScan {
     private lazy val mappedReadJson = json(mapped(readSchema, mapping))
     private lazy val mappedEqJson =
       if (eqSchema.fields.isEmpty) "" else json(mapped(eqSchema, mapping))
-    // fixed16 uuid tables read through the Group-API row reader: it
-    // decodes FLBA(16) uuids without a binary detour
-    private val uuidFixed16 =
-      table.metadata.properties.get("write.uuid.fixed16").contains("true") &&
-        readSchema.fields.exists(_.fieldType == IUUID)
     // row groups prune only on columns whose stored values ARE the public
     // ones: not uuid / ns (rewritten after decode), not the lineage pair
     // (coalesced with inheritance), not `unknown` (never stored)
@@ -2272,7 +2256,7 @@ object GraftScan {
     /** library-written parquet: field ids drive the vectorized decoder,
       * the file may split and serve columnar batches */
     def parquetOwn(f: graft.meta.DataFile): Boolean =
-      f.fileFormat.toUpperCase == "PARQUET" && !uuidFixed16 && own(f)
+      f.fileFormat.toUpperCase == "PARQUET" && own(f)
 
     def partition(t: graft.table.FileScanTask, limit: Long,
         columnar: Boolean): GraftInputPartition = {
@@ -2296,14 +2280,14 @@ object GraftScan {
           DeleteFileRef(f.filePath,
             f.contentOffset.getOrElse(throw new IllegalStateException(
               s"Deletion vector ${f.filePath} lacks content-offset")),
-            f.contentSizeInBytes.getOrElse(f.fileSizeInBytes))
-        else DeleteFileRef(f.filePath, -1L, -1L,
-          canonicalPaths = graft.core.PathUtil.underDataRoot(table.location, f.filePath))
+            f.contentSizeInBytes.getOrElse(f.fileSizeInBytes), f.fileSizeInBytes)
+        else DeleteFileRef(f.filePath, -1L, -1L, f.fileSizeInBytes)
       }.toArray
-      val eqs = eqFiles.map(f => EqDeleteRef(f.filePath, f.equalityIds.toArray)).toArray
+      val eqs = eqFiles.map(f =>
+        EqDeleteRef(f.filePath, f.fileSizeInBytes, f.equalityIds.toArray)).toArray
       GraftInputPartition(t.file.filePath, if (byName) mappedReadJson else readJson,
         dels, limit, columnar, eqs, if (byName) mappedEqJson else eqJson,
-        idBearing = parquetOwn(t.file), fileFormat = fmt, byName = byName,
+        fileFormat = fmt, byName = byName,
         filters = if (fmt == "PARQUET") usable else Array.empty, filterIds = filterIds)
     }
   }
@@ -2639,7 +2623,7 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
     // in its range, so a split starting mid-file would report positions
     // relative to the split — and the delta operations would then delete
     // the WRONG rows by (file, pos)
-    if (!(base.deletes.isEmpty && base.eqDeletes.isEmpty && base.idBearing &&
+    if (!(base.deletes.isEmpty && base.eqDeletes.isEmpty && !base.byName &&
         !base.emitPos && !base.emitLineage &&
         base.fileFormat == "PARQUET" && size > 2 * target && offs.sizeIs > 1))
       return Seq((base, size))
@@ -2686,7 +2670,7 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
     new GraftReaderFactory(GraftReaderFactory.sessionConfEntries(table.spark))
 
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new GraftBytesReadMetric)
+    ScanMetrics.supported
 
   /** Streaming face: micro-batches of committed APPENDS; offsets are
     * snapshot ids (SURVEY §2.J — each micro-batch = one snapshot range,
@@ -2835,7 +2819,7 @@ object GraftReaderFactory {
     graft.meta.Io.confEntries(spark)
 }
 
-class GraftReaderFactory(confEntries: Array[(String, String)] = Array.empty)
+class GraftReaderFactory(confEntries: Array[(String, String)])
     extends PartitionReaderFactory {
 
   private def buildConf(): Configuration = graft.meta.Io.confFrom(confEntries)
@@ -2856,26 +2840,18 @@ class GraftReaderFactory(confEntries: Array[(String, String)] = Array.empty)
       firstRowId = p.firstRowId, dataSeq = p.dataSeq)
   }
 
-  private def singleRowReaderInner(p: GraftInputPartition): PartitionReader[InternalRow] = {
+  private def singleRowReaderInner(p: GraftInputPartition): PartitionReader[InternalRow] =
     // parquet decodes through the VECTORIZED reader even in row mode —
     // deletes are applied as per-row position skips / key probes over
-    // batch-decoded rows, ~5-10× faster per byte than the Group-API
-    // materialization; library-written files resolve by field id,
-    // add_files files by the name mapping. Only library-written files of
-    // write.uuid.fixed16 tables keep the Group reader. All emit
-    // InternalRow, so they may mix freely within one scan.
-    if (p.fileFormat == "ORC") {
-      // deletes apply regardless of data format (ref io/pyarrow.py:1629):
-      // the ORC reader resolves position skips / equality probes with the
-      // same executor-side machinery as the parquet readers
+    // batch-decoded rows; library-written files resolve by field id,
+    // add_files files by the name mapping. Deletes apply regardless of
+    // data format (ref io/pyarrow.py:1629): the ORC reader resolves them
+    // through the same DeleteIndex. Both emit InternalRow, so they may
+    // mix freely within one scan.
+    if (p.fileFormat == "ORC")
       new GraftOrcPartitionReader(p.filePath, p.readSchemaJson, p.limit, buildConf(),
         p.deletes, p.eqDeletes, p.eqSchemaJson)
-    } else if (p.idBearing || p.byName)
-      new GraftVectorizedRowReader(p, buildConf())
-    else
-      new GraftPartitionReader(p.filePath, p.readSchemaJson, p.deletes, p.limit, buildConf(),
-        p.eqDeletes, p.eqSchemaJson)
-  }
+    else new GraftVectorizedRowReader(p, buildConf())
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     unwrap(partition) match {
@@ -2929,17 +2905,19 @@ class GraftChainedRowReader(parts: Seq[GraftInputPartition],
 }
 
 /** Task metrics of readers run back to back: those of the closed
-  * readers plus the open one's. */
+  * readers plus the open one's, summed by name. */
 private[spark] final class GraftChainedMetrics {
-  private var closedBytes = 0L
-  private def bytesOf(r: PartitionReader[_]): Long =
-    if (r == null) 0L
-    else r.currentMetricsValues().filter(_.name() == ParquetVectorized.BytesReadMetric)
-      .map(_.value()).sum
-  def retire(r: PartitionReader[_]): Unit = closedBytes += bytesOf(r)
+  private val closed = scala.collection.mutable.Map[String, Long]()
+  private def add(to: scala.collection.mutable.Map[String, Long], r: PartitionReader[_]): Unit =
+    if (r != null) r.currentMetricsValues().foreach(m =>
+      to(m.name()) = to.getOrElse(m.name(), 0L) + m.value())
+  def retire(r: PartitionReader[_]): Unit = add(closed, r)
   def current(r: PartitionReader[_])
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    ParquetVectorized.bytesRead(closedBytes + bytesOf(r))
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    val now = closed.clone()
+    add(now, r)
+    now.iterator.map { case (n, v) => ScanMetrics.metric(n, v) }.toArray
+  }
 }
 
 /** Columnar twin of [[GraftChainedRowReader]]: per-file vectorized readers
@@ -2983,23 +2961,48 @@ object ParquetVectorized {
   val RowIndexColumn: String =
     org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
       .ROW_INDEX_TEMPORARY_COLUMN_NAME
-
-  /** Task-metric name of the parquet bytes a scan's readers read. */
-  val BytesReadMetric = "parquetBytesRead"
-
-  def bytesRead(n: Long): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(new org.apache.spark.sql.connector.metric.CustomTaskMetric {
-      override def name(): String = BytesReadMetric
-      override def value(): Long = n
-    })
 }
 
-/** The sum over tasks of the parquet bytes (footers, dictionaries, pages)
-  * a scan's readers read — what row-group pruning saves. */
-class GraftBytesReadMetric
-    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
-  override def name(): String = ParquetVectorized.BytesReadMetric
+/** A scan's custom task metrics, each summed over its tasks: the parquet
+  * bytes (footers, dictionaries, pages) its readers read from data files
+  * — what row-group pruning saves — and the delete sources its readers
+  * decoded or found already decoded in the [[DeleteIndex]]. */
+object ScanMetrics {
+  val BytesRead = "parquetBytesRead"
+  val DeleteFilesDecoded = "deleteFilesDecoded"
+  val DeleteIndexHits = "deleteIndexHits"
+
+  def supported: Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new GraftBytesReadMetric, new GraftDeleteFilesDecodedMetric,
+      new GraftDeleteIndexHitsMetric)
+
+  def metric(n: String, v: Long): org.apache.spark.sql.connector.metric.CustomTaskMetric =
+    new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+      override def name(): String = n
+      override def value(): Long = v
+    }
+
+  def values(bytesRead: Long, deletes: DeleteIndex.Tally = null)
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    if (deletes == null) Array(metric(BytesRead, bytesRead))
+    else Array(metric(BytesRead, bytesRead), metric(DeleteFilesDecoded, deletes.decoded),
+      metric(DeleteIndexHits, deletes.hits))
+}
+
+class GraftBytesReadMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = ScanMetrics.BytesRead
   override def description(): String = "parquet bytes read"
+}
+
+class GraftDeleteFilesDecodedMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = ScanMetrics.DeleteFilesDecoded
+  override def description(): String = "delete files decoded"
+}
+
+class GraftDeleteIndexHitsMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = ScanMetrics.DeleteIndexHits
+  override def description(): String = "delete index hits"
 }
 
 /** One parquet data file, opened once: its footer (the row groups of the
@@ -3298,7 +3301,7 @@ class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
     p.byName, shape.predicate)
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    ParquetVectorized.bytesRead(file.bytesRead)
+    ScanMetrics.values(file.bytesRead)
 
   private var emitted: Long = 0L
 
@@ -3314,169 +3317,6 @@ class GraftColumnarReader(p: GraftInputPartition, conf: Configuration)
   }
 
   override def close(): Unit = reader.close()
-}
-
-/** Row-by-row parquet reader over the example Group API, projecting file
-  * columns by FIELD-ID against the requested engine schema (rename-safe;
-  * name fallback for id-less files). Position deletes (parquet files and
-  * v3 deletion-vector blobs) AND equality deletes are resolved HERE, in
-  * the executor task — positions as a sorted row-index skip, equality keys
-  * as a per-file hash-set probe (the planner only ships a delete with data
-  * files it applies to, so sequence scoping is already done). The Group
-  * reader serves the library-written files of write.uuid.fixed16 tables;
-  * every other parquet file reads through GraftVectorizedRowReader below.
-  * Its companion holds the delete resolution all readers share. */
-object GraftPartitionReader {
-  /** Per-JVM cache of equality-delete key sets, keyed by (immutable delete
-    * file path, equality ids). Soft values: reclaimable under pressure. */
-  private val eqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Seq[Int]),
-      java.lang.ref.SoftReference[java.util.HashSet[Seq[Any]]]]()
-
-  private[spark] def eqKeyCache(path: String, ids: Array[Int],
-      load: () => java.util.HashSet[Seq[Any]]): java.util.HashSet[Seq[Any]] = {
-    val key = (path, ids.toSeq)
-    val cached = Option(eqCache.get(key)).flatMap(r => Option(r.get()))
-    cached.getOrElse {
-      val set = load()
-      eqCache.put(key, new java.lang.ref.SoftReference(set))
-      set
-    }
-  }
-
-  /** Sorted, deduped positions deleted from the data file at `path`.
-    * Parquet position-delete files carry (file_path, pos) rows for possibly
-    * many data files — filter to ours while streaming; DV blobs are
-    * per-file by construction (ref _read_deletes io/pyarrow.py:1130). */
-  private[spark] def resolvePositions(path: String, deletes: Array[DeleteFileRef],
-      conf: Configuration): Array[Long] = {
-    if (deletes.isEmpty) return Array.empty[Long]
-    val me = PathUtil.canon(path)
-    val buf = scala.collection.mutable.ArrayBuffer[Long]()
-    deletes.foreach { d =>
-      if (d.contentOffset >= 0L) {
-        buf ++= graft.meta.DeletionVector.readPositions(
-          d.path, d.contentOffset, d.contentSize, conf)
-      } else {
-        // a shared delete file is opened by EVERY covered data file's
-        // reader. For LIBRARY-written delete files the stored file_path
-        // is exactly the canon form, so an equality filter is safe and
-        // prunes to this file's row groups (delete files are sorted by
-        // (file_path, pos), making row-group stats effective). Foreign
-        // delete files may store any canon-equivalent path form — a
-        // byte-wise filter could wrongly drop delete rows (resurrecting
-        // deleted data), so they are streamed in full and canon-compared.
-        val builder = ParquetReader.builder(new GroupReadSupport(), new Path(d.path))
-          .withConf(conf)
-        val r = (if (d.canonicalPaths) {
-          import org.apache.parquet.filter2.predicate.FilterApi
-          import org.apache.parquet.io.api.Binary
-          builder.withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(
-            FilterApi.eq(FilterApi.binaryColumn("file_path"), Binary.fromString(me))))
-        } else builder).build()
-        try {
-          var g = r.read()
-          while (g != null) {
-            if (PathUtil.canon(g.getString("file_path", 0)) == me)
-              buf += g.getLong("pos", 0)
-            g = r.read()
-          }
-        } finally r.close()
-      }
-    }
-    val arr = buf.distinct.toArray
-    java.util.Arrays.sort(arr)
-    arr
-  }
-
-  private[spark] def footerSchema(p: String, conf: Configuration): MessageType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p), conf))
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
-
-  /** id-first, name-fallback resolution of an engine field to a file
-    * column (rename safety; id-less external files match by name). */
-  private[spark] def resolveIn(mt: MessageType, id: Int, name: String): Option[String] = {
-    val byId = mt.getFields.asScala.find(ft =>
-      ft.getId != null && ft.getId.intValue() == id)
-    val byName = mt.getFields.asScala.find(_.getName == name)
-    byId.orElse(byName).map(_.getName)
-  }
-
-  /** Decimal physical layouts vary by writer: Spark emits INT32/INT64 for
-    * precision <= 9/18, binary otherwise; other engines use fixed. */
-  private[spark] def decimalOf(g: Group, idx: Int, s: Int): java.math.BigDecimal = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-      case INT32 => java.math.BigDecimal.valueOf(g.getInteger(idx, 0).toLong, s)
-      case INT64 => java.math.BigDecimal.valueOf(g.getLong(idx, 0), s)
-      case _ =>
-        new java.math.BigDecimal(new java.math.BigInteger(g.getBinary(idx, 0).getBytes), s)
-    }
-  }
-
-  /** Plain JVM values (String, boxed primitives, BigDecimal, byte Seq) for
-    * equality-delete key tuples — the delete-file side and both data-row
-    * readers convert through the same forms, so tuple equality is exact. */
-  private[spark] def convertPlain(g: Group, idx: Int, t: IceType): Any = t match {
-    case IBoolean => g.getBoolean(idx, 0)
-    case IInt | IDate => g.getInteger(idx, 0)
-    case ILong | ITime | ITimestamp | ITimestamptz => g.getLong(idx, 0)
-    case IFloat => g.getFloat(idx, 0)
-    case IDouble => g.getDouble(idx, 0)
-    case IString => g.getString(idx, 0)
-    case IUUID =>
-      val b = g.getBinary(idx, 0).getBytes
-      if (b.length == 16) graft.core.Conversions.fromBytes(IUUID, b).toString
-      else new String(b, java.nio.charset.StandardCharsets.UTF_8)
-    case IBinary | IFixed(_) => g.getBinary(idx, 0).getBytes.toSeq
-    case IDecimal(_, s) => decimalOf(g, idx, s)
-    case other => throw new UnsupportedOperationException(s"DSv2 eq-delete key: $other")
-  }
-
-  /** One hash set of key tuples from one equality-delete file: Iceberg
-    * equality semantics are null-safe (a null key deletes null rows), which
-    * Seq equality gives directly. Delete files are small keyed extracts and
-    * IMMUTABLE (uuid-named), so callers cache per (file, ids) via
-    * eqKeyCache. */
-  private[spark] def loadEqKeys(dp: String, ids: Array[Int], eqSchema: Schema,
-      conf: Configuration): java.util.HashSet[Seq[Any]] = {
-    val set = new java.util.HashSet[Seq[Any]]()
-    val dmt = footerSchema(dp, conf)
-    val colNames = ids.map(id => resolveIn(dmt, id, eqSchema.byId(id).name))
-    val keepNames = colNames.flatten.toSet
-    val kept = dmt.getFields.asScala.filter(ft => keepNames.contains(ft.getName))
-    val rconf = new Configuration(conf)
-    rconf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      new MessageType(dmt.getName, kept.asJava).toString)
-    val r = ParquetReader.builder(new GroupReadSupport(), new Path(dp))
-      .withConf(rconf).build()
-    try {
-      var g = r.read()
-      while (g != null) {
-        val gt = g.getType
-        val key: Seq[Any] = colNames.zip(ids).map { case (n, id) =>
-          n.map(gt.getFieldIndex).filter(g.getFieldRepetitionCount(_) > 0)
-            .map(i => convertPlain(g, i, eqSchema.byId(id).fieldType)).orNull
-        }.toSeq
-        set.add(key)
-        g = r.read()
-      }
-    } finally r.close()
-    set
-  }
-
-  /** All applicable equality-delete key sets, one per distinct id list. */
-  private[spark] def eqKeySetsOf(eqDeletes: Array[EqDeleteRef], eqSchema: Schema,
-      conf: Configuration): Seq[(Array[Int], java.util.HashSet[Seq[Any]])] =
-    eqDeletes.groupBy(_.ids.toSeq).toSeq.map { case (idSeq, refs) =>
-      val ids = idSeq.toArray
-      val set = new java.util.HashSet[Seq[Any]]()
-      refs.map(_.path).distinct.foreach { dp =>
-        set.addAll(eqKeyCache(dp, ids, () => loadEqKeys(dp, ids, eqSchema, conf)))
-      }
-      (ids, set)
-    }
 }
 
 /** Row readers that can report the absolute file position of the row the
@@ -3542,136 +3382,6 @@ class GraftFileAppendReader(inner: PartitionReader[InternalRow],
   override def close(): Unit = inner.close()
 }
 
-class GraftPartitionReader(path: String, schemaJson: String,
-    deletes: Array[DeleteFileRef] = Array.empty, limit: Long = -1L,
-    conf: Configuration = new Configuration(),
-    eqDeletes: Array[EqDeleteRef] = Array.empty, eqSchemaJson: String = "")
-    extends PartitionReader[InternalRow] with HasRowPosition {
-
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  private val schema: Schema = MetadataJson.schemaFromJson(mapper.readTree(schemaJson))
-  private val eqSchema: Schema =
-    if (eqDeletes.isEmpty) Schema(Nil)
-    else MetadataJson.schemaFromJson(mapper.readTree(eqSchemaJson))
-
-  import GraftPartitionReader.{convertPlain, decimalOf, resolveIn}
-
-  private val deletedPositions: Array[Long] =
-    GraftPartitionReader.resolvePositions(path, deletes, conf)
-
-  // project the FILE schema down to requested ids (or names)
-  private val fileSchema: MessageType = GraftPartitionReader.footerSchema(path, conf)
-  private case class FieldPlan(outIdx: Int, fileName: Option[String], t: IceType)
-  private val plans: Seq[FieldPlan] = schema.fields.zipWithIndex.map { case (f, i) =>
-    FieldPlan(i, resolveIn(fileSchema, f.id, f.name), f.fieldType)
-  }
-
-  /** equality-delete key fields resolved against THIS data file — they are
-    * read (but not emitted) even when pruned out of the requested schema. */
-  private case class EqField(fileName: Option[String], t: IceType)
-  private val eqFieldById: Map[Int, EqField] =
-    eqDeletes.flatMap(_.ids).distinct.toSeq.map { id =>
-      val f = eqSchema.byId(id)
-      id -> EqField(resolveIn(fileSchema, id, f.name), f.fieldType)
-    }.toMap
-
-  private val projection: MessageType = {
-    val wanted = plans.flatMap(_.fileName).toSet ++
-      eqFieldById.values.flatMap(_.fileName)
-    val kept = fileSchema.getFields.asScala.filter(ft => wanted.contains(ft.getName))
-    // COUNT-style scans prune to zero columns; parquet still needs one
-    // column to drive row iteration (rows are emitted empty)
-    val effective = if (kept.nonEmpty) kept else fileSchema.getFields.asScala.take(1)
-    new MessageType(fileSchema.getName, effective.asJava)
-  }
-
-  /** Key sets per distinct equality-id list — cached per executor JVM: N
-    * data-file readers sharing one (immutable, uuid-named) delete file
-    * build its set once, not N times; SoftReferences let the GC reclaim
-    * sets under memory pressure. */
-  private val eqKeySets: Seq[(Array[Int], java.util.HashSet[Seq[Any]])] =
-    GraftPartitionReader.eqKeySetsOf(eqDeletes, eqSchema, conf)
-
-  /** Row's key tuple ∈ any applicable delete set → row is deleted. */
-  private def isEqDeleted(g: Group): Boolean = eqKeySets.nonEmpty && {
-    val gt = g.getType
-    eqKeySets.exists { case (ids, set) =>
-      val key: Seq[Any] = ids.map { id =>
-        val ef = eqFieldById(id)
-        ef.fileName.map(gt.getFieldIndex).filter(g.getFieldRepetitionCount(_) > 0)
-          .map(i => convertPlain(g, i, ef.t)).orNull
-      }.toSeq
-      set.contains(key)
-    }
-  }
-
-  private val reader: ParquetReader[Group] = {
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      projection.toString)
-    ParquetReader.builder(new GroupReadSupport(), new Path(path)).withConf(conf).build()
-  }
-
-  private var current: Group = _
-  private var rowIdx: Long = -1L
-  private var emitted: Long = 0L
-  private var delPtr: Int = 0
-
-  override def currentPosition: Long = rowIdx
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    while (true) {
-      current = reader.read()
-      if (current == null) return false
-      rowIdx += 1
-      // skip position-deleted rows (sorted walk, O(1) amortized)
-      while (delPtr < deletedPositions.length && deletedPositions(delPtr) < rowIdx) delPtr += 1
-      if ((delPtr >= deletedPositions.length || deletedPositions(delPtr) != rowIdx) &&
-          !isEqDeleted(current)) {
-        emitted += 1
-        return true
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = {
-    val row = new GenericInternalRow(plans.size)
-    val gt: GroupType = current.getType
-    plans.foreach { p =>
-      p.fileName match {
-        case None => row.update(p.outIdx, null)
-        case Some(n) =>
-          val idx = gt.getFieldIndex(n)
-          if (current.getFieldRepetitionCount(idx) == 0) row.update(p.outIdx, null)
-          else row.update(p.outIdx, convert(current, idx, p.t))
-      }
-    }
-    row
-  }
-
-  private def convert(g: Group, idx: Int, t: IceType): Any = t match {
-    case IBoolean => g.getBoolean(idx, 0)
-    case IInt | IDate => g.getInteger(idx, 0)
-    case ILong | ITime | ITimestamp | ITimestamptz => g.getLong(idx, 0)
-    case IFloat => g.getFloat(idx, 0)
-    case IDouble => g.getDouble(idx, 0)
-    case IString => UTF8String.fromString(g.getString(idx, 0))
-    case IUUID =>
-      // fixed[16] (other engines) vs our canonical strings — same
-      // normalization the library scan applies (UuidCompat)
-      val b = g.getBinary(idx, 0).getBytes
-      UTF8String.fromString(
-        if (b.length == 16) graft.core.Conversions.fromBytes(IUUID, b).toString
-        else new String(b, java.nio.charset.StandardCharsets.UTF_8))
-    case IBinary | IFixed(_) => g.getBinary(idx, 0).getBytes
-    case IDecimal(p, s) => Decimal(decimalOf(g, idx, s), p, s)
-    case other => throw new UnsupportedOperationException(s"DSv2 reader: $other")
-  }
-
-  override def close(): Unit = reader.close()
-}
-
 object GraftVectorizedRowReader {
   /** Test seam: readers opened in this JVM (local mode shares the JVM, so
     * specs can assert the vectorized path is actually taken). */
@@ -3679,14 +3389,15 @@ object GraftVectorizedRowReader {
 }
 
 /** Row reader over Spark's VECTORIZED parquet decoder, for every parquet
-  * file but the fixed16-uuid library files: field ids resolve
-  * library-written files, the name mapping resolves add_files files.
-  * Deletes are applied per row against batch-decoded rows — a sorted
-  * position skip plus equality hash-set probes (VERDICT r5 W3: the
-  * Group-API row loop was ~5-10× slower per byte than this path). Row
-  * positions are counted sequentially, or — when a pushed filter may skip
-  * row groups — taken from Spark's row-index column. Emits InternalRow,
-  * so it mixes freely with the other row readers in one row-mode scan. */
+  * file: field ids resolve library-written files, the name mapping
+  * resolves add_files files. Deletes are applied per row against
+  * batch-decoded rows — a sorted position skip plus equality hash-set
+  * probes, both looked up in the per-JVM [[DeleteIndex]] (the planner only
+  * ships a delete with data files it applies to, so sequence scoping is
+  * already done). Row positions are counted sequentially, or — when a
+  * pushed filter may skip row groups — taken from Spark's row-index
+  * column. Emits InternalRow, so it mixes freely with the ORC reader in
+  * one row-mode scan. */
 class GraftVectorizedRowReader(p: GraftInputPartition, conf: Configuration)
     extends PartitionReader[InternalRow] with HasRowPosition {
 
@@ -3719,11 +3430,15 @@ class GraftVectorizedRowReader(p: GraftInputPartition, conf: Configuration)
   private val ordinalById: Map[Int, Int] =
     readFields.zipWithIndex.map { case (f, i) => f.id -> i }.toMap
 
+  private val deleteTally = new DeleteIndex.Tally
   private val deletedPositions: Array[Long] =
-    GraftPartitionReader.resolvePositions(p.filePath, p.deletes, conf)
+    DeleteIndex.positions(p.filePath, p.deletes, conf, deleteTally)
 
-  private val eqKeySets: Seq[(Array[Int], java.util.HashSet[Seq[Any]])] =
-    GraftPartitionReader.eqKeySetsOf(p.eqDeletes, eqSchema, conf)
+  /** per key set: its ids, the read ordinal and type of each key field */
+  private val eqProbes: Seq[(Array[Int], Array[IceType], java.util.Set[Seq[Any]])] =
+    DeleteIndex.eqKeySets(p.eqDeletes, eqSchema, conf, deleteTally).map { case (ids, set) =>
+      (ids.map(id => ordinalById.getOrElse(id, -1)), ids.map(eqSchema.byId(_).fieldType), set)
+    }
 
   // positions matter for deletes and the _pos / lineage columns; once a
   // filter may skip row groups, counting rows no longer yields them
@@ -3737,7 +3452,7 @@ class GraftVectorizedRowReader(p: GraftInputPartition, conf: Configuration)
   private val reader = file.open(readSparkSchema, rowMode = true, p.byName, shape.predicate)
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    ParquetVectorized.bytesRead(file.bytesRead)
+    ScanMetrics.values(file.bytesRead, deleteTally)
 
   /** Strips appended eq-key / row-index columns before emitting.
     * Codegen'd unsafe projection over the leading ordinals; identity when
@@ -3750,33 +3465,9 @@ class GraftVectorizedRowReader(p: GraftInputPartition, conf: Configuration)
           i, readSparkSchema.fields(i).dataType, readSparkSchema.fields(i).nullable)
       })
 
-  /** Plain JVM key tuple from a decoded row — same value forms as the
-    * delete-file side (GraftPartitionReader.convertPlain), so tuple
-    * equality is exact. uuid leaves decode as binary and compare as their
-    * canonical strings. */
-  private def plainValue(row: InternalRow, ord: Int, t: IceType): Any = {
-    if (row.isNullAt(ord)) return null
-    t match {
-      case IBoolean => row.getBoolean(ord)
-      case IInt | IDate => row.getInt(ord)
-      case ILong | ITime | ITimestamp | ITimestamptz => row.getLong(ord)
-      case IFloat => row.getFloat(ord)
-      case IDouble => row.getDouble(ord)
-      case IString => row.getUTF8String(ord).toString
-      case IUUID => ParquetShape.fixOf(IUUID).get(row.getBinary(ord)).toString
-      case IBinary | IFixed(_) => row.getBinary(ord).toSeq
-      case IDecimal(p, s) => row.getDecimal(ord, p, s).toJavaBigDecimal
-      case other => throw new UnsupportedOperationException(s"DSv2 eq-delete key: $other")
-    }
-  }
-
-  private def isEqDeleted(row: InternalRow): Boolean = eqKeySets.nonEmpty &&
-    eqKeySets.exists { case (ids, set) =>
-      val key: Seq[Any] = ids.map { id =>
-        ordinalById.get(id)
-          .map(ord => plainValue(row, ord, eqSchema.byId(id).fieldType)).orNull
-      }.toSeq
-      set.contains(key)
+  private def isEqDeleted(row: InternalRow): Boolean =
+    eqProbes.exists { case (ords, types, set) =>
+      set.contains(DeleteIndex.keyOf(row, ords, types))
     }
 
   private var current: InternalRow = _

@@ -14,8 +14,8 @@ import graft.core._
 import graft.meta.MetadataJson
 
 /** DSv2 row reader for ORC data files (the reference reads ORC:
-  * io/pyarrow.py:1119–1125). Resolution mirrors the parquet Group-API
-  * fallback: `iceberg.id` type attributes first (ORC_FIELD_ID_KEY
+  * io/pyarrow.py:1119–1125). Columns resolve by
+  * `iceberg.id` type attributes first (ORC_FIELD_ID_KEY
   * io/pyarrow.py:740), then the (name-mapped) name, at every nesting
   * level of structs, lists and maps; unresolved fields null-fill.
   * Decoding drives ORC's own vectorized RecordReader with a column
@@ -29,12 +29,12 @@ import graft.meta.MetadataJson
   * position deletes / deletion vectors resolve to a sorted skip array
   * walked against the absolute row index (ORC row iteration is strictly
   * sequential from row 0, so batch-base + in-batch offset IS the spec's
-  * file position), and equality-delete key tuples probe the same shared
-  * per-executor key sets as the parquet readers — both sides convert
-  * through GraftPartitionReader.convertPlain forms, so tuple equality is
-  * exact across formats. */
-class GraftOrcPartitionReader(path: String, schemaJson: String, limit: Long = -1L,
-    conf: Configuration = new Configuration(),
+  * file position), and equality-delete key tuples probe the same per-JVM
+  * [[DeleteIndex]] key sets as the parquet reader — both sides build
+  * plain JVM forms (DeleteIndex.keyOf), so tuple equality is exact across
+  * formats. */
+class GraftOrcPartitionReader(path: String, schemaJson: String, limit: Long,
+    conf: Configuration,
     deletes: Array[DeleteFileRef] = Array.empty,
     eqDeletes: Array[EqDeleteRef] = Array.empty, eqSchemaJson: String = "",
     emitPos: Boolean = false)
@@ -52,10 +52,12 @@ class GraftOrcPartitionReader(path: String, schemaJson: String, limit: Long = -1
   require(fileSchema.getCategory == TypeDescription.Category.STRUCT,
     s"ORC file $path has a non-struct root schema")
 
+  private val deleteTally = new DeleteIndex.Tally
+
   /** Sorted absolute row positions deleted by position files / DVs —
-    * the same executor-side resolution as the parquet row readers. */
+    * the same executor-side resolution as the parquet row reader. */
   private val deletedPositions: Array[Long] =
-    GraftPartitionReader.resolvePositions(path, deletes, conf)
+    DeleteIndex.positions(path, deletes, conf, deleteTally)
 
   /** (output index, root-child column index or None, type). */
   private case class FieldPlan(outIdx: Int, colIdx: Option[Int], t: IceType) {
@@ -98,10 +100,10 @@ class GraftOrcPartitionReader(path: String, schemaJson: String, limit: Long = -1
       id -> EqField(resolveCol(f.id, f.name), f.fieldType)
     }.toMap
 
-  /** Key sets per distinct equality-id list — shared per-executor cache
-    * with the parquet readers (delete files are immutable, uuid-named). */
-  private val eqKeySets: Seq[(Array[Int], java.util.HashSet[Seq[Any]])] =
-    GraftPartitionReader.eqKeySetsOf(eqDeletes, eqSchema, conf)
+  /** Key sets per distinct equality-id list, from the per-JVM index the
+    * parquet reader shares. */
+  private val eqKeySets: Seq[(Array[Int], java.util.Set[Seq[Any]])] =
+    DeleteIndex.eqKeySets(eqDeletes, eqSchema, conf, deleteTally)
 
   private val rows = {
     // decompress only the requested subtrees (count-style scans keep just
@@ -243,7 +245,7 @@ class GraftOrcPartitionReader(path: String, schemaJson: String, limit: Long = -1
     }
   }
 
-  /** Plain JVM forms matching GraftPartitionReader.convertPlain (String,
+  /** Plain JVM forms matching DeleteIndex.keyOf (String,
     * boxed primitives, BigDecimal, byte Seq) — eq-delete tuples from the
     * parquet-written delete files compare against these exactly. */
   private def convertPlainAt(v: ColumnVector, r: Int, t: IceType): Any = {
@@ -275,6 +277,9 @@ class GraftOrcPartitionReader(path: String, schemaJson: String, limit: Long = -1
           s"DSv2 ORC eq-delete key: $other over ${v.getClass.getSimpleName}")
     }
   }
+
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    ScanMetrics.values(0L, deleteTally)
 
   override def close(): Unit = { rows.close(); reader.close() }
 }

@@ -77,8 +77,7 @@ class DataSourceV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     val df = loadV2("o_v2_mor")
     val before = graft.spark.GraftVectorizedRowReader.opened.get()
     assert(df.count() === want.count())
-    // delete-bearing library files must still DECODE vectorized (row-mode
-    // batches), not fall back to the Group-API loop
+    // delete-bearing library files DECODE vectorized (row-mode batches)
     assert(graft.spark.GraftVectorizedRowReader.opened.get() > before,
       "expected the vectorized row reader for a delete-bearing library file")
     assert(df.filter(col("o_orderkey") <= 300).count() === 0)

@@ -80,9 +80,14 @@ class RemoteFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def v2(name: String) = spark.read.format("graft")
       .option("warehouse", warehouse).option("table", name).load()
     // o_remote carries position deletes → row reader resolves them with
-    // the factory-shipped session conf (knows the mockfs scheme)
+    // the factory-shipped session conf (knows the mockfs scheme); the
+    // test before this one decoded the same delete file, so drop it from
+    // the per-JVM index or this read would open nothing on mockfs
+    graft.spark.DeleteIndex.clear()
+    val decoded = graft.spark.DeleteIndex.decoded.get()
     assert(v2("o_remote").count() ===
       orders.filter(col("o_orderstatus") =!= "F").count())
+    assert(graft.spark.DeleteIndex.decoded.get() > decoded)
   }
 
   test("distributed planning ships the session conf to manifest readers") {

@@ -1,14 +1,17 @@
 #!/usr/bin/env python3
 """Local mimic of the driver's DuckDB-oracle compare.
 
-Usage: python3 tools/oracle_check.py <verify_out_dir> [sf_dir]
+Usage: python3 tools/oracle_check.py <verify_out_dir> [sf_dir] [--timeout SECONDS]
 
 Reads each <out>/<name>/ parquet (Spark result) and runs the matching
 SQL from <out>/oracle_sql.json in DuckDB over the same sf tables.
 Compares: schema (column names sorted), row count, and exact values
 (rows sorted by all columns). Reports per-query PASS/FAIL with diffs.
+A DuckDB query still running after --timeout seconds (default 600, 0 =
+no limit) is interrupted and reported as [TIMEOUT]; a timeout is never
+a pass, and any failure or timeout makes the exit status 1.
 """
-import sys, os, glob, json
+import argparse, sys, os, glob, json, threading
 import duckdb
 import numpy as np
 import pandas as pd
@@ -42,16 +45,43 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def run_oracle(con, sql, timeout):
+    """The query's result, or None when it ran past `timeout` seconds."""
+    fired = threading.Event()
+
+    def interrupt():
+        fired.set()
+        con.interrupt()
+
+    timer = threading.Timer(timeout, interrupt) if timeout > 0 else None
+    if timer:
+        timer.start()
+    try:
+        return con.execute(sql).df()
+    except Exception:
+        if fired.is_set():
+            return None
+        raise
+    finally:
+        if timer:
+            timer.cancel()
+
+
 def main():
-    out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/verify_out"
-    sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("out", nargs="?", default="/tmp/verify_out")
+    ap.add_argument("sf", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("--timeout", type=float, default=600,
+                    help="seconds one DuckDB query may run (0 = no limit)")
+    args = ap.parse_args()
+    out, sf = args.out, args.sf
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
-    n_pass = n_fail = n_skip = 0
+    n_pass = n_fail = n_skip = n_timeout = 0
     for name in sorted(os.listdir(out)):
         d = os.path.join(out, name)
         if not os.path.isdir(d):
@@ -64,9 +94,11 @@ def main():
             print(f"[SKIP] {name}: no oracle ({len(spark_df)} rows)"); n_skip += 1
             continue
         try:
-            duck_df = con.execute(oracle[name]).df()
+            duck_df = run_oracle(con, oracle[name], args.timeout)
         except Exception as e:
             print(f"[FAIL] {name}: oracle SQL error: {e}"); n_fail += 1; continue
+        if duck_df is None:
+            print(f"[TIMEOUT] {name}", flush=True); n_timeout += 1; continue
         a, b = normalize(spark_df), normalize(duck_df)
         if list(a.columns) != list(b.columns):
             print(f"[FAIL] {name}: columns spark={list(a.columns)} duck={list(b.columns)}")
@@ -89,9 +121,9 @@ def main():
         if bad:
             print(f"[FAIL] {name}: value diffs: {'; '.join(bad)}"); n_fail += 1
         else:
-            print(f"[PASS] {name} ({len(a)} rows)"); n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} rows-only")
-    sys.exit(1 if n_fail else 0)
+            print(f"[PASS] {name} ({len(a)} rows)", flush=True); n_pass += 1
+    print(f"\n{n_pass} pass, {n_fail} fail, {n_timeout} timeout, {n_skip} rows-only")
+    sys.exit(1 if n_fail or n_timeout else 0)
 
 
 if __name__ == "__main__":
