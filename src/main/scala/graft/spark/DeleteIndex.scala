@@ -9,11 +9,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.schema.MessageType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core._
+import graft.meta.{DataFile, Io}
 
 /** The delete sources every reader in this JVM has decoded, each decoded
   * once: a parquet position-delete file as canonical data path → sorted,
@@ -85,14 +87,54 @@ object DeleteIndex {
     if (deletes.isEmpty) return Array.emptyLongArray
     val me = PathUtil.canon(dataPath)
     val parts = deletes.map { d =>
-      if (d.contentOffset >= 0L)
-        lookup(Blob(d.path, d.fileSize, d.contentOffset), tally)(sortedDistinct(
-          graft.meta.DeletionVector.readPositions(d.path, d.contentOffset, d.contentSize, conf)))
-      else lookup(PositionFile(d.path, d.fileSize), tally)(positionFile(d.path, conf))
-        .getOrElse(me, Array.emptyLongArray)
+      if (d.contentOffset >= 0L) blob(d, conf, tally)
+      else wholeFile(d, conf, tally).getOrElse(me, Array.emptyLongArray)
     }
     if (parts.length == 1) parts.head else sortedDistinct(parts.flatten)
   }
+
+  /** Every (canonical data path, position) that position-delete files
+    * and DVs delete, as one (`path`, `pos`) frame decoded on executors
+    * through the index: the driver neither lists the files nor infers a
+    * schema. */
+  def frame(spark: SparkSession, deletes: Seq[DataFile]): DataFrame =
+    spark.createDataFrame(decode(spark, deletes).flatMap { case (p, a) =>
+      a.iterator.map(p -> _) }).toDF("path", "pos")
+
+  /** The canonical data paths `deletes` name, as a (`path`) frame: one
+    * row per delete source and path, not per position. */
+  def paths(spark: SparkSession, deletes: Seq[DataFile]): DataFrame =
+    spark.createDataFrame(decode(spark, deletes).map(e => Tuple1(e._1))).toDF("path")
+
+  /** Each source's (canonical data path → positions). A DV names its data
+    * file only in its manifest entry, resolved as the planner does. */
+  private def decode(spark: SparkSession,
+      deletes: Seq[DataFile]): org.apache.spark.rdd.RDD[(String, Array[Long])] = {
+    val sources = deletes.map { f =>
+      val target = if (!f.isDeletionVector) null
+        else PathUtil.canon(graft.table.IceScan.refPathOf(f).getOrElse(
+          throw new IllegalStateException(s"Deletion vector ${f.filePath} names no data file")))
+      (DeleteFileRef.of(f), target)
+    }.distinct
+    val ioEntries = Io.confEntries(spark) // executors lack the driver's confFactory
+    val sc = spark.sparkContext
+    sc.parallelize(sources, math.max(1, math.min(sources.size, sc.defaultParallelism)))
+      .mapPartitions { it =>
+        val (conf, tally) = (Io.confFrom(ioEntries), new Tally)
+        it.flatMap { case (d, target) =>
+          if (d.contentOffset >= 0L) Iterator(target -> blob(d, conf, tally))
+          else wholeFile(d, conf, tally).iterator
+        }
+      }
+  }
+
+  private def blob(d: DeleteFileRef, conf: Configuration, tally: Tally): Array[Long] =
+    lookup(Blob(d.path, d.fileSize, d.contentOffset), tally)(sortedDistinct(
+      graft.meta.DeletionVector.readPositions(d.path, d.contentOffset, d.contentSize, conf)))
+
+  private def wholeFile(d: DeleteFileRef, conf: Configuration,
+      tally: Tally): Map[String, Array[Long]] =
+    lookup(PositionFile(d.path, d.fileSize), tally)(positionFile(d.path, conf))
 
   private val PositionSchema = StructType(Seq(
     StructField("file_path", StringType), StructField("pos", LongType)))

@@ -2116,6 +2116,17 @@ object GraftFilters {
 final case class DeleteFileRef(path: String, contentOffset: Long, contentSize: Long,
     fileSize: Long)
 
+object DeleteFileRef {
+  /** The ref of a position-delete file or DV manifest entry. */
+  def of(f: graft.meta.DataFile): DeleteFileRef =
+    if (f.isDeletionVector)
+      DeleteFileRef(f.filePath,
+        f.contentOffset.getOrElse(throw new IllegalStateException(
+          s"Deletion vector ${f.filePath} lacks content-offset")),
+        f.contentSizeInBytes.getOrElse(f.fileSizeInBytes), f.fileSizeInBytes)
+    else DeleteFileRef(f.filePath, -1L, -1L, f.fileSizeInBytes)
+}
+
 /** An equality-delete file applicable to one data file (already
   * sequence-filtered by the planner: it only ships with data files
   * strictly older than the delete). `ids` are the equality field ids. */
@@ -2275,14 +2286,7 @@ object GraftScan {
       // reader resolves its own file's deletes executor-side, so driver
       // memory is independent of delete volume (ref per-task delete reads
       // io/pyarrow.py:1441 _task_to_table)
-      val dels = posFiles.map { f =>
-        if (f.isDeletionVector)
-          DeleteFileRef(f.filePath,
-            f.contentOffset.getOrElse(throw new IllegalStateException(
-              s"Deletion vector ${f.filePath} lacks content-offset")),
-            f.contentSizeInBytes.getOrElse(f.fileSizeInBytes), f.fileSizeInBytes)
-        else DeleteFileRef(f.filePath, -1L, -1L, f.fileSizeInBytes)
-      }.toArray
+      val dels = posFiles.map(DeleteFileRef.of).toArray
       val eqs = eqFiles.map(f =>
         EqDeleteRef(f.filePath, f.fileSizeInBytes, f.equalityIds.toArray)).toArray
       GraftInputPartition(t.file.filePath, if (byName) mappedReadJson else readJson,

@@ -52,8 +52,10 @@ object TableChanges {
     *    overwrite/upsert) → their rows live at the parent snapshot (the
     *    parent's deletes applied) as deletes;
     *  - carry-overs cancelled: a CoW rewrite re-writes surviving rows
-    *    into new files, so per-commit `delete ∩ insert` multiset overlap
-    *    is removed (exceptAll both ways) leaving only true changes;
+    *    into new files, so ONE signed aggregate over the range's rewrites
+    *    sums +1 per added and −1 per removed copy of a row per commit; a
+    *    carried row nets 0, any other is emitted |net| times as an insert
+    *    (net > 0) or a delete (net < 0) — one shuffle for the range;
     *  - position-delete files / DVs ADDED by the commit → the referenced
     *    data rows live at the parent (joined back by (file, row-position))
     *    as deletes;
@@ -77,7 +79,7 @@ object TableChanges {
       changeFilter: Option[graft.core.Expr] = None): DataFrame = {
     import org.apache.spark.sql.functions._
     import graft.core.PathUtil
-    import graft.meta.{EntryStatus, FileContent, ManifestIO, Io, DeletionVector}
+    import graft.meta.{EntryStatus, FileContent, ManifestIO, Io}
     table.refresh()
     val m = table.metadata
     val spark = table.spark
@@ -163,6 +165,7 @@ object TableChanges {
         }
 
     val frames = Seq.newBuilder[DataFrame]
+    val rewrites = Seq.newBuilder[DataFrame] // CoW rewrites' rows, netted below
     range.zipWithIndex.foreach { case (s, ordinal) =>
       val op = s.operation
       // 'replace' commits (compaction, manifest rewrite) are logically
@@ -215,40 +218,19 @@ object TableChanges {
           else Some(rowFiltered(read(fresh(addedPaths.flatMap(addedBy.get)), keepFilePos = false)))
         val cowDeletes = if (removedPaths.isEmpty) None
           else Some(rowFiltered(read(parentTasks(s, removedPaths, addedBy), keepFilePos = false)))
-        // cancel carry-overs only when a commit both removed and added
+        // carry-overs cancel only where a commit both removed and added
         // (CoW rewrite); append-only and pure-MoR commits skip the shuffle
-        val (netInserts, netCowDeletes) = (inserts, cowDeletes) match {
-          case (Some(i), Some(d)) => (Some(i.exceptAll(d)), Some(d.exceptAll(i)))
-          case other => other
-        }
-        netInserts.foreach(f => frames += withMeta(f, "insert", ordinal, s.snapshotId))
-        netCowDeletes.foreach(f => frames += withMeta(f, "delete", ordinal, s.snapshotId))
+        val sink = if (inserts.isDefined && cowDeletes.isDefined) rewrites else frames
+        inserts.foreach(f => sink += withMeta(f, "insert", ordinal, s.snapshotId))
+        cowDeletes.foreach(f => sink += withMeta(f, "delete", ordinal, s.snapshotId))
 
         // merge-on-read deletes added by this commit
         val dels = addedDeleteFiles(s)
         val (posDels, eqDels) = dels.partition(_.content == FileContent.PositionDeletes)
         val (dvs, posParquet) = posDels.partition(_.isDeletionVector)
-        val positions: Option[DataFrame] = {
-          val parts = Seq.newBuilder[DataFrame]
-          if (posParquet.nonEmpty)
-            parts += spark.read.parquet(posParquet.map(_.filePath): _*)
-              .select(PathUtil.canonCol(col("file_path")).as("__path"),
-                col("pos").as("__pos"))
-          if (dvs.nonEmpty) {
-            val ioEntries = Io.confEntries(spark)
-            val descs = dvs.map(f => (f.filePath, f.contentOffset.getOrElse(0L),
-              f.contentSizeInBytes.getOrElse(f.fileSizeInBytes),
-              PathUtil.canon(f.referencedDataFile.getOrElse(""))))
-            val sc = spark.sparkContext
-            val rdd = sc.parallelize(descs, math.min(descs.size, sc.defaultParallelism))
-              .flatMap { case (pp, off, len, ref) =>
-                DeletionVector.readPositions(pp, off, len, Io.confFrom(ioEntries))
-                  .map(pos => (ref, pos))
-              }
-            parts += spark.createDataFrame(rdd).toDF("__path", "__pos")
-          }
-          parts.result().reduceOption(_ unionByName _)
-        }
+        val positions: Option[DataFrame] =
+          if (posDels.isEmpty) None
+          else Some(graft.spark.DeleteIndex.frame(spark, posDels).toDF("__path", "__pos"))
         positions.foreach { posDf =>
           // deleted-row content: join positions back to the referenced
           // data files through the scan's (file, row-position) metadata.
@@ -257,14 +239,16 @@ object TableChanges {
           // — a file that provably holds no matching rows is never read.
           // Referenced paths come from METADATA when every delete source
           // names them — a DV entry carries referenced_data_file (spec-
-          // required), and a pos-delete parquet whose FULL-mode file_path
+          // required; a foreign one may give equal file_path bounds
+          // instead, IceScan.refPathOf), and a pos-delete parquet whose
+          // FULL-mode file_path
           // bounds coincide references exactly one file (this engine
           // harvests those bounds "full"; a FOREIGN writer's truncated
           // bound is a path PREFIX, caught by the existence probe, which
           // falls back to the distinct-collect job). Saves one Spark
           // action per MoR commit per changelog read.
           val metaRefs: Option[Seq[String]] = {
-            val dvRefs = dvs.map(_.referencedDataFile)
+            val dvRefs = dvs.map(graft.table.IceScan.refPathOf)
             val pqRefs = posParquet.map { f =>
               (f.lowerBounds.get(2147483546), f.upperBounds.get(2147483546)) match {
                 case (Some(lo), Some(hi))
@@ -287,10 +271,19 @@ object TableChanges {
           }.getOrElse(refPathsAll)
           if (refPaths.nonEmpty) {
             // (file, position) of the rows live at the parent: positions
-            // the commit restates over already-masked rows join nothing
+            // the commit restates over already-masked rows join nothing.
+            // The decoded frame has no size statistics, so the session's
+            // broadcast threshold meets the manifests' row counts times an
+            // UnsafeRow of (path, pos): null bits, the string's offset and
+            // length, pos (8 bytes each), then the path
+            val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+            val rowBytes = 24L + refPathsAll.map(_.length).max
+            val keyed = if (threshold > 0 &&
+                posDels.map(_.recordCount).sum * rowBytes <= threshold) broadcast(posDf)
+              else posDf
             val rows = read(parentTasks(s, refPaths, addedBy), keepFilePos = true)
               .withColumnRenamed("__file", "__path")
-              .join(posDf, Seq("__path", "__pos"))
+              .join(keyed, Seq("__path", "__pos"))
               .drop("__path", "__pos")
             frames += withMeta(rowFiltered(rows), "delete", ordinal, s.snapshotId)
           }
@@ -348,6 +341,21 @@ object TableChanges {
           }
         }
       }
+    }
+    // every CoW rewrite of the range netted in ONE shuffle: inserts +1,
+    // deletes −1, summed per (row, commit), |net| copies out. This is the
+    // plan Spark rewrites EXCEPT ALL into (RewriteExceptAll), fused across
+    // commits and both directions, so the multiset semantics match: nulls
+    // group together, NaN and −0.0 are normalized, maps cannot be grouped
+    rewrites.result().reduceOption(_ unionByName _).foreach { tagged =>
+      val cols = emptyOut.columns.toSeq
+      def c(n: String) = col(s"`$n`")
+      frames += tagged.groupBy(cols.filter(_ != "_change_type").map(c): _*)
+        .agg(sum(when(col("_change_type") === "insert", 1L).otherwise(-1L)).as("__n"))
+        .where(col("__n") =!= 0)
+        .withColumn("_change_type", when(col("__n") > 0, "insert").otherwise("delete"))
+        .withColumn("__n", explode(array_repeat(lit(true), abs(col("__n")).cast("int"))))
+        .select(cols.map(c): _*)
     }
     frames.result().reduceOption(_ unionByName _).getOrElse(emptyOut)
   }

@@ -1161,16 +1161,14 @@ class IceTable(
     val liveDeletes = planned.flatMap(_.deletes).distinctBy(_.filePath)
     if (liveDeletes.nonEmpty) {
       val canonAdds = paths.map(PathUtil.canon).toSet
-      val dvHits = liveDeletes.flatMap(_.referencedDataFile)
+      val dvHits = liveDeletes.filter(_.isDeletionVector).flatMap(IceScan.refPathOf)
         .map(PathUtil.canon).filter(canonAdds)
       require(dvHits.isEmpty,
         s"Cannot add_files: ${dvHits.head} is referenced by a live deletion vector")
       val posFiles = liveDeletes
         .filter(d => d.content == FileContent.PositionDeletes && !d.isDeletionVector)
-        .map(_.filePath).distinct
       if (posFiles.nonEmpty) {
-        val hits = spark.read.parquet(posFiles: _*)
-          .select(PathUtil.canonCol(col("file_path")).as("p")).distinct()
+        val hits = graft.spark.DeleteIndex.paths(spark, posFiles).select(col("path").as("p"))
           .filter(col("p").isInCollection(canonAdds))
           .limit(1).collect()
         require(hits.isEmpty,
@@ -1346,29 +1344,16 @@ class IceTable(
     val priorDeletes = tasks.flatMap(_.deletes)
       .filter(_.content == FileContent.PositionDeletes)
       .distinctBy(f => (f.filePath, f.contentOffset))
-    val (priorDVs, priorParquet) = priorDeletes.partition(_.isDeletionVector)
+    val priorDVs = priorDeletes.filter(_.isDeletionVector)
 
     // descriptor per written blob: (puffinPath, puffinSize, referenced
     // data file, blob offset, blob length, cardinality) — metadata-sized
     val descriptors: Seq[(String, Long, String, Long, Long, Long)] = {
     val branches = Seq.newBuilder[DataFrame]
     branches += newPos
-    if (priorParquet.nonEmpty)
-      branches += spark.read.parquet(priorParquet.map(_.filePath).distinct: _*)
-        .select(PathUtil.canonCol(col("file_path")).as("__dfile"), col("pos").as("__dpos"))
+    if (priorDeletes.nonEmpty)
+      branches += graft.spark.DeleteIndex.frame(spark, priorDeletes).toDF("__dfile", "__dpos")
         .where(col("__dfile").isInCollection(affected.keys.toSeq))
-    if (priorDVs.nonEmpty) {
-      val refs = priorDVs.map(f => (f.filePath, f.contentOffset.get,
-        f.contentSizeInBytes.getOrElse(f.fileSizeInBytes),
-        PathUtil.canon(f.referencedDataFile.get)))
-      val dvConf = Io.confEntries(spark) // executors lack the driver's confFactory
-      val rdd = spark.sparkContext
-        .parallelize(refs, math.min(refs.size, spark.sparkContext.defaultParallelism))
-        .flatMap { case (pp, off, len, ref) =>
-          DeletionVector.readPositions(pp, off, len, Io.confFrom(dvConf))
-            .iterator.map(p => (ref, p)) }
-      branches += spark.createDataFrame(rdd).toDF("__dfile", "__dpos")
-    }
 
     // one puffin file per shuffle partition, written IN the reduce task:
     // partition count sized so each puffin holds ~blobsPerPuffin vectors
@@ -1442,7 +1427,7 @@ class IceTable(
       if (removedPuffins.isEmpty) Nil
       else new IceScan(this).planFiles().flatMap(_.deletes)
         .filter(d => d.isDeletionVector && removedPuffins.contains(d.filePath) &&
-          d.referencedDataFile.forall(r => !affected.contains(PathUtil.canon(r))))
+          IceScan.refPathOf(d).forall(r => !affected.contains(PathUtil.canon(r))))
         .distinctBy(f => (f.filePath, f.contentOffset))
     commitSnapshot(operation, added = dvFiles ++ siblings ++ extraAdded,
       removedPaths = removedPuffins, extraMeta = extraMeta,

@@ -22,6 +22,18 @@ object IceScan {
     * bounds under it scope a delete file to one data file. */
   val PosPathFieldId: Int = 2147483546
 
+  /** A delete file's single target data path: `referenced_data_file`, or
+    * (the reference's rule, delete_file_index.py:79) EQUAL `file_path`
+    * lower and upper bounds — foreign writers set the bounds without the
+    * v3 field, and a truncated (unequal) bound safely yields None. */
+  def refPathOf(f: DataFile): Option[String] =
+    f.referencedDataFile.orElse {
+      (f.lowerBounds.get(PosPathFieldId), f.upperBounds.get(PosPathFieldId)) match {
+        case (Some(lo: String), Some(hi: String)) if lo == hi => Some(lo)
+        case _ => None
+      }
+    }
+
   /** `tasks`' rows as read by the DSv2 [[graft.spark.GraftScan]]:
     * `schema`'s columns plus the metadata columns `_file`, `_pos` (and on
     * v3 tables the lineage pair), pruned to what the caller selects. The
@@ -240,18 +252,7 @@ final class IceScan(
     val deleteRefs: Seq[DeleteRef] = deleteOpened.map { case (e, specId) =>
       DeleteRef(specId, e.dataFile.partition, e.dataSequenceNumber, e.dataFile)
     }
-    // the delete's single target path: referenced_data_file, or (the
-    // reference's rule, delete_file_index.py:79) EQUAL file_path lower
-    // and upper bounds — foreign writers set the bounds without the v3
-    // field, and a truncated (unequal) bound safely yields None
-    def refPathOf(f: DataFile): Option[String] =
-      f.referencedDataFile.orElse {
-        (f.lowerBounds.get(IceScan.PosPathFieldId),
-            f.upperBounds.get(IceScan.PosPathFieldId)) match {
-          case (Some(lo: String), Some(hi: String)) if lo == hi => Some(lo)
-          case _ => None
-        }
-      }
+    import IceScan.refPathOf
     // byte[] partition values hash by identity — normalize to Seq for keys
     def partKey(specId: Int, p: Seq[Any]): (Int, Seq[Any]) =
       (specId, p.map { case a: Array[Byte] => (a.toSeq: Any); case x => x })

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +14,8 @@ import graft.catalog.HadoopCatalog
 import graft.core._
 import graft.meta.{DataFile, FileContent, PartitionSpec}
 import graft.spark.{DeleteFileRef, DeleteIndex}
-import graft.table.{IceTable, WriteFiles}
+import graft.streaming.TableChanges
+import graft.table.{FileScanTask, IceTable, WriteFiles}
 
 /** Every delete source — a position-delete file, a DV blob, an equality
   * file — is decoded once per JVM and then served from the
@@ -55,13 +57,13 @@ class DeleteIndexSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSp
     NestedField(2147483546, "file_path", IString, required = true),
     NestedField(2147483545, "pos", ILong, required = true)))
 
-  /** ONE position-delete file over every data file of `t`, deleting the
+  /** ONE position-delete file over the data files of `tasks`, deleting the
     * rows `dead` matches; `stored` renders the file_path each row stores.
     * Positions come from Spark's own parquet source, not the engine. */
-  def positionDeleteFile(t: IceTable, dead: Column,
+  def positionDeleteFile(tasks: Seq[FileScanTask], dead: Column,
       stored: String => String = identity): DataFile = {
     val stage = s"${Files.createTempDirectory("delidx-del")}/d"
-    t.scan.planFiles().map { tk =>
+    tasks.map { tk =>
       spark.read.parquet(tk.file.filePath).filter(dead).select(
         lit(stored(PathUtil.canon(tk.file.filePath))).as("file_path"),
         col("_metadata.row_index").as("pos"))
@@ -77,7 +79,7 @@ class DeleteIndexSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSp
     val t = catalog.createTable(s"db.$name", Schema.fromSpark(orders.schema))
     t.append(orders.repartition(files))
     assert(t.scan.planFiles().size === files)
-    t.commitSnapshot("delete", added = Seq(positionDeleteFile(t, dead, stored)),
+    t.commitSnapshot("delete", added = Seq(positionDeleteFile(t.scan.planFiles(), dead, stored)),
       removedPaths = Set.empty)
     catalog.loadTable(s"db.$name")
   }
@@ -152,13 +154,113 @@ class DeleteIndexSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSp
     assert(rowsOf(spark.table("d.db.foreign")) === want)
   }
 
+  test("a changelog over 36 position-delete files decodes them without listing them") {
+    val t = catalog.createTable("db.many_deletes", Schema.fromSpark(orders.schema))
+    t.append(orders.repartition(36))
+    val from = t.metadata.currentSnapshotId.get
+    val tasks = t.scan.planFiles()
+    assert(tasks.size === 36)
+    val dead = col("o_orderkey") % 3 === 0
+    // one delete file per data file; the first stores file: URIs, as a
+    // foreign writer may
+    val files = tasks.zipWithIndex.map { case (tk, i) =>
+      val stored: String => String = if (i == 0) p => s"file://$p" else identity
+      positionDeleteFile(Seq(tk), dead, stored)
+    }
+    assert(spark.read.parquet(files.head.filePath).select("file_path").head().getString(0)
+      .startsWith("file:///"))
+    t.commitSnapshot("delete", added = files, removedPaths = Set.empty)
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descriptions.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    var rows: Seq[String] = Nil
+    try {
+      rows = rowsOf(TableChanges.changelog(catalog.loadTable("db.many_deletes"), Some(from))
+        .filter(col("_change_type") === "delete"))
+      Thread.sleep(500) // let async listener events drain
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(rows === rowsOf(orders.filter(dead)))
+    val listings = descriptions.toArray.toSeq.map(_.toString)
+      .filter(_.startsWith("Listing leaf files"))
+    assert(listings.isEmpty, s"listing jobs: $listings")
+  }
+
+  test("the changelog's position join broadcasts under the session's threshold, shuffles at -1") {
+    val dead = col("o_orderkey") % 4 === 0
+    val t = withDeletes("joined", 4, dead)
+    val from = t.metadata.ancestorsOf(t.metadata.currentSnapshotId.get)(1).snapshotId
+    /** (broadcast, sort-merge) joins the changelog ran */
+    def joins(df: DataFrame): (Int, Int) = {
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      (collect(plan) { case j: BroadcastHashJoinExec => j }.size,
+        collect(plan) { case j: SortMergeJoinExec => j }.size)
+    }
+    val want = rowsOf(orders.filter(dead))
+    val small = TableChanges.changelog(t, Some(from))
+    assert(rowsOf(small) === want)
+    assert(joins(small) === ((1, 0)))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val shuffled = TableChanges.changelog(catalog.loadTable("db.joined"), Some(from))
+      assert(rowsOf(shuffled) === want)
+      assert(joins(shuffled) === ((0, 1)))
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("a DV naming its data file only by file_path bounds serves the changelog and a DV delete") {
+    val t0 = catalog.createTable("db.dv_bounds", Schema.fromSpark(orders.schema),
+      properties = Map("format-version" -> "3"))
+    t0.append(orders.repartition(4))
+    catalog.loadTable("db.dv_bounds").deleteAsDeletionVector("o_orderkey < 600")
+    val t1 = catalog.loadTable("db.dv_bounds")
+    val dvs = t1.scan.planFiles().flatMap(_.deletes).distinctBy(d => (d.filePath, d.contentOffset))
+    // a foreign writer's DVs: the same blobs in another puffin file, with
+    // referenced_data_file unset and the target in equal file_path bounds
+    val copies = dvs.map(_.filePath).distinct.map { p =>
+      val c = s"${p.stripSuffix(".puffin")}-copy.puffin"
+      Files.copy(Paths.get(PathUtil.canon(p)), Paths.get(PathUtil.canon(c)))
+      p -> c
+    }.toMap
+    val foreign = dvs.map(d => d.copy(filePath = copies(d.filePath), referencedDataFile = None))
+    assert(foreign.forall(d => d.lowerBounds.contains(2147483546) &&
+      d.lowerBounds.get(2147483546) == d.upperBounds.get(2147483546)))
+    // the DVs dropped, then the foreign ones committed
+    t1.commitSnapshot("delete", added = Nil, removedPaths = copies.keySet)
+    val undeleted = catalog.loadTable("db.dv_bounds")
+    assert(rowsOf(undeleted.scan.toDF) === rowsOf(orders))
+    val from = undeleted.metadata.currentSnapshotId.get
+    undeleted.commitSnapshot("delete", added = foreign, removedPaths = Set.empty)
+    val t = catalog.loadTable("db.dv_bounds")
+    assert(rowsOf(t.scan.toDF) === rowsOf(orders.filter(col("o_orderkey") >= 600)))
+    val changes = TableChanges.changelog(t, Some(from))
+    assert(changes.filter(col("_change_type") =!= "delete").count() === 0)
+    assert(rowsOf(changes) === rowsOf(orders.filter(col("o_orderkey") < 600)))
+    // a DV delete merges the foreign DVs' positions into its own
+    t.deleteAsDeletionVector("o_orderkey >= 600 AND o_orderkey < 900")
+    val merged = catalog.loadTable("db.dv_bounds")
+    assert(rowsOf(merged.scan.toDF) === rowsOf(orders.filter(col("o_orderkey") >= 900)))
+    assert(merged.scan.planFiles().flatMap(_.deletes).forall(_.referencedDataFile.isDefined))
+    // a DV that names no data file either way is refused, not dropped
+    val before = merged.metadata.currentSnapshotId.get
+    val blind = foreign.head.copy(lowerBounds = Map.empty, upperBounds = Map.empty)
+    merged.commitSnapshot("delete", added = Seq(blind), removedPaths = Set.empty)
+    val err = intercept[IllegalStateException](
+      TableChanges.changelog(catalog.loadTable("db.dv_bounds"), Some(before)).collect())
+    assert(err.getMessage.contains("names no data file"))
+  }
+
   test("a delete file rewritten at the same path with another size is decoded again") {
     val t = withDeletes("rewritten", 4, col("o_orderkey") < 100)
     val old = t.scan.planFiles().head.deletes.head
     assert(decodedBy {
       assert(rowsOf(t.scan.toDF) === rowsOf(orders.filter(col("o_orderkey") >= 100)))
     } === 1)
-    val next = positionDeleteFile(t, col("o_orderkey") < 300)
+    val next = positionDeleteFile(t.scan.planFiles(), col("o_orderkey") < 300)
     assert(next.fileSizeInBytes != old.fileSizeInBytes)
     val target = Paths.get(PathUtil.canon(old.filePath))
     Files.copy(Paths.get(PathUtil.canon(next.filePath)), target,
