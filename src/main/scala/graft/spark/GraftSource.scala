@@ -453,27 +453,26 @@ class GraftRowLevelOperation(table: IceTable,
   * directory executor-side: for each partition field, the SOURCE column's
   * position in the staged row, its iceberg type, the transform, and the
   * transform's result type — enough to compute `_p_name=value/` exactly
-  * as [[graft.table.WriteFiles]]'s fan-out layout does, so
-  * `WriteFiles.harvest` parses the partition tuple back from the path. */
+  * as [[graft.table.WriteFiles]]'s fan-out layout does, so the writer
+  * parses the partition tuple back from the path. */
 private[spark] final case class PartitionRouterSpec(
     fields: Seq[(String, Int, String, String, String)]) extends Serializable {
 
-  /** (pos, srcType, transform, resType) per field — parsed once per
+  /** (pos, srcType, transform) per field — parsed once per
     * (de)serialized instance, not per row. */
-  @transient private lazy val compiled: Array[(String, Int, IceType, graft.core.Transform, IceType)] =
-    fields.map { case (name, pos, srcRepr, transformStr, resRepr) =>
-      (name, pos, graft.table.StatsHarvester.parseType(srcRepr),
-        graft.core.Transform.parse(transformStr),
-        graft.table.StatsHarvester.parseType(resRepr))
+  @transient private lazy val compiled: Array[(Int, IceType, graft.core.Transform)] =
+    fields.map { case (_, pos, srcRepr, transformStr, _) =>
+      (pos, graft.table.StatsHarvester.parseType(srcRepr),
+        graft.core.Transform.parse(transformStr))
     }.toArray
+  @transient private lazy val names = fields.map(_._1)
+  @transient private lazy val resTypes =
+    fields.map(f => graft.table.StatsHarvester.parseType(f._5))
 
   /** Directory suffix (no leading slash) for the row, e.g.
     * `_p_day=2021-03-01/_p_bucket=7`. */
   def dirOf(row: InternalRow): String = {
-    val parts = new Array[String](compiled.length)
-    var i = 0
-    while (i < compiled.length) {
-      val (name, pos, srcType, transform, resType) = compiled(i)
+    val values = compiled.map { case (pos, srcType, transform) =>
       val src: Any =
         if (row.isNullAt(pos)) null
         else srcType match {
@@ -487,46 +486,9 @@ private[spark] final case class PartitionRouterSpec(
           case other => throw new IllegalArgumentException(
             s"Unroutable partition source type $other")
         }
-      val v = transform.apply(src, srcType)
-      parts(i) = s"$name=" +
-        PartitionRouterSpec.escape(PartitionRouterSpec.render(v, resType))
-      i += 1
+      transform.apply(src, srcType)
     }
-    parts.mkString("/")
-  }
-}
-
-private[spark] object PartitionRouterSpec {
-
-  /** String form of a TRANSFORMED partition value, by the transform's
-    * result type — the same forms WriteFiles' fan-out directories use
-    * (and StatsHarvester.parsePartition decodes). */
-  def render(v: Any, t: IceType): String = v match {
-    case null => "__HIVE_DEFAULT_PARTITION__"
-    case _ => t match {
-      case IDate => java.time.LocalDate.ofEpochDay(
-        v.asInstanceOf[Number].longValue()).toString
-      case ITimestamp | ITimestamptz =>
-        graft.core.Transforms.microsToLocalDateTime(
-          v.asInstanceOf[Number].longValue()).toString
-      case IDecimal(_, _) => v match {
-        case d: java.math.BigDecimal => d.toPlainString
-        case o => o.toString
-      }
-      case _ => v.toString
-    }
-  }
-
-  /** %XX-escape anything outside [A-Za-z0-9._-] — identical to the
-    * fixed16 fan-out writer's escaping; parsePartition reverses it. */
-  def escape(s: String): String = {
-    val b = new StringBuilder
-    s.getBytes(java.nio.charset.StandardCharsets.UTF_8).foreach { by =>
-      val c = by.toChar
-      val safe = by >= 0 && (c.isLetterOrDigit || c == '.' || c == '_' || c == '-')
-      if (safe) b += c else b ++= f"%%${by & 0xff}%02X"
-    }
-    b.toString
+    graft.table.DataFileWriter.partitionDir(names, values.toSeq, resTypes)
   }
 }
 
@@ -556,7 +518,7 @@ private[spark] object StagedDirect {
         case _ => ()
       }
       // dir component names carry the synthetic prefix, matching the
-      // fan-out write layout that harvest's parsePartition expects
+      // fan-out write layout that parsePartition reads back
       (graft.table.WriteFiles.SyntheticPrefix + pf.name, pos,
         src.fieldType.repr, pf.transform.name,
         pf.transform.resultType(src.fieldType).repr)
@@ -650,10 +612,7 @@ private[spark] object StagedDirect {
     * the rewrite path's alignment select fails loudly. */
   def capable(table: IceTable, stagingSchema: StructType,
       partitionedOk: Boolean = false, sortedOk: Boolean = false): Boolean =
-    // escape hatch: `write.graft.direct-commit = false` forces the
-    // stage+rewrite path (debugging, foreign-reader quirks, A/B)
-    !table.metadata.properties.get("write.graft.direct-commit").contains("false") &&
-      (table.spec.fields.isEmpty || partitionedOk) &&
+    (table.spec.fields.isEmpty || partitionedOk) &&
       (table.sortOrderOpt.isEmpty || sortedOk) &&
       table.metadata.properties
         .getOrElse("write.format.default", "parquet").equalsIgnoreCase("parquet") &&
@@ -686,23 +645,28 @@ private[spark] object StagedDirect {
         s"$kind-${java.util.UUID.randomUUID()}", table.metadata.properties)
     else s"${table.location}/staging/$kind-${java.util.UUID.randomUUID()}"
 
-  /** Footer-stats harvest of the staged files, restricted to the task
-    * messages' paths. */
-  def harvest(table: IceTable, dir: String, files: Seq[String],
-      lineage: Boolean): Seq[graft.meta.DataFile] = {
-    if (files.isEmpty) return Nil
-    val hSchema =
+  /** What each task of a staged write needs to write its files and
+    * describe them: table-schema stats (plus the lineage columns when
+    * staged), the table's metrics modes and `write.parquet.*` options,
+    * and partition tuples read back from routed `_p_` directories. */
+  def fileSpec(table: IceTable, dir: String, stagingSchema: StructType,
+      lineage: Boolean, maxRecords: Long): graft.table.FileWriteSpec = {
+    val statsSchema =
       if (lineage) graft.core.RowLineage.augment(table.schema) else table.schema
-    val harvested = graft.table.WriteFiles.harvest(table.spark, dir, hSchema, table.spec,
-      graft.table.WriteFiles.metricsModes(hSchema, table.metadata.properties),
-      only = Some(files.map(graft.core.PathUtil.canon).toSet))
-    // sorted tables reached this path through a required ordering, so
-    // the files honor the declared order and carry its id
-    table.sortOrderOpt.map(_.orderId) match {
-      case Some(id) => harvested.map(_.copy(sortOrderId = Some(id)))
-      case None => harvested
-    }
+    val props = table.metadata.properties
+    graft.table.DataFileWriter.spec(table.spark, dir, stagingSchema, statsSchema, table.spec,
+      graft.table.WriteFiles.metricsModes(statsSchema, props),
+      graft.table.WriteFiles.parquetWriterOptions(props), maxRecords)
   }
+
+  /** Staged files committed as data files: sorted tables reached this
+    * path through a required ordering, so the files honor the declared
+    * order and carry its id. */
+  def asData(table: IceTable, files: Seq[graft.meta.DataFile]): Seq[graft.meta.DataFile] =
+    table.sortOrderOpt.map(_.orderId) match {
+      case Some(id) => files.map(_.copy(sortOrderId = Some(id)))
+      case None => files
+    }
 }
 
 class GraftReplaceDataWrite(table: IceTable, op: GraftRowLevelOperation,
@@ -730,7 +694,7 @@ class GraftReplaceDataWrite(table: IceTable, op: GraftRowLevelOperation,
     * what the second write produces, they ARE the data files — the
     * rewrite path's full read-back + re-write (2× the write I/O of every
     * CoW row-level op, the dominant cost at scale) is skipped and the
-    * commit harvests footer stats from the staged files. Capability here
+    * commit takes the DataFiles the write tasks built. Capability here
     * (unsorted; parquet; every column id-stamped; PARTITIONED tables
     * qualify when every transform routes executor-side AND has a V2
     * clustering form — the write then REQUIRES clustering+ordering by
@@ -784,13 +748,13 @@ class GraftReplaceDataWrite(table: IceTable, op: GraftRowLevelOperation,
     }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftStagingWriterFactory(stagingDir, stagingSchema.json,
-      graft.meta.Io.confEntries(table.spark),
+    new GraftStagingWriterFactory(
+      StagedDirect.fileSpec(table, stagingDir, stagingSchema, lineage,
+        maxRecords = if (directCapable) StagedDirect.maxRecordsFor(table) else 0L),
       // metadata row layout follows requiredMetadataAttributes order:
       // (_file, _row_id, _last_updated_sequence_number)
       lineageMetaIdx = if (lineage) Array(1, 2) else Array.empty,
-      router = if (directCapable) partRouter.orNull else null,
-      maxRecords = if (directCapable) StagedDirect.maxRecordsFor(table) else 0L)
+      router = if (directCapable) partRouter.orNull else null)
 
   /** Set when the staged files were committed AS data files — cleanup
     * must then leave the staging directory alone (it is live data). */
@@ -798,11 +762,8 @@ class GraftReplaceDataWrite(table: IceTable, op: GraftRowLevelOperation,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-    val files = messages.toSeq.flatMap {
-      case StagedFileMessage(p) => Seq(p)
-      case StagedFilesMessage(ps) => ps
-      case _ => Nil
-    }
+    val staged = StagedFilesMessage.files(messages)
+    val files = staged.map(_.filePath)
     try {
       val scan = op.configuredScan
       require(scan != null, "row-level operation committed without a configured scan")
@@ -827,10 +788,10 @@ class GraftReplaceDataWrite(table: IceTable, op: GraftRowLevelOperation,
         val diffFree = !lineage || op.cmd == Command.DELETE ||
           diffColsOpt.contains(Nil) || op.lineageStampedInPlan || files.isEmpty
         // diff-free commands on a direct-capable stage: the staged files
-        // ARE the data files — harvest footer stats and commit their
-        // descriptors; no second write, no read-back
+        // ARE the data files — commit the tasks' descriptors; no second
+        // write, no read-back
         if (directCapable && diffFree) {
-          val added = StagedDirect.harvest(table, stagingDir, files.toSeq, lineage)
+          val added = StagedDirect.asData(table, staged)
           table.refresh()
           table.replaceFilesPreStaged(removed, added,
             conflictFilter = Some(GraftFilters.normalizeLiterals(scan.planExpr)),
@@ -955,7 +916,8 @@ class GraftDeltaOperation(table: IceTable,
   override def description(): String = s"GraftRowLevelOperation[$cmd, merge-on-read]"
 }
 
-final case class DeltaStagedMessage(dataPaths: Seq[String], deletePaths: Seq[String])
+final case class DeltaStagedMessage(data: Seq[graft.meta.DataFile],
+    deletes: Seq[graft.meta.DataFile])
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 /** The WriteDelta of a merge-on-read operation: each task stages at most
@@ -983,7 +945,7 @@ class GraftDeltaWrite(table: IceTable, op: GraftDeltaOperation, rowSchema: Struc
     StagedDirect.idStampedSchema(table, rowSchema, lineage)
 
   /** Delta insert files are plain appends — when the stage is
-    * direct-capable they commit as-is (footer-stats harvest, no second
+    * direct-capable they commit as-is (the tasks' DataFiles, no second
     * write). Unlike the CoW path there is no diff condition: delta
     * lineage values are written correctly by the writer itself.
     * PARTITIONED tables qualify like the CoW write does: the write
@@ -1026,9 +988,13 @@ class GraftDeltaWrite(table: IceTable, op: GraftDeltaOperation, rowSchema: Struc
     }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-    new GraftDeltaWriterFactory(stagingDataDir, deleteDir, stagingSchema.json, lineage,
-      graft.meta.Io.confEntries(table.spark),
-      maxRecords = if (directCapable) StagedDirect.maxRecordsFor(table) else 0L,
+    new GraftDeltaWriterFactory(
+      StagedDirect.fileSpec(table, stagingDataDir, stagingSchema, lineage,
+        maxRecords = if (directCapable) StagedDirect.maxRecordsFor(table) else 0L),
+      graft.table.DataFileWriter.spec(table.spark, deleteDir,
+        GraftDeltaWrite.PosDeleteSchema.toSpark, GraftDeltaWrite.PosDeleteSchema,
+        modes = GraftDeltaWrite.PosDeleteModes),
+      lineage,
       router = if (directCapable) partRouter.orNull else null)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -1036,14 +1002,13 @@ class GraftDeltaWrite(table: IceTable, op: GraftDeltaOperation, rowSchema: Struc
     try {
       val base = table.metadata.currentSnapshotId
       table.refresh()
-      val dataStaged = msgs.flatMap(_.dataPaths)
+      val dataStaged = msgs.flatMap(_.data)
       val added =
         if (dataStaged.isEmpty) Nil
-        else if (directCapable)
-          StagedDirect.harvest(table, stagingDataDir, dataStaged.toSeq, lineage)
+        else if (directCapable) StagedDirect.asData(table, dataStaged.toSeq)
         else {
           val staged = table.spark.read.schema(stagingSchema)
-            .parquet(dataStaged.toIndexedSeq: _*)
+            .parquet(dataStaged.map(_.filePath).toIndexedSeq: _*)
           val named = staged.toDF(table.schema.fields.map(_.name) ++
             (if (lineage) graft.core.RowLineage.fields.map(_.name) else Nil): _*)
           graft.table.WriteFiles.write(table.spark, table.location,
@@ -1052,10 +1017,9 @@ class GraftDeltaWrite(table: IceTable, op: GraftDeltaOperation, rowSchema: Struc
             sortOrder = None, props = table.metadata.properties)
         }
       // only files NAMED in task commit messages: a failed attempt's
-      // partial parquet in the shared deleteDir must not be opened
-      // (footer missing) or double-registered after a task retry
-      val namedDeletes = msgs.flatMap(_.deletePaths)
-        .map(graft.core.PathUtil.canon).toSet
+      // partial parquet in the shared deleteDir is never opened or
+      // registered
+      val namedDeletes = msgs.flatMap(_.deletes).filter(_.recordCount > 0)
       val conflict = Option(op.configuredScan)
         .map(s => GraftFilters.normalizeLiterals(s.planExpr))
       val operation = if (added.nonEmpty) "overwrite" else "delete"
@@ -1076,7 +1040,7 @@ class GraftDeltaWrite(table: IceTable, op: GraftDeltaOperation, rowSchema: Struc
                   org.apache.spark.sql.types.StructField("__dpos",
                     org.apache.spark.sql.types.LongType))))
             else table.spark.read.schema(GraftDeltaWrite.PosDeleteSchema.toSpark)
-              .parquet(msgs.flatMap(_.deletePaths).toIndexedSeq: _*)
+              .parquet(namedDeletes.map(_.filePath).toIndexedSeq: _*)
               .select(graft.core.PathUtil.canonCol(col("file_path")).as("__dfile"),
                 col("pos").as("__dpos"))
           // affected file set is metadata-sized (#files, not #rows)
@@ -1090,16 +1054,8 @@ class GraftDeltaWrite(table: IceTable, op: GraftDeltaOperation, rowSchema: Struc
             conflictFilter = conflict, baseSnap = base, extraAdded = added)
         }
       } else {
-        val deleteAdded = if (namedDeletes.isEmpty) Nil
-          else graft.table.WriteFiles
-            .harvest(table.spark, deleteDir, GraftDeltaWrite.PosDeleteSchema,
-              graft.meta.PartitionSpec.Unpartitioned,
-              // FULL file_path bounds: equal lower/upper path-scope the
-              // delete to its target (truncation breaks the equality)
-              modes = Map(2147483546 -> "full", 2147483545 -> "full"),
-              only = Some(namedDeletes))
-            .filter(_.recordCount > 0)
-            .map(_.copy(content = graft.meta.FileContent.PositionDeletes))
+        val deleteAdded = namedDeletes.toSeq
+          .map(_.copy(content = graft.meta.FileContent.PositionDeletes))
         if (added.nonEmpty || deleteAdded.nonEmpty) {
           table.commitSnapshot(operation,
             added = added ++ deleteAdded, removedPaths = Set.empty,
@@ -1130,6 +1086,10 @@ object GraftDeltaWrite {
   val PosDeleteSchema: graft.core.Schema = graft.core.Schema(Seq(
     graft.core.NestedField(2147483546, "file_path", graft.core.IString, required = true),
     graft.core.NestedField(2147483545, "pos", graft.core.ILong, required = true)))
+
+  /** FULL (untruncated) `file_path`/`pos` bounds: equal lower/upper path
+    * bounds scope a delete file to its one target data file. */
+  val PosDeleteModes: Map[Int, String] = Map(2147483546 -> "full", 2147483545 -> "full")
 }
 
 object GraftDeltaWriter {
@@ -1139,26 +1099,22 @@ object GraftDeltaWriter {
   val FlushRun: Int = 4 * 1024 * 1024
 }
 
-class GraftDeltaWriterFactory(dataDir: String, deleteDir: String, rowSchemaJson: String,
-    lineage: Boolean,
-    confEntries: Array[(String, String)],
-    maxRecords: Long = 0L,
+class GraftDeltaWriterFactory(dataSpec: graft.table.FileWriteSpec,
+    deleteSpec: graft.table.FileWriteSpec, lineage: Boolean,
     router: PartitionRouterSpec = null)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new GraftDeltaWriter(dataDir, deleteDir, rowSchemaJson, lineage, partitionId,
-      taskId, confEntries, maxRecords, router)
+    new GraftDeltaWriter(dataSpec, deleteSpec, lineage, partitionId, taskId, router)
 }
 
 /** Per-task delta writer: buffers deleted (file, pos) ids — sorted and
   * written as ONE position-delete parquet at commit so row-group stats
   * prune on file_path — and streams inserted rows into a staged data
   * parquet (the same staging writer the other DSv2 writes use). */
-class GraftDeltaWriter(dataDir: String, deleteDir: String, rowSchemaJson: String,
-    lineage: Boolean, partitionId: Int, taskId: Long,
-    confEntries: Array[(String, String)],
-    maxRecords: Long = 0L,
+class GraftDeltaWriter(dataSpec: graft.table.FileWriteSpec,
+    deleteSpec: graft.table.FileWriteSpec, lineage: Boolean,
+    partitionId: Int, taskId: Long,
     router: PartitionRouterSpec = null)
     extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
 
@@ -1171,13 +1127,13 @@ class GraftDeltaWriter(dataDir: String, deleteDir: String, rowSchemaJson: String
   // instead of accumulating gigabytes of ids before one giant sort.
   private val deleted = scala.collection.mutable.ArrayBuffer[(String, Long)]()
   private val pathPool = new java.util.HashMap[String, String]()
-  private val flushed = scala.collection.mutable.ArrayBuffer[String]()
+  private val flushed = scala.collection.mutable.ArrayBuffer[graft.meta.DataFile]()
+  private val runs = scala.collection.mutable.ArrayBuffer[graft.table.DataFileWriter]()
 
   private def ensureDataWriter(): GraftStagingWriter = {
     if (dataWriter == null)
-      dataWriter = new GraftStagingWriter(dataDir, rowSchemaJson, partitionId, taskId,
-        confEntries, lineageMetaIdx = if (lineage) Array(0, 1) else Array.empty,
-        router = router, maxRecords = maxRecords)
+      dataWriter = new GraftStagingWriter(dataSpec, partitionId, taskId,
+        lineageMetaIdx = if (lineage) Array(0, 1) else Array.empty, router = router)
     dataWriter
   }
 
@@ -1213,49 +1169,25 @@ class GraftDeltaWriter(dataDir: String, deleteDir: String, rowSchemaJson: String
 
   private def flushDeletes(): Unit = {
     if (deleted.isEmpty) return
-    val conf = graft.meta.Io.confFrom(confEntries)
-    val sparkSchema = GraftDeltaWrite.PosDeleteSchema.toSpark
-    org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-      .setSchema(sparkSchema, conf)
-    conf.set("spark.sql.parquet.writeLegacyFormat", "false")
-    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-    conf.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-    conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
-    conf.set("spark.sql.session.timeZone", "UTC")
-    val path = s"$deleteDir/del-$partitionId-$taskId-${java.util.UUID.randomUUID()}.parquet"
-    val w = new org.apache.parquet.hadoop.ParquetWriter[InternalRow](
-      new Path(path),
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport,
-      org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY,
-      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_BLOCK_SIZE,
-      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_PAGE_SIZE,
-      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_PAGE_SIZE,
-      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_IS_DICTIONARY_ENABLED,
-      false,
-      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_WRITER_VERSION,
-      conf)
-    try deleted.sortInPlace().foreach { case (f, p) =>
-      w.write(new GenericInternalRow(
+    val run = new graft.table.DataFileWriter(deleteSpec, s"del-$partitionId-$taskId-${runs.size}")
+    runs += run
+    deleted.sortInPlace().foreach { case (f, p) =>
+      run.write("", new GenericInternalRow(
         Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(f), p)))
-    } finally w.close()
-    flushed += path
+    }
+    flushed ++= run.close()
     deleted.clear()
   }
 
   override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    val dataPaths = Option(dataWriter).toSeq.flatMap(_.commit() match {
-      case StagedFileMessage(p) => Seq(p)
-      case StagedFilesMessage(ps) => ps
-      case _ => Nil
-    })
+    val data = Option(dataWriter).toSeq.flatMap(w => StagedFilesMessage.files(Seq(w.commit())))
     flushDeletes()
-    DeltaStagedMessage(dataPaths, flushed.toSeq)
+    DeltaStagedMessage(data, flushed.toSeq)
   }
 
   override def abort(): Unit = {
     if (dataWriter != null) dataWriter.abort()
+    runs.foreach(_.abort())
   }
 
   override def close(): Unit = ()
@@ -1265,7 +1197,7 @@ class GraftDeltaWriter(dataDir: String, deleteDir: String, rowSchemaJson: String
   * df.writeTo.append — the analyzer has already aligned and cast the query
   * to the table schema), and the V1 fallback hands the rows back as a
   * DataFrame, which flows through the library's full write path: fan-out
-  * shuffle on partition transforms, field-id parquet, footer-stats harvest,
+  * shuffle on partition transforms, field-id parquet with task-built stats,
   * manifest merge, conflict-checked optimistic commit. A native DataWriter
   * would have to re-implement exactly that machinery per-task — the V1
   * bridge reuses it verbatim (write modes mirror _FastAppendFiles /
@@ -1340,7 +1272,7 @@ class GraftWriteBuilder(table: IceTable,
   * stages field-id parquet files executor-side (the same staging writers
   * as the dynamic-overwrite path) and commits ONE table snapshot per
   * epoch through the library's append/overwrite — fan-out shuffle,
-  * footer-stats harvest, optimistic commit included. Exactly-once across
+  * task-built file stats, optimistic commit included. Exactly-once across
   * restarts: every epoch commit stamps (streaming-query-id,
   * streaming-epoch-id) into the snapshot summary, and a replayed epoch —
   * Structured Streaming re-runs the last uncommitted-at-crash batch from
@@ -1354,7 +1286,7 @@ class GraftStreamingWrite(table: IceTable, queryId: String,
   import org.apache.spark.sql.connector.write._
 
   /** Append-mode epochs on a direct-capable table commit their staged
-    * files AS data files (id-stamped schema, footer-stats harvest) —
+    * files AS data files (id-stamped schema, the tasks' DataFiles) —
     * each micro-batch writes its rows exactly once. Complete mode keeps
     * the rewrite (overwrite needs the alignment read anyway). */
   private val stagingSchema: StructType =
@@ -1367,9 +1299,9 @@ class GraftStreamingWrite(table: IceTable, queryId: String,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : streaming.StreamingDataWriterFactory =
-    new GraftStreamingStagingFactory(stagingRoot, stagingSchema.json,
-      graft.meta.Io.confEntries(table.spark),
-      maxRecords = if (directCapable) StagedDirect.maxRecordsFor(table) else 0L)
+    new GraftStreamingStagingFactory(
+      StagedDirect.fileSpec(table, stagingRoot, stagingSchema, lineage = false,
+        maxRecords = if (directCapable) StagedDirect.maxRecordsFor(table) else 0L))
 
   /** Epoch ids are monotone per query: any committed epoch ≥ this one
     * means this batch's rows are already in the table. (Snapshot summary
@@ -1381,11 +1313,8 @@ class GraftStreamingWrite(table: IceTable, queryId: String,
         s.summary.get("streaming-epoch-id").exists(_.toLong >= epochId))
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.toSeq.flatMap {
-      case StagedFileMessage(p) => Seq(p)
-      case StagedFilesMessage(ps) => ps
-      case _ => Nil
-    }
+    val staged = StagedFilesMessage.files(messages)
+    val files = staged.map(_.filePath)
     try {
       table.refresh()
       // Complete mode must commit even an EMPTY epoch: the table's
@@ -1395,10 +1324,8 @@ class GraftStreamingWrite(table: IceTable, queryId: String,
         val marks = Map("streaming-query-id" -> queryId,
           "streaming-epoch-id" -> epochId.toString)
         if (directCapable && files.nonEmpty) {
-          // staged epoch files ARE the data files: harvest + append
-          table.appendPreStaged(
-            StagedDirect.harvest(table, s"$stagingRoot/epoch-$epochId",
-              files.toSeq, lineage = false), marks)
+          // staged epoch files ARE the data files
+          table.appendPreStaged(StagedDirect.asData(table, staged), marks)
           committedEpochDirs.add(epochId)
         } else {
           val staged =
@@ -1430,14 +1357,11 @@ class GraftStreamingWrite(table: IceTable, queryId: String,
       catch { case _: Exception => () }
 }
 
-class GraftStreamingStagingFactory(root: String, schemaJson: String,
-    confEntries: Array[(String, String)],
-    maxRecords: Long = 0L)
+class GraftStreamingStagingFactory(spec: graft.table.FileWriteSpec)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new GraftStagingWriter(s"$root/epoch-$epochId", schemaJson, partitionId, taskId,
-      confEntries, maxRecords = maxRecords)
+    new GraftStagingWriter(spec.copy(dir = s"${spec.dir}/epoch-$epochId"), partitionId, taskId)
 }
 
 /** Dynamic INSERT OVERWRITE as a native DSv2 BatchWrite: each task stages
@@ -1459,7 +1383,7 @@ class GraftDynamicOverwriteWrite(table: IceTable,
   private val tableStruct: StructType = table.schema.toSpark
 
   /** Direct commit (r12): routed staged files become the data files and
-    * the touched-partition set falls out of their harvested tuples — no
+    * the touched-partition set falls out of their partition tuples — no
     * read-back, no distinct-partitions job. */
   private val partRouter: Option[PartitionRouterSpec] =
     StagedDirect.routerSpec(table, tableStruct)
@@ -1492,26 +1416,22 @@ class GraftDynamicOverwriteWrite(table: IceTable,
       sortOrdering.getOrElse(Array.empty)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftStagingWriterFactory(stagingDir, tableStruct.json,
-      graft.meta.Io.confEntries(table.spark),
-      router = if (directCapable) partRouter.orNull else null,
-      maxRecords = if (directCapable) StagedDirect.maxRecordsFor(table) else 0L)
+    new GraftStagingWriterFactory(
+      StagedDirect.fileSpec(table, stagingDir, tableStruct, lineage = false,
+        maxRecords = if (directCapable) StagedDirect.maxRecordsFor(table) else 0L),
+      router = if (directCapable) partRouter.orNull else null)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.toSeq.flatMap {
-      case StagedFileMessage(p) => Seq(p)
-      case StagedFilesMessage(ps) => ps
-      case _ => Nil
-    }
+    val staged = StagedFilesMessage.files(messages)
     try {
-      if (files.nonEmpty) {
+      if (staged.nonEmpty) {
         table.refresh()
         if (directCapable) {
-          table.dynamicPartitionOverwritePreStaged(
-            StagedDirect.harvest(table, stagingDir, files, lineage = false), branch)
+          table.dynamicPartitionOverwritePreStaged(StagedDirect.asData(table, staged), branch)
           committedDirect = true
         } else {
-          val df = table.spark.read.schema(tableStruct).parquet(files.toIndexedSeq: _*)
+          val df = table.spark.read.schema(tableStruct)
+            .parquet(staged.map(_.filePath).toIndexedSeq: _*)
           table.dynamicPartitionOverwrite(df, branch)
         }
       } // empty source → dynamic overwrite touches no partitions: no-op
@@ -1524,96 +1444,50 @@ class GraftDynamicOverwriteWrite(table: IceTable,
     try graft.meta.Io.delete(stagingDir, recursive = true) catch { case _: Exception => () }
 }
 
-final case class StagedFileMessage(path: String)
+/** A staging task's files, described by the task that wrote them. */
+final case class StagedFilesMessage(files: Seq[graft.meta.DataFile])
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
-/** Routed (partition-directory) staging: one task may close several
-  * files as it rolls across partition boundaries. */
-final case class StagedFilesMessage(paths: Seq[String])
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
+object StagedFilesMessage {
+  def files(messages: Seq[org.apache.spark.sql.connector.write.WriterCommitMessage])
+      : Seq[graft.meta.DataFile] =
+    messages.flatMap {
+      case StagedFilesMessage(fs) => fs
+      case _ => Nil
+    }
+}
 
-class GraftStagingWriterFactory(dir: String, schemaJson: String,
-    confEntries: Array[(String, String)],
+class GraftStagingWriterFactory(spec: graft.table.FileWriteSpec,
     lineageMetaIdx: Array[Int] = Array.empty,
-    router: PartitionRouterSpec = null,
-    maxRecords: Long = 0L)
+    router: PartitionRouterSpec = null)
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new GraftStagingWriter(dir, schemaJson, partitionId, taskId, confEntries,
-      lineageMetaIdx, router, maxRecords)
+    new GraftStagingWriter(spec, partitionId, taskId, lineageMetaIdx, router)
 }
 
-/** One staged parquet file per task, written with Spark's own
-  * ParquetWriteSupport (same encoder the DataFrame writer uses: micros
-  * timestamps, field ids, non-legacy layout). */
-class GraftStagingWriter(dir: String, schemaJson: String, partitionId: Int,
-    taskId: Long, confEntries: Array[(String, String)],
+/** A staging task's [[graft.table.DataFileWriter]]: Spark's own
+  * ParquetWriteSupport (micros timestamps, field ids, non-legacy layout)
+  * over the task's rows, closed files described in the commit message.
+  *
+  * ONE open file rolls across partition-directory boundaries (routed
+  * mode: the write's required clustering+ordering delivers rows grouped
+  * by partition; an out-of-order row merely starts an extra file, never a
+  * wrong tuple) and across the `maxRecords` cap (direct-committed files
+  * are FINAL data files, so they honor write.target-file-size instead of
+  * growing to a task's whole input). A zero-row task (empty shuffle
+  * partition per streaming epoch, a CoW DELETE task whose whole input is
+  * deleted) stages NOTHING: on direct-commit paths a file would become a
+  * permanent 0-record data file in the manifest. */
+class GraftStagingWriter(spec: graft.table.FileWriteSpec, partitionId: Int,
+    taskId: Long,
     lineageMetaIdx: Array[Int] = Array.empty,
-    router: PartitionRouterSpec = null,
-    maxRecords: Long = 0L)
+    router: PartitionRouterSpec = null)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 
-  private val conf = {
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val c = graft.meta.Io.confFrom(confEntries)
-    ParquetWriteSupport.setSchema(schema, c)
-    c.set("spark.sql.parquet.writeLegacyFormat", "false")
-    c.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    c.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    c.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-    c.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-    c.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
-    c.set("spark.sql.session.timeZone", "UTC")
-    c
-  }
+  private val files = new graft.table.DataFileWriter(spec, s"stage-$partitionId-$taskId")
 
-  private def open(p: String): org.apache.parquet.hadoop.ParquetWriter[InternalRow] =
-    new org.apache.parquet.hadoop.ParquetWriter[InternalRow](
-      new Path(p), new ParquetWriteSupport,
-      org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY,
-      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_BLOCK_SIZE,
-      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_PAGE_SIZE,
-      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_PAGE_SIZE,
-      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_IS_DICTIONARY_ENABLED,
-      false,
-      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_WRITER_VERSION,
-      conf)
-
-  // ONE open writer rolling across partition-directory boundaries
-  // (routed mode: the write's required clustering+ordering delivers
-  // rows grouped by partition; an out-of-order row merely starts an
-  // extra file, never a wrong tuple) and across the `maxRecords` cap
-  // (direct-committed files are FINAL data files, so they honor
-  // write.target-file-size instead of growing to a task's whole input).
-  // The file opens LAZILY on the first row: a zero-row task (empty
-  // shuffle partition per streaming epoch, a CoW DELETE task whose whole
-  // input is deleted) stages NOTHING — on direct-commit paths an eager
-  // open would harvest a permanent 0-record data file into the manifest
-  // every time, and every consumer reads staged files with an explicit
-  // schema, so the schema-bearing empty file served no one.
-  private var cur: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = null
-  private var curDir: String = null
-  private var curCount: Long = 0L
-  private val staged = Seq.newBuilder[String]
-
-  private def roll(d: String): Unit = {
-    if (cur != null) cur.close()
-    val p = s"$d/stage-$partitionId-$taskId-${java.util.UUID.randomUUID()}.parquet"
-    cur = open(p)
-    curDir = d
-    curCount = 0L
-    staged += p
-  }
-
-  private def target(row: InternalRow): org.apache.parquet.hadoop.ParquetWriter[InternalRow] = {
-    val d = if (router == null) dir else s"$dir/${router.dirOf(row)}"
-    if (cur == null || d != curDir || (maxRecords > 0 && curCount >= maxRecords))
-      roll(d)
-    curCount += 1
-    cur
-  }
+  private def dirOf(row: InternalRow): String = if (router == null) "" else router.dirOf(row)
 
   // lineage staging (v3 row-level ops): the staged schema carries two
   // trailing nullable longs (_row_id, _last_updated_sequence_number)
@@ -1624,32 +1498,28 @@ class GraftStagingWriter(dir: String, schemaJson: String, partitionId: Int,
     if (lineageMetaIdx.isEmpty) null
     else new org.apache.spark.sql.catalyst.expressions.JoinedRow
 
-  override def write(row: InternalRow): Unit = {
-    val w = target(row)
-    if (lineageMetaIdx.isEmpty) w.write(row)
+  override def write(row: InternalRow): Unit =
+    if (lineageMetaIdx.isEmpty) files.write(dirOf(row), row)
     else { // no metadata for this row (e.g. MERGE insert): null lineage
       lineageTail.setNullAt(0); lineageTail.setNullAt(1)
-      w.write(joined(row, lineageTail))
+      files.write(dirOf(row), joined(row, lineageTail))
     }
-  }
 
   /** Explicit lineage values (delta writers: update keeps the id with a
     * null seq, insert stages null/null). Requires a lineage-enabled
     * writer (non-empty lineageMetaIdx). */
   private[spark] def writeWithLineage(row: InternalRow,
       rowId: java.lang.Long, seq: java.lang.Long): Unit = {
-    val w = target(row)
     if (rowId == null) lineageTail.setNullAt(0) else lineageTail.setLong(0, rowId.longValue())
     if (seq == null) lineageTail.setNullAt(1) else lineageTail.setLong(1, seq.longValue())
-    w.write(joined(row, lineageTail))
+    files.write(dirOf(row), joined(row, lineageTail))
   }
 
   /** Two-arg form: Spark projects the operation's metadata attributes
     * into `meta` — layout (_file, _row_id, _last_updated_sequence_number)
     * per requiredMetadataAttributes order. */
-  override def write(meta: InternalRow, row: InternalRow): Unit = {
-    val w = target(row)
-    if (lineageMetaIdx.isEmpty) w.write(row)
+  override def write(meta: InternalRow, row: InternalRow): Unit =
+    if (lineageMetaIdx.isEmpty) files.write(dirOf(row), row)
     else {
       var i = 0
       while (i < 2) {
@@ -1658,23 +1528,13 @@ class GraftStagingWriter(dir: String, schemaJson: String, partitionId: Int,
         else lineageTail.setLong(i, meta.getLong(src))
         i += 1
       }
-      w.write(joined(row, lineageTail))
+      files.write(dirOf(row), joined(row, lineageTail))
     }
-  }
 
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    if (cur != null) cur.close()
-    staged.result() match {
-      case Seq(p) if router == null => StagedFileMessage(p)
-      case ps => StagedFilesMessage(ps)
-    }
-  }
+  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage =
+    StagedFilesMessage(files.close())
 
-  override def abort(): Unit = {
-    try { if (cur != null) cur.close() } catch { case _: Exception => () }
-    staged.result().foreach(p =>
-      try graft.meta.Io.delete(p) catch { case _: Exception => () })
-  }
+  override def abort(): Unit = files.abort()
 
   override def close(): Unit = ()
 }

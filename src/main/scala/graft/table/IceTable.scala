@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.catalog.{Catalog, CommitConflictException}
 import graft.core._
 import graft.meta._
+import graft.spark.GraftDeltaWrite
 
 /** Table handle: metadata + catalog + Spark session (ref:
   * pyiceberg/table/__init__.py:1147 Table).
@@ -168,17 +169,19 @@ class IceTable(
         "of an unpartitioned table is empty)")
     val frame = inspect.partitionStatsFrame(Some(snap.snapshotId))
       .orderBy(col("partition"))
-    val tmp = s"${metadataRoot(metadata.properties, location)}/partition-stats-tmp-${UUID.randomUUID()}"
-    frame.coalesce(1).write.parquet(tmp)
-    val part = graft.meta.Io.list(tmp).collect {
-      case (name, false) if name.endsWith(".parquet") => name
-    }.headOption.getOrElse(throw new IllegalStateException("stats write produced no file"))
-    val path = s"${metadataRoot(metadata.properties, location)}/partition-stats-${snap.snapshotId}-${UUID.randomUUID()}.parquet"
-    // single metadata-sized file: a read-write copy to its final name is
-    // cheaper than threading a cross-scheme rename seam through Io
-    graft.meta.Io.writeBytes(path, graft.meta.Io.readBytes(s"$tmp/$part"))
-    graft.meta.Io.delete(tmp, recursive = true)
-    val stats = PartitionStatisticsFile(snap.snapshotId, path, graft.meta.Io.size(path))
+    // ONE file at its final name: the frame in one task, written by the
+    // data-file writer straight under metadata/
+    val spec = DataFileWriter.spec(spark, metadataRoot(metadata.properties, location),
+      DataFileWriter.asNullable(frame.schema), Schema(Nil))
+    val prefix = s"partition-stats-${snap.snapshotId}"
+    val written = DataFileWriter.write(frame.coalesce(1), spec, prefix).headOption.getOrElse {
+      // no partitions: the file still carries the schema
+      val w = new DataFileWriter(spec, prefix)
+      w.open("")
+      w.close().head
+    }
+    val stats = PartitionStatisticsFile(snap.snapshotId, written.filePath,
+      written.fileSizeInBytes)
     setPartitionStatistics(stats)
     stats
   }
@@ -1269,20 +1272,18 @@ class IceTable(
     // (file, pos) of the LIVE matching rows: the read applies the deletes
     // already outstanding, so overlapping deletes never restate a
     // position an earlier delete file holds
-    IceScan.read(this, tasks, schema, keepFile = true, keepPos = true)
+    val positions = IceScan.read(this, tasks, schema, keepFile = true, keepPos = true)
       .where(ToColumn.compile(bound))
       .select(col("__file").as("file_path"), col("__pos").as("pos"))
       .orderBy(col("file_path"), col("pos"))
-      .write.parquet(stage)
     // FULL (untruncated) file_path bounds: equal lower/upper bounds are
     // how readers path-scope a delete file to its single target (the
     // reference's DeleteFileIndex rule) — the 16-char default truncation
     // would break the equality and demote every delete to a global
     // candidate
-    val written = WriteFiles.harvest(spark, stage, Schema(Seq(
-      NestedField(2147483546, "file_path", IString, required = true),
-      NestedField(2147483545, "pos", ILong, required = true))), PartitionSpec.Unpartitioned,
-      modes = Map(2147483546 -> "full", 2147483545 -> "full"))
+    val written = DataFileWriter.write(positions, DataFileWriter.spec(spark, stage,
+      GraftDeltaWrite.PosDeleteSchema.toSpark, GraftDeltaWrite.PosDeleteSchema,
+      modes = GraftDeltaWrite.PosDeleteModes))
       .filter(_.recordCount > 0)
       .map(_.copy(content = FileContent.PositionDeletes))
     commitSnapshot("delete", added = written,
@@ -1583,25 +1584,21 @@ class IceTable(
       .distinctBy(_.filePath)
     if (posFiles.isEmpty) return (0, 0)
     val stage = s"${metadata.properties.getOrElse("write.data.path", s"$location/data")}/${UUID.randomUUID()}"
-    val posSchema = Schema(Seq(
-      NestedField(2147483546, "file_path", IString, required = true),
-      NestedField(2147483545, "pos", ILong, required = true)))
-    // name-matched read: staged delete parquets don't carry field ids
+    // name-matched read: foreign delete parquets may carry no field ids
     val readSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("file_path",
         org.apache.spark.sql.types.StringType, nullable = false),
       org.apache.spark.sql.types.StructField("pos",
         org.apache.spark.sql.types.LongType, nullable = false)))
-    locally {
-      val live = spark.createDataset(tasks.map(_.file.filePath))(
-        org.apache.spark.sql.Encoders.STRING).toDF("live_path")
-      spark.read.schema(readSchema).parquet(posFiles.map(_.filePath): _*)
-        .join(live, col("file_path") === col("live_path"), "left_semi")
-        .dropDuplicates("file_path", "pos")
-        .orderBy(col("file_path"), col("pos"))
-        .write.parquet(stage)
-    }
-    val written = WriteFiles.harvest(spark, stage, posSchema, PartitionSpec.Unpartitioned)
+    val live = spark.createDataset(tasks.map(_.file.filePath))(
+      org.apache.spark.sql.Encoders.STRING).toDF("live_path")
+    val merged = spark.read.schema(readSchema)
+      .parquet(posFiles.map(_.filePath): _*)
+      .join(live, col("file_path") === col("live_path"), "left_semi")
+      .dropDuplicates("file_path", "pos")
+      .orderBy(col("file_path"), col("pos"))
+    val written = DataFileWriter.write(merged, DataFileWriter.spec(spark, stage,
+      GraftDeltaWrite.PosDeleteSchema.toSpark, GraftDeltaWrite.PosDeleteSchema))
       .filter(_.recordCount > 0)
       .map(_.copy(content = FileContent.PositionDeletes))
     // no-op guard: identical content in the same number of files → keep
@@ -1753,12 +1750,8 @@ class IceTable(
     // distinct() is already a shuffle on the key columns; AQE coalesces the
     // output to the key volume (no coalesce(1) funnel — a large key set
     // writes from many tasks)
-    WriteFiles.withScopedConfs(spark,
-      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-      "spark.sql.parquet.fieldId.write.enabled" -> "true") {
-      aligned.distinct().write.parquet(stage)
-    }
-    val written = WriteFiles.harvest(spark, stage, keySchema, PartitionSpec.Unpartitioned)
+    val written = DataFileWriter.write(aligned.distinct(), DataFileWriter.spec(spark, stage,
+      DataFileWriter.asNullable(aligned.schema), keySchema))
       .filter(_.recordCount > 0)
       .map(_.copy(content = FileContent.EqualityDeletes,
         equalityIds = keySchema.fields.map(_.id)))

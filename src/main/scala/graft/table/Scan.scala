@@ -202,7 +202,7 @@ final class IceScan(
       val keep = keepStats
       // executors lack the driver-installed Io.confFactory — ship the
       // session conf entries (custom schemes, s3a creds) into the closure,
-      // mirroring WriteFiles.harvest and the DSv2 reader factories
+      // mirroring DataFileWriter specs and the DSv2 reader factories
       val ioEntries = Io.confEntries(spark)
       mf => {
         val spec = specsById(mf.partitionSpecId)

@@ -1,41 +1,42 @@
 package graft.table
 
-import java.net.URLDecoder
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.core._
 import graft.meta._
 
-/** Data-file writing + statistics harvesting
-  * (ref: pyiceberg/io/pyarrow.py:2718 write_file, :2526
+/** Data-file writing (ref: pyiceberg/io/pyarrow.py:2718 write_file, :2526
   * data_file_statistics_from_parquet_metadata, :3053 _determine_partitions).
   *
   * Fan-out is a Spark shuffle: partition-transform columns are computed as
-  * synthetic columns and the write uses `partitionBy`, so one task writes
-  * each partition's files — the Arrow group-by loop of the reference
-  * becomes a distributed repartition. Identity source columns stay in the
-  * data files (Iceberg layout: partition values are metadata, data files
-  * carry all columns); the synthetic columns only shape the directory
-  * layout and are reparsed into partition tuples.
+  * synthetic columns and the rows are repartitioned and sorted by them, so
+  * one task writes each partition's files — the Arrow group-by loop of the
+  * reference becomes a distributed repartition. Identity source columns
+  * stay in the data files (Iceberg layout: partition values are metadata,
+  * data files carry all columns); the synthetic columns only shape the
+  * `_p_name=value/` directory layout and are reparsed into partition
+  * tuples.
   *
-  * Stats come from parquet footers, read as a distributed Spark job over
-  * the written files (at 100 TB a driver-side footer loop would be the
-  * bottleneck).
+  * Parquet files are written by [[DataFileWriter]] inside the write tasks,
+  * which return each file's DataFile built from its writer's footer: the
+  * write is ONE Spark job after the input's own stages, with no commit
+  * protocol and no second job reopening footers.
   */
 /** Data-location layout (ref: table/locations.py:103 Simple /
   * :115 ObjectStoreLocationProvider). Object-storage mode injects binary
   * entropy directories ahead of the commit dir so S3-style stores spread
   * requests across key prefixes instead of throttling one hot prefix.
-  * Deviation from the reference: entropy is per COMMIT (the Spark
-  * committer stages a whole commit under one directory), not per file —
+  * Deviation from the reference: entropy is per COMMIT (a commit's files
+  * share one directory), not per file —
   * same prefix fan-out across commits, cheaper listing within one. */
 object Locations {
   val HashBits = 20
@@ -75,8 +76,8 @@ object WriteFiles {
     * outlives any scope we could put here).
     *
     * Concurrency: the set-restore window is visible to other threads on
-    * the same session. The WRITE path therefore uses a cloned session
-    * (see `write`) — misread write confs corrupt files durably. The
+    * the same session. The ORC write therefore uses a cloned session
+    * (see `writeOrc`) — misread write confs corrupt files durably. The
     * remaining users scope READ confs (fieldId.read) whose worst foreign
     * effect is a transiently id-aware parquet read. */
   def withScopedConfs[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
@@ -152,15 +153,15 @@ object WriteFiles {
     * `write.metadata.metrics.column.<dotted.path>`): none | counts |
     * truncate(N) | full. */
   /** Iceberg `write.parquet.*` table properties → per-write parquet
-    * writer options (Spark forwards DataFrameWriter options into the
-    * write job's hadoop conf, where parquet-mr reads them). The
+    * writer options (parquet-mr keys, which [[DataFileWriter]] sets on its
+    * writer builder and Configuration). The
     * reference DECLARES these properties but warns "not implemented"
     * (io/pyarrow.py:2922 _get_parquet_writer_kwargs warns on row-group
     * size and bloom filter keys) — here they do work. Bloom filters are
     * the 100-TB point-lookup lever: an equality predicate on a
     * high-cardinality key (`id = X`) prunes row groups whose bloom says
     * "definitely absent" without decoding a page. */
-  private[table] def parquetWriterOptions(props: Map[String, String]): Map[String, String] = {
+  private[graft] def parquetWriterOptions(props: Map[String, String]): Map[String, String] = {
     val b = Map.newBuilder[String, String]
     props.get("write.parquet.compression-codec")
       .foreach(c => b += "compression" -> c)
@@ -237,13 +238,6 @@ object WriteFiles {
           "nanosecond timestamps are read-only in this engine (scans downcast ns to us)")
     val stageDir = Locations.stageDir(location, commitUuid, props)
     val aligned = align(df, schema)
-    // committer stays v1: v2's task-side commit can leave partial files of
-    // a failed attempt directly in stageDir, and harvest would register
-    // them as data (MAPREDUCE-7282). Under v1 uncommitted output lives in
-    // _temporary and never reaches the listing. The local-fs perf problem
-    // v2 papered over is addressed by RawLocalFileSystem (no .crc
-    // shadow files / fork-based checksummed renames) in the sessions we
-    // own — see Bench/Verify builders.
 
     // the table's sort order applies within each written file — tighter
     // min/max stats and better row-group pruning (the reference leaves
@@ -265,15 +259,13 @@ object WriteFiles {
         }
       case None => Nil
     }
-    def sorted(d: DataFrame): DataFrame =
-      if (sortCols.isEmpty) d else d.sortWithinPartitions(sortCols: _*)
 
     val orderId = sortOrder.filter(_.fields.nonEmpty).map(_.orderId)
 
     // file-size bound (ref: TableProperties write.target-file-size-bytes,
     // default 512 MB): one partition's rows land in ONE task, so without a
     // per-file record cap a hot partition writes one arbitrarily large
-    // file at 100 TB. Spark's lever is row-count based; rows are derived
+    // file at 100 TB. The cap is row-count based; rows are derived
     // from a schema-width estimate (strings/binary guessed) — approximate
     // by design. `write.spark.max-records-per-file` overrides exactly.
     val targetBytes = props.get("write.target-file-size-bytes").map(_.toLong)
@@ -284,129 +276,16 @@ object WriteFiles {
         math.max(1000L, targetBytes / rowBytes)
       }
 
-    // parquet physical settings the stats harvest + id-resolution rely on
-    // run on a CLONED session: concurrent operations on the shared session
-    // can never observe them, where a set-restore window could let another
-    // thread's write land field-id-less files under the data root
-    // (ADVICE r5). The clone shares the SparkContext; only session state
-    // (confs) is copied.
-    val ws = org.apache.spark.sql.GraftBridge.cloneSession(spark)
-    ws.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    ws.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    ws.conf.set("spark.sql.files.maxRecordsPerFile", maxRecords.toString)
-    def onWs(d: DataFrame): DataFrame = org.apache.spark.sql.GraftBridge.onSession(ws, d)
-
     // `write.format.default` (ref: TableProperties WRITE_FILE_FORMAT
-    // :181): data files write as parquet (default) or ORC — both via
-    // Spark's native writers, stats harvested from the matching footers.
-    // The reference only WRITES parquet; ORC write is our extension atop
-    // its ORC read path (io/pyarrow.py:1119).
+    // :181): data files write as parquet (default, DataFileWriter) or ORC
+    // (Spark's native writer, stats harvested from the ORC footers). The
+    // reference only WRITES parquet; ORC write is our extension atop its
+    // ORC read path (io/pyarrow.py:1119).
     val format = props.getOrElse("write.format.default", "parquet").toLowerCase
     require(format == "parquet" || format == "orc",
       s"Unsupported write.format.default: $format (parquet | orc)")
-    if (format == "orc") {
-      require(!schema.fields.exists(_.fieldType == IUUID),
-        "ORC write does not support uuid columns; use parquet")
-      // Spark's ORC writer has no TIMESTAMP_INSTANT output, so iceberg
-      // `timestamptz` can't be encoded spec-conformantly — refuse typed.
-      // Plain `timestamp` (ntz) IS writable: ORC's plain timestamp type,
-      // produced by casting to LTZ under the UTC write session (the
-      // int64 fallback Spark uses for NTZ is unreadable by foreign
-      // clients).
-      def hasTz(t: IceType): Boolean = t match {
-        case ITimestamptz => true
-        case IStruct(fs) => fs.exists(f => hasTz(f.fieldType))
-        case IList(_, el, _) => hasTz(el)
-        case IMap(_, k, _, v, _) => hasTz(k) || hasTz(v)
-        case _ => false
-      }
-      require(!schema.fields.exists(f => hasTz(f.fieldType)),
-        "ORC write does not support timestamptz columns " +
-          "(Spark's ORC writer cannot emit TIMESTAMP_INSTANT); use parquet")
-      // only TOP-LEVEL ntz columns get the LTZ cast below; a nested ntz
-      // would silently take Spark's int64 fallback — refuse it typed
-      def nestedNtz(t: IceType): Boolean = t match {
-        case IStruct(fs) => fs.exists(f => nestedNtz(f.fieldType) || f.fieldType == ITimestamp)
-        case IList(_, el, _) => nestedNtz(el) || el == ITimestamp
-        case IMap(_, k, _, v, _) =>
-          nestedNtz(k) || nestedNtz(v) || k == ITimestamp || v == ITimestamp
-        case _ => false
-      }
-      require(!schema.fields.exists(f => nestedNtz(f.fieldType)),
-        "ORC write does not support NESTED timestamp columns; use parquet")
-      ws.conf.set("spark.sql.session.timeZone", "UTC")
-    }
 
-    // write.uuid.fixed16=true: store uuid columns in the spec's physical
-    // layout (FLBA(16) + UUID annotation, like the reference's writer —
-    // io/pyarrow.py:2145+) via a per-partition ParquetWriter with a
-    // patched message type; Spark's own writer cannot emit FLBA
-    val fixed16 = props.get("write.uuid.fixed16").contains("true") &&
-      schema.fields.exists(_.fieldType == IUUID)
-    if (fixed16) {
-      val uuidCols = schema.fields.filter(_.fieldType == IUUID).map(_.name).toSet
-      // canonical string → 16 raw bytes (unhex of the dashless hex form);
-      // codegen'd builtins, no UDF
-      def conv(d: DataFrame): DataFrame = uuidCols.foldLeft(d)((d, n) =>
-        d.withColumn(n, unhex(regexp_replace(col(n), "-", ""))))
-      if (spec.isUnpartitioned)
-        writeFixed16(ws, onWs(conv(sorted(aligned))), stageDir, schema, uuidCols,
-          maxRecords, Nil, Nil)
-      else {
-        // same fan-out shape as the Spark-writer path: synthetic transform
-        // columns, explicit task count, salt escape hatch, rows sorted by
-        // (partition, table sort order) within each task so one writer is
-        // open at a time AND files honor the sortOrderId they're stamped
-        // with. Partition values are computed from the ORIGINAL canonical-
-        // string uuid representation (BEFORE the FLBA conversion) so
-        // uuid-sourced partition fields land as canonical strings.
-        val partCols = spec.fields.map { pf =>
-          val src = schema.byId(pf.sourceId)
-          pf.transform.column(col(src.name), src.fieldType).as(SyntheticPrefix + pf.name)
-        }
-        val withParts = conv(
-          aligned.select((aligned.columns.map(col) ++ partCols): _*))
-        val writeTasks = 4 * math.max(spark.sparkContext.defaultParallelism,
-          spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-        val saltBuckets = props.get("write.fanout.salt-buckets").map(_.toInt).getOrElse(1)
-        val saltCol = SyntheticPrefix + "salt"
-        val salted = if (saltBuckets > 1)
-          withParts.withColumn(saltCol,
-            pmod(hash(aligned.columns.map(col): _*), lit(saltBuckets)))
-        else withParts
-        val partKeys = spec.fields.map(pf => col(SyntheticPrefix + pf.name))
-        val repartKeys = partKeys ++
-          (if (saltBuckets > 1) Seq(col(saltCol)) else Nil)
-        // sort keys referencing uuid columns see the 16-byte binary form —
-        // byte order equals canonical-string order, so the file ordering
-        // still satisfies the declared sort order
-        val shuffled = salted.repartition(writeTasks, repartKeys: _*).drop(saltCol)
-          .sortWithinPartitions((partKeys ++ sortCols): _*)
-        writeFixed16(ws, onWs(shuffled), stageDir, schema, uuidCols, maxRecords,
-          spec.fields.map(pf => SyntheticPrefix + pf.name),
-          spec.partitionType(schema).map(_.fieldType.repr))
-      }
-      return harvest(spark, stageDir, schema, spec, metricsModes(schema, props))
-        .map(f => orderId.map(id => f.copy(sortOrderId = Some(id))).getOrElse(f))
-    }
-    val pqOpts = parquetWriterOptions(props)
-    def writeOut(d0: DataFrame, partBy: Seq[String]): Unit = {
-      // ntz columns cast to LTZ for ORC: under the UTC session this emits
-      // ORC's plain `timestamp` — the spec's encoding for iceberg ntz —
-      // instead of Spark's foreign-unreadable int64 fallback
-      val d = if (format == "orc")
-        schema.fields.filter(_.fieldType == ITimestamp).foldLeft(d0)((dd, f) =>
-          dd.withColumn(f.name,
-            col(f.name).cast(org.apache.spark.sql.types.TimestampType)))
-      else d0
-      val w0 = d.write.mode("overwrite")
-      val w1 = if (partBy.isEmpty) w0 else w0.partitionBy(partBy: _*)
-      if (format == "orc")
-        w1.option("compression",
-          props.getOrElse("write.orc.compression-codec", "zstd")).orc(stageDir)
-      else w1.options(pqOpts).parquet(stageDir)
-    }
-    locally {
+    val shaped: DataFrame =
       if (spec.isUnpartitioned) {
         // rebalance only pays when the input actually arrives as many
         // near-empty slices (cache/join-shaped churn: shuffle.partitions
@@ -420,9 +299,11 @@ object WriteFiles {
           aligned.queryExecution.executedPlan.outputPartitioning.numPartitions >=
             math.max(8, spark.sparkContext.defaultParallelism / 2)
         } catch { case _: Throwable => false })
-        writeOut(onWs(sorted(if (manySlices) aligned.hint("rebalance")
-          else aligned)), Nil)
+        val input = if (manySlices) aligned.hint("rebalance") else aligned
+        if (sortCols.isEmpty) input else input.sortWithinPartitions(sortCols: _*)
       } else {
+        // synthetic transform columns, appended after the data columns:
+        // they route each row to its `_p_name=value/` directory
         val partCols = spec.fields.map { pf =>
           val src = schema.byId(pf.sourceId)
           pf.transform.column(col(src.name), src.fieldType).as(SyntheticPrefix + pf.name)
@@ -450,19 +331,90 @@ object WriteFiles {
           withParts.withColumn(saltCol,
             pmod(hash(aligned.columns.map(col): _*), lit(saltBuckets)))
         else withParts
-        val repartKeys = spec.fields.map(pf => col(SyntheticPrefix + pf.name)) ++
-          (if (saltBuckets > 1) Seq(col(saltCol)) else Nil)
-        writeOut(onWs(sorted(salted.repartition(writeTasks, repartKeys: _*).drop(saltCol))),
-          spec.fields.map(pf => SyntheticPrefix + pf.name))
+        val partKeys = spec.fields.map(pf => col(SyntheticPrefix + pf.name))
+        val repartKeys = partKeys ++ (if (saltBuckets > 1) Seq(col(saltCol)) else Nil)
+        // rows sorted by (partition, table sort order) within each task:
+        // one file open at a time, and files honor the sortOrderId they
+        // are stamped with
+        salted.repartition(writeTasks, repartKeys: _*).drop(saltCol)
+          .sortWithinPartitions((partKeys ++ sortCols): _*)
       }
-    }
-    val harvested =
-      if (format == "orc") harvestOrc(spark, stageDir, schema, spec, metricsModes(schema, props))
-      else harvest(spark, stageDir, schema, spec, metricsModes(schema, props))
-    harvested.map(f => orderId.map(id => f.copy(sortOrderId = Some(id))).getOrElse(f))
+
+    val written =
+      if (format == "orc") writeOrc(spark, shaped, stageDir, schema, spec, maxRecords, props)
+      else {
+        // write.uuid.fixed16=true: uuid columns in the spec's physical
+        // layout (FLBA(16) + UUID annotation, like the reference's writer —
+        // io/pyarrow.py:2145+). The canonical string becomes 16 raw bytes
+        // (unhex of the dashless hex form; codegen'd builtins, no UDF)
+        // AFTER partition values and sort keys were computed from it.
+        val uuidCols =
+          if (!props.get("write.uuid.fixed16").contains("true")) Set.empty[String]
+          else schema.fields.filter(_.fieldType == IUUID).map(_.name).toSet
+        val rows = uuidCols.foldLeft(shaped)((d, n) =>
+          d.withColumn(n, unhex(regexp_replace(col(n), "-", ""))))
+        // every column optional, as Spark's own parquet writer stores them
+        val rowSchema = DataFileWriter.asNullable(StructType(aligned.schema.fields.map(f =>
+          if (uuidCols(f.name)) f.copy(dataType = BinaryType) else f)))
+        DataFileWriter.write(rows, DataFileWriter.spec(spark, stageDir, rowSchema, schema, spec,
+          metricsModes(schema, props), parquetWriterOptions(props), maxRecords, uuidCols))
+      }
+    written.map(f => orderId.map(id => f.copy(sortOrderId = Some(id))).getOrElse(f))
   }
 
-  /** ORC counterpart of [[harvest]]: same distributed shape, footer stats
+  /** ORC data files through Spark's native ORC writer, on a CLONED
+    * session: concurrent operations on the shared session never observe
+    * the write confs (ADVICE r5). Spark's v1 committer keeps a failed
+    * attempt's output under `_temporary`, out of [[harvestOrc]]'s listing. */
+  private def writeOrc(spark: SparkSession, shaped: DataFrame, stageDir: String,
+      schema: Schema, spec: PartitionSpec, maxRecords: Long,
+      props: Map[String, String]): Seq[DataFile] = {
+    require(!schema.fields.exists(_.fieldType == IUUID),
+      "ORC write does not support uuid columns; use parquet")
+    // Spark's ORC writer has no TIMESTAMP_INSTANT output, so iceberg
+    // `timestamptz` can't be encoded spec-conformantly — refuse typed.
+    // Plain `timestamp` (ntz) IS writable: ORC's plain timestamp type,
+    // produced by casting to LTZ under the UTC write session (the
+    // int64 fallback Spark uses for NTZ is unreadable by foreign
+    // clients).
+    def hasTz(t: IceType): Boolean = t match {
+      case ITimestamptz => true
+      case IStruct(fs) => fs.exists(f => hasTz(f.fieldType))
+      case IList(_, el, _) => hasTz(el)
+      case IMap(_, k, _, v, _) => hasTz(k) || hasTz(v)
+      case _ => false
+    }
+    require(!schema.fields.exists(f => hasTz(f.fieldType)),
+      "ORC write does not support timestamptz columns " +
+        "(Spark's ORC writer cannot emit TIMESTAMP_INSTANT); use parquet")
+    // only TOP-LEVEL ntz columns get the LTZ cast below; a nested ntz
+    // would silently take Spark's int64 fallback — refuse it typed
+    def nestedNtz(t: IceType): Boolean = t match {
+      case IStruct(fs) => fs.exists(f => nestedNtz(f.fieldType) || f.fieldType == ITimestamp)
+      case IList(_, el, _) => nestedNtz(el) || el == ITimestamp
+      case IMap(_, k, _, v, _) =>
+        nestedNtz(k) || nestedNtz(v) || k == ITimestamp || v == ITimestamp
+      case _ => false
+    }
+    require(!schema.fields.exists(f => nestedNtz(f.fieldType)),
+      "ORC write does not support NESTED timestamp columns; use parquet")
+    val ws = org.apache.spark.sql.GraftBridge.cloneSession(spark)
+    ws.conf.set("spark.sql.files.maxRecordsPerFile", maxRecords.toString)
+    ws.conf.set("spark.sql.session.timeZone", "UTC")
+    // ntz columns cast to LTZ: under the UTC session this emits ORC's
+    // plain `timestamp` — the spec's encoding for iceberg ntz — instead
+    // of Spark's foreign-unreadable int64 fallback
+    val d = schema.fields.filter(_.fieldType == ITimestamp).foldLeft(shaped)((dd, f) =>
+      dd.withColumn(f.name, col(f.name).cast(TimestampType)))
+    val partBy = spec.fields.map(pf => SyntheticPrefix + pf.name)
+    val w = org.apache.spark.sql.GraftBridge.onSession(ws, d).write.mode("overwrite")
+    (if (partBy.isEmpty) w else w.partitionBy(partBy: _*))
+      .option("compression", props.getOrElse("write.orc.compression-codec", "zstd"))
+      .orc(stageDir)
+    harvestOrc(spark, stageDir, schema, spec, metricsModes(schema, props))
+  }
+
+  /** Footer stats of the ORC files under `stageDir`, as a distributed job
     * via [[OrcStats]] (name-resolved — Spark's ORC writer emits no
     * iceberg.id attributes), partition tuples parsed from the fan-out
     * directory layout. */
@@ -486,140 +438,13 @@ object WriteFiles {
     }.collect().toSeq
   }
 
-  /** Per-partition ParquetWriter with the FLBA(16)-patched message type
-    * ([[graft.spark.GraftUuidFixed16WriteSupport]]); files roll at
-    * `maxRecords`. The uuid columns arrive as 16-byte BINARY values (the
-    * staged projection converts), declared BinaryType in the writer's
-    * catalyst schema WITH the original field-id metadata intact.
-    *
-    * Partitioned tables: `partNames`/`partTypeReprs` describe synthetic
-    * transform columns APPENDED to each row (the writer schema doesn't
-    * cover them, so ParquetWriteSupport never reads those indices); rows
-    * arrive sorted by partition, so each task streams through
-    * `_p_name=value/` directories with ONE open writer, exactly the
-    * layout `harvest`'s parsePartition reads back. */
-  private def writeFixed16(ws: SparkSession, df: DataFrame, stageDir: String,
-      schema: Schema, uuidCols: Set[String], maxRecords: Long,
-      partNames: Seq[String], partTypeReprs: Seq[String]): Unit = {
-    import org.apache.spark.sql.types.{BinaryType, DataType, StructType}
-    val base = schema.toSpark
-    val writerSchemaJson = StructType(base.fields.map(f =>
-      if (uuidCols(f.name)) f.copy(dataType = BinaryType) else f)).json
-    val confEntries = graft.meta.Io.confEntries(ws)
-    val dir = stageDir
-    val cols = uuidCols
-    val maxR = math.max(1L, maxRecords)
-    val nData = base.fields.length
-    val pNames = partNames
-    val pTypes = partTypeReprs
-    org.apache.spark.sql.GraftBridge.internalRowRDD(df).foreachPartition { it =>
-      if (it.hasNext) {
-        val conf = graft.meta.Io.confFrom(confEntries)
-        val sch = DataType.fromJson(writerSchemaJson).asInstanceOf[StructType]
-        org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-          .setSchema(sch, conf)
-        conf.set("spark.sql.parquet.writeLegacyFormat", "false")
-        conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-        conf.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-        conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
-        conf.set("spark.sql.session.timeZone", "UTC")
-        val part = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
-        val iceTypes = pTypes.map(StatsHarvester.parseType)
-        def partString(i: Int, row: org.apache.spark.sql.catalyst.InternalRow): String = {
-          val idx = nData + i
-          if (row.isNullAt(idx)) return "__HIVE_DEFAULT_PARTITION__"
-          iceTypes(i) match {
-            case IDate => java.time.LocalDate.ofEpochDay(row.getInt(idx).toLong).toString
-            case ITimestamp | ITimestamptz =>
-              val us = row.getLong(idx)
-              java.time.LocalDateTime.ofEpochSecond(
-                Math.floorDiv(us, 1000000L),
-                (Math.floorMod(us, 1000000L) * 1000L).toInt,
-                java.time.ZoneOffset.UTC).toString
-            // identity(uuid) partition values are computed pre-conversion,
-            // so they arrive as canonical lowercase strings
-            case IString | IUUID => row.getUTF8String(idx).toString
-            case IInt => row.getInt(idx).toString
-            case ILong => row.getLong(idx).toString
-            case IBoolean => row.getBoolean(idx).toString
-            case IFloat => row.getFloat(idx).toString
-            case IDouble => row.getDouble(idx).toString
-            case IDecimal(p, s) => row.getDecimal(idx, p, s).toJavaBigDecimal.toPlainString
-            case other => throw new IllegalArgumentException(
-              s"Unsupported fixed16 partition value type $other")
-          }
-        }
-        // %XX-escape anything outside [A-Za-z0-9._-]; parsePartition's
-        // decoder reverses exactly this
-        def escape(s: String): String = {
-          val b = new StringBuilder
-          s.getBytes(java.nio.charset.StandardCharsets.UTF_8).foreach { by =>
-            val c = by.toChar
-            val safe = by >= 0 &&
-              (c.isLetterOrDigit || c == '.' || c == '_' || c == '-')
-            if (safe) b += c else b ++= f"%%${by & 0xff}%02X"
-          }
-          b.toString
-        }
-        def dirOf(row: org.apache.spark.sql.catalyst.InternalRow): String =
-          if (pNames.isEmpty) dir
-          else dir + "/" + pNames.indices.map(i =>
-            s"${pNames(i)}=${escape(partString(i, row))}").mkString("/")
-        def open(d: String) = new org.apache.parquet.hadoop.ParquetWriter[
-            org.apache.spark.sql.catalyst.InternalRow](
-          new Path(s"$d/f16-$part-${java.util.UUID.randomUUID()}.parquet"),
-          new graft.spark.GraftUuidFixed16WriteSupport(cols),
-          org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY,
-          org.apache.parquet.hadoop.ParquetWriter.DEFAULT_BLOCK_SIZE,
-          org.apache.parquet.hadoop.ParquetWriter.DEFAULT_PAGE_SIZE,
-          org.apache.parquet.hadoop.ParquetWriter.DEFAULT_PAGE_SIZE,
-          org.apache.parquet.hadoop.ParquetWriter.DEFAULT_IS_DICTIONARY_ENABLED,
-          false,
-          org.apache.parquet.hadoop.ParquetWriter.DEFAULT_WRITER_VERSION,
-          conf)
-        // ParquetWriteSupport.writeFields walks row.numFields, so rows
-        // carrying synthetic partition columns must be projected down to
-        // the data prefix before writing
-        val dataProj: org.apache.spark.sql.catalyst.InternalRow =>
-            org.apache.spark.sql.catalyst.InternalRow =
-          if (pNames.isEmpty) identity
-          else {
-            val p = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
-              sch.fields.zipWithIndex.map { case (f, i) =>
-                org.apache.spark.sql.catalyst.expressions.BoundReference(
-                  i, f.dataType, f.nullable)
-              }.toIndexedSeq)
-            row => p(row)
-          }
-        var curDir: String = null
-        var writer: org.apache.parquet.hadoop.ParquetWriter[
-          org.apache.spark.sql.catalyst.InternalRow] = null
-        var n = 0L
-        it.foreach { row =>
-          val d = dirOf(row)
-          if (writer == null || d != curDir || n >= maxR) {
-            if (writer != null) writer.close()
-            curDir = d; writer = open(d); n = 0L
-          }
-          writer.write(dataProj(row))
-          n += 1
-        }
-        if (writer != null) writer.close()
-      }
-    }
-  }
-
-  /** Recursively list `.parquet` files under `dir`.
+  /** Recursively list files ending in `suffix` under `dir`.
     *
     * Local paths go through java.nio: Hadoop's RawLocalFileSystem builds
     * each FileStatus by FORKING `ls` to load permissions (~30ms/file), so
     * a recursive listing over thousands of partition directories takes
     * minutes. Remote schemes (s3/hdfs) keep the Hadoop listing, whose
     * native LIST calls are fine at scale. */
-  def listParquet(dir: String): Seq[String] = listBySuffix(dir, ".parquet")
-
   def listBySuffix(dir: String, suffix: String): Seq[String] = {
     // locality from the RESOLVED filesystem, not string sniffing: a
     // scheme-less path resolves against fs.defaultFS, which on a cluster
@@ -648,43 +473,6 @@ object WriteFiles {
     }
   }
 
-  /** List written files and collect footer stats as a distributed job.
-    * `only` restricts to files a committer EXPLICITLY named (canon
-    * paths): task-commit protocols that stage into a shared directory
-    * pass their commit-message paths so a failed attempt's partial file
-    * (no footer yet) is never opened or registered. */
-  def harvest(spark: SparkSession, stageDir: String, schema: Schema,
-      spec: PartitionSpec, modes: Map[Int, String] = Map.empty,
-      only: Option[Set[String]] = None): Seq[DataFile] = {
-    val listed = listParquet(stageDir)
-    val files = only match {
-      case Some(keep) => listed.filter(p => keep.contains(PathUtil.canon(p)))
-      case None => listed
-    }
-    if (files.isEmpty) return Nil
-
-    // (dotted path, id, type-repr) for every primitive leaf — struct
-    // members get their own stats rows keyed by nested field id
-    val colInfo: Seq[(String, Int, String)] = schema.leafColInfo
-    val stage = stageDir
-    val partFieldNames = spec.fields.map(pf => SyntheticPrefix + pf.name)
-    val partTypes = spec.partitionType(schema).map(_.fieldType.repr)
-
-    // 4 slices per core for balance (footer sizes vary); one Hadoop
-    // Configuration per task, NOT per file — its constructor parses XML
-    // resources and dominates when harvesting thousands of small files.
-    // The SESSION conf entries ship with the task: a bare Configuration()
-    // in the executor would lose spark.hadoop.* (custom schemes, creds)
-    val confEntries = graft.meta.Io.confEntries(spark)
-    val slices = math.max(1,
-      math.min(files.size, 4 * spark.sparkContext.defaultParallelism))
-    spark.sparkContext.parallelize(files, slices).mapPartitions { paths =>
-      lazy val conf = graft.meta.Io.confFrom(confEntries)
-      paths.map(path =>
-        StatsHarvester.fileToDataFile(path, stage, colInfo, partFieldNames, partTypes,
-          conf, modes))
-    }.collect().toSeq
-  }
 }
 
 /** Executor-side footer reading (kept free of Spark session state). */
@@ -778,6 +566,9 @@ object StatsHarvester extends Serializable {
     }
   }
 
+  /** DataFile of a parquet file on storage: its footer read back, the
+    * partition tuple parsed from its path under `stageDir` (add_files
+    * passes no partition fields and infers the tuple from the bounds). */
   def fileToDataFile(path: String, stageDir: String, colInfo: Seq[(String, Int, String)],
       partFieldNames: Seq[String], partTypes: Seq[String],
       conf: Configuration = new Configuration(),
@@ -796,96 +587,104 @@ object StatsHarvester extends Serializable {
         HadoopInputFile.fromPath(p, conf): org.apache.parquet.io.InputFile)
     }
     val reader = ParquetFileReader.open(input, plainReadOptions)
-    try {
-      val footer = reader.getFooter
-      val blocks = footer.getBlocks
-      var rows = 0L
-      val valueCounts = scala.collection.mutable.Map[Int, Long]()
-      val nullCounts = scala.collection.mutable.Map[Int, Long]()
-      val colSizes = scala.collection.mutable.Map[Int, Long]()
-      val lowers = scala.collection.mutable.Map[Int, Any]()
-      val uppers = scala.collection.mutable.Map[Int, Any]()
-      val byName = colInfo.map(c => c._1 -> c).toMap
-      val modeById: Map[Int, ModeSpec] = colInfo.map { case (_, id, _) =>
-        id -> modes.get(id).map(parseMode)
-          .getOrElse(ModeSpec(counts = true, bounds = true, Some(BoundTruncateLength)))
-      }.toMap
-      val it = blocks.iterator()
-      while (it.hasNext) {
-        val block = it.next()
-        rows += block.getRowCount
-        val cit = block.getColumns.iterator()
-        while (cit.hasNext) {
-          val cc = cit.next()
-          // full dotted path: nested leaves match their own field id
-          val pathName = cc.getPath.toArray.mkString(".")
-          byName.get(pathName).foreach { case (_, id, trepr) =>
-            val t = parseType(trepr)
-            val mode = modeById(id)
-            colSizes(id) = colSizes.getOrElse(id, 0L) + cc.getTotalSize
-            if (mode.counts) {
-              valueCounts(id) = valueCounts.getOrElse(id, 0L) + cc.getValueCount
-            }
-            val st = cc.getStatistics
-            if (mode.counts && st != null && !st.isEmpty) {
-              nullCounts(id) = nullCounts.getOrElse(id, 0L) + st.getNumNulls
-              if (mode.bounds && st.hasNonNullValue) {
-                val mn = decodeStat(st.genericGetMin, cc.getPrimitiveType.getPrimitiveTypeName, t)
-                val mx = decodeStat(st.genericGetMax, cc.getPrimitiveType.getPrimitiveTypeName, t)
-                (mn, mx) match {
-                  case (Some(a), Some(b)) =>
-                    lowers(id) = lowers.get(id).map(cur =>
-                      if (Literals.compare(t, a, cur) < 0) a else cur).getOrElse(a)
-                    uppers(id) = uppers.get(id).map(cur =>
-                      if (Literals.compare(t, b, cur) > 0) b else cur).getOrElse(b)
-                  case _ =>
-                }
+    try footerToDataFile(path, size, reader.getFooter,
+      parsePartition(path, stageDir, partFieldNames, partTypes), colInfo, modes)
+    finally reader.close()
+  }
+
+  /** DataFile of the parquet file at `path` from its footer: record
+    * count, split offsets and per-leaf counts, sizes and bounds under
+    * each column's metrics mode (ref: io/pyarrow.py:2526
+    * data_file_statistics_from_parquet_metadata). */
+  def footerToDataFile(path: String, size: Long, footer: ParquetMetadata,
+      partition: Seq[Any], colInfo: Seq[(String, Int, String)],
+      modes: Map[Int, String]): DataFile = {
+    val blocks = footer.getBlocks
+    var rows = 0L
+    val valueCounts = scala.collection.mutable.Map[Int, Long]()
+    val nullCounts = scala.collection.mutable.Map[Int, Long]()
+    val colSizes = scala.collection.mutable.Map[Int, Long]()
+    val lowers = scala.collection.mutable.Map[Int, Any]()
+    val uppers = scala.collection.mutable.Map[Int, Any]()
+    val byName = colInfo.map(c => c._1 -> c).toMap
+    val modeById: Map[Int, ModeSpec] = colInfo.map { case (_, id, _) =>
+      id -> modes.get(id).map(parseMode)
+        .getOrElse(ModeSpec(counts = true, bounds = true, Some(BoundTruncateLength)))
+    }.toMap
+    val it = blocks.iterator()
+    while (it.hasNext) {
+      val block = it.next()
+      rows += block.getRowCount
+      val cit = block.getColumns.iterator()
+      while (cit.hasNext) {
+        val cc = cit.next()
+        // full dotted path: nested leaves match their own field id
+        val pathName = cc.getPath.toArray.mkString(".")
+        byName.get(pathName).foreach { case (_, id, trepr) =>
+          val t = parseType(trepr)
+          val mode = modeById(id)
+          colSizes(id) = colSizes.getOrElse(id, 0L) + cc.getTotalSize
+          if (mode.counts) {
+            valueCounts(id) = valueCounts.getOrElse(id, 0L) + cc.getValueCount
+          }
+          val st = cc.getStatistics
+          if (mode.counts && st != null && !st.isEmpty) {
+            nullCounts(id) = nullCounts.getOrElse(id, 0L) + st.getNumNulls
+            if (mode.bounds && st.hasNonNullValue) {
+              val mn = decodeStat(st.genericGetMin, cc.getPrimitiveType.getPrimitiveTypeName, t)
+              val mx = decodeStat(st.genericGetMax, cc.getPrimitiveType.getPrimitiveTypeName, t)
+              (mn, mx) match {
+                case (Some(a), Some(b)) =>
+                  lowers(id) = lowers.get(id).map(cur =>
+                    if (Literals.compare(t, a, cur) < 0) a else cur).getOrElse(a)
+                  uppers(id) = uppers.get(id).map(cur =>
+                    if (Literals.compare(t, b, cur) > 0) b else cur).getOrElse(b)
+                case _ =>
               }
             }
           }
         }
       }
-      // bound truncation for strings (metrics mode truncate(N), default 16):
-      // keeps manifests small at scale while staying valid for pruning;
-      // `full` mode keeps whole bounds. uuid is exempt: bounds serialize as
-      // 16-byte vectors (Conversions.toBytes needs the whole canonical
-      // string) and there is nothing to save by truncating
-      colInfo.foreach { case (_, id, trepr) =>
-        val trunc = modeById(id).trunc
-        if (trepr == "string" && trunc.isDefined) {
-          val n = trunc.get
-          lowers.get(id).foreach(v => lowers(id) = truncateLower(v.toString, n))
-          uppers.get(id).foreach { v =>
-            truncateUpper(v.toString, n) match {
-              case Some(u) => uppers(id) = u
-              case None => uppers.remove(id)
-            }
+    }
+    // bound truncation for strings (metrics mode truncate(N), default 16):
+    // keeps manifests small at scale while staying valid for pruning;
+    // `full` mode keeps whole bounds. uuid is exempt: bounds serialize as
+    // 16-byte vectors (Conversions.toBytes needs the whole canonical
+    // string) and there is nothing to save by truncating
+    colInfo.foreach { case (_, id, trepr) =>
+      val trunc = modeById(id).trunc
+      if (trepr == "string" && trunc.isDefined) {
+        val n = trunc.get
+        lowers.get(id).foreach(v => lowers(id) = truncateLower(v.toString, n))
+        uppers.get(id).foreach { v =>
+          truncateUpper(v.toString, n) match {
+            case Some(u) => uppers(id) = u
+            case None => uppers.remove(id)
           }
         }
       }
-      val partition = parsePartition(path, stageDir, partFieldNames, partTypes)
-      // row-group start offsets (spec: split_offsets, ascending) — what
-      // lets the scan split a large file into sub-file read tasks
-      val splitOffsets = {
-        val b = Seq.newBuilder[Long]
-        val bit = blocks.iterator()
-        while (bit.hasNext) b += bit.next().getStartingPos
-        b.result()
-      }
-      DataFile(
-        content = FileContent.Data,
-        filePath = PathUtil.canon(path),
-        fileFormat = "PARQUET",
-        partition = partition,
-        recordCount = rows,
-        fileSizeInBytes = size,
-        valueCounts = valueCounts.toMap,
-        nullValueCounts = nullCounts.toMap,
-        lowerBounds = lowers.toMap,
-        upperBounds = uppers.toMap,
-        columnSizes = colSizes.toMap,
-        splitOffsets = splitOffsets)
-    } finally reader.close()
+    }
+    // row-group start offsets (spec: split_offsets, ascending) — what
+    // lets the scan split a large file into sub-file read tasks
+    val splitOffsets = {
+      val b = Seq.newBuilder[Long]
+      val bit = blocks.iterator()
+      while (bit.hasNext) b += bit.next().getStartingPos
+      b.result()
+    }
+    DataFile(
+      content = FileContent.Data,
+      filePath = PathUtil.canon(path),
+      fileFormat = "PARQUET",
+      partition = partition,
+      recordCount = rows,
+      fileSizeInBytes = size,
+      valueCounts = valueCounts.toMap,
+      nullValueCounts = nullCounts.toMap,
+      lowerBounds = lowers.toMap,
+      upperBounds = uppers.toMap,
+      columnSizes = colSizes.toMap,
+      splitOffsets = splitOffsets)
   }
 
   /** Decode a parquet footer min/max into the Iceberg internal value. */
@@ -922,7 +721,7 @@ object StatsHarvester extends Serializable {
     val rel = path.stripPrefix("file:").stripPrefix(stageDir.stripPrefix("file:")).stripPrefix("/")
     // %XX-only decode — java.net.URLDecoder would ALSO turn a literal '+'
     // into a space (it implements form encoding, not path escaping), and
-    // neither Spark's escapePathName nor our fixed16 writer encodes '+'
+    // Spark's escapePathName (ORC directories) leaves '+' literal
     def isHex(c: Char) = (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') ||
       (c >= 'A' && c <= 'F')
     def unescape(s: String): String = {

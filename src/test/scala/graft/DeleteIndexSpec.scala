@@ -12,10 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.HadoopCatalog
 import graft.core._
-import graft.meta.{DataFile, FileContent, PartitionSpec}
+import graft.meta.{DataFile, FileContent}
 import graft.spark.{DeleteFileRef, DeleteIndex}
 import graft.streaming.TableChanges
-import graft.table.{FileScanTask, IceTable, WriteFiles}
+import graft.table.{DataFileWriter, FileScanTask, IceTable}
 
 /** Every delete source — a position-delete file, a DV blob, an equality
   * file — is decoded once per JVM and then served from the
@@ -63,14 +63,14 @@ class DeleteIndexSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSp
   def positionDeleteFile(tasks: Seq[FileScanTask], dead: Column,
       stored: String => String = identity): DataFile = {
     val stage = s"${Files.createTempDirectory("delidx-del")}/d"
-    tasks.map { tk =>
+    val rows = tasks.map { tk =>
       spark.read.parquet(tk.file.filePath).filter(dead).select(
         lit(stored(PathUtil.canon(tk.file.filePath))).as("file_path"),
         col("_metadata.row_index").as("pos"))
     }.reduce(_ union _).repartition(1).sortWithinPartitions("file_path", "pos")
-      .write.parquet(stage)
-    val Seq(written) = WriteFiles.harvest(spark, stage, positionSchema,
-      PartitionSpec.Unpartitioned, modes = Map(2147483546 -> "full", 2147483545 -> "full"))
+    val Seq(written) = DataFileWriter.write(rows, DataFileWriter.spec(spark, stage,
+      positionSchema.toSpark, positionSchema,
+      modes = Map(2147483546 -> "full", 2147483545 -> "full")))
     written.copy(content = FileContent.PositionDeletes)
   }
 

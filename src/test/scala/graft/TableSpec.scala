@@ -2183,7 +2183,7 @@ class TableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory("graft-addfiles").toString
     orders.filter(col("o_orderstatus") === "F").coalesce(1).write.parquet(s"$dir/f")
     orders.filter(col("o_orderstatus") === "O").coalesce(1).write.parquet(s"$dir/o")
-    def one(d: String) = WriteFiles.listParquet(d).head
+    def one(d: String) = WriteFiles.listBySuffix(d, ".parquet").head
     t.addFiles(Seq(one(s"$dir/f"), one(s"$dir/o")))
     // inferred tuples drive partition pruning
     assert(t.scan("o_orderstatus = 'F'").planFiles().size === 1)
