@@ -175,6 +175,9 @@ object GraftSparkTable {
     * operations identify rows by (_file, _pos). */
   val FileColumn = "_file"
   val PosColumn = "_pos"
+  /** A planned read's per-task tag ([[PlannedRead]]): advertised only by
+    * [[GraftPlannedTable]], never by a catalog table. */
+  val TagColumn = "_tag"
   /** v3 row lineage metadata columns (spec §Row Lineage): advertised only
     * on format-version ≥ 3 tables; served inherited (first_row_id +
     * position) or from the MATERIALIZED reserved columns of rewritten
@@ -183,39 +186,26 @@ object GraftSparkTable {
   val RowIdColumn: String = graft.core.RowLineage.RowIdName
   val LastUpdatedColumn: String = graft.core.RowLineage.LastUpdatedName
 
+  /** A non-null metadata column. */
+  def metadataColumn(colName: String, tpe: DataType,
+      doc: String): org.apache.spark.sql.connector.catalog.MetadataColumn =
+    new org.apache.spark.sql.connector.catalog.MetadataColumn {
+      override def name(): String = colName
+      override def dataType(): DataType = tpe
+      override def isNullable: Boolean = false
+      override def comment(): String = doc
+    }
+
   def metadataColumnsOf(table: IceTable)
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     Array(
-      new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = GraftSparkTable.FileColumn
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.StringType
-        override def isNullable: Boolean = false
-        override def comment(): String = "Path of the file the row belongs to"
-      },
-      new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = GraftSparkTable.PosColumn
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.LongType
-        override def isNullable: Boolean = false
-        override def comment(): String = "Row position in the file"
-      }) ++ (if (table.metadata.formatVersion < 3) Nil else Seq(
-      new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = GraftSparkTable.RowIdColumn
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.LongType
-        override def isNullable: Boolean = false
-        override def comment(): String =
-          "v3 row lineage: unique id assigned when the row was first added"
-      },
-      new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = GraftSparkTable.LastUpdatedColumn
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.LongType
-        override def isNullable: Boolean = false
-        override def comment(): String =
-          "v3 row lineage: sequence number of the commit that last updated the row"
-      }))
+      metadataColumn(FileColumn, StringType, "Path of the file the row belongs to"),
+      metadataColumn(PosColumn, LongType, "Row position in the file")) ++
+      (if (table.metadata.formatVersion < 3) Nil else Seq(
+        metadataColumn(RowIdColumn, LongType,
+          "v3 row lineage: unique id assigned when the row was first added"),
+        metadataColumn(LastUpdatedColumn, LongType,
+          "v3 row lineage: sequence number of the commit that last updated the row")))
 }
 
 /** Read-only face of one [[PlannedRead]]: the table-API scans
@@ -252,7 +242,12 @@ class GraftPlannedTable(table: IceTable, read: PlannedRead)
     classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    GraftSparkTable.metadataColumnsOf(table)
+    GraftSparkTable.metadataColumnsOf(table) ++ (if (read.tags.isEmpty) Nil else Seq(
+      GraftSparkTable.metadataColumn(GraftSparkTable.TagColumn, LongType,
+        "Tag of the planned task the row was read by")))
+  /** a data column named like a metadata column keeps its name; the
+    * metadata column stays reachable through `Dataset.metadataColumn` */
+  override def canRenameConflictingMetadataColumns(): Boolean = true
 }
 
 /** The planned data files as a file index: statuses come from the
@@ -1562,6 +1557,10 @@ class GraftScanBuilder(table: IceTable, snapshotId: Option[Long] = None,
   private var emitFile: Boolean = false
   private var emitPos: Boolean = false
   private var emitLineage: Boolean = false
+  private var emitTag: Boolean = false
+  /** metadata column → the name Spark requested it under (a planned read
+    * renames one that a data column of the same name shadows) */
+  private var metaNames: Map[String, String] = Map.empty
   private var limit: Long = -1L
   private var aggResult: Option[(StructType, Seq[Array[Any]])] = None
 
@@ -1580,18 +1579,22 @@ class GraftScanBuilder(table: IceTable, snapshotId: Option[Long] = None,
   override def pushedFilters(): Array[sources.Filter] = pushed
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
-    // `_file` / `_pos` are metadata columns (SupportsMetadataColumns), not
-    // data columns: strip them here, re-append LAST in the scan's
-    // readSchema so readers emit [data columns..., _file, _pos]
-    emitFile = requiredSchema.fieldNames.contains(GraftSparkTable.FileColumn) ||
-      requiredSchema.fieldNames.contains(GraftSparkTable.PosColumn)
-    emitPos = requiredSchema.fieldNames.contains(GraftSparkTable.PosColumn)
-    emitLineage = requiredSchema.fieldNames.contains(GraftSparkTable.RowIdColumn) ||
-      requiredSchema.fieldNames.contains(GraftSparkTable.LastUpdatedColumn)
-    required = StructType(requiredSchema.fields.filterNot(f =>
-      f.name == GraftSparkTable.FileColumn || f.name == GraftSparkTable.PosColumn ||
-        f.name == GraftSparkTable.RowIdColumn ||
-        f.name == GraftSparkTable.LastUpdatedColumn))
+    // metadata columns (SupportsMetadataColumns) are not data columns and
+    // are told apart by Spark's metadata-attribute marker, not by name, so
+    // a data column named `_tag` stays data: strip them here, re-append
+    // LAST in the scan's readSchema so readers emit [data columns..., _file,
+    // _pos, lineage, _tag]
+    val (meta, data) = requiredSchema.fields.partition(f =>
+      f.metadata.contains(org.apache.spark.sql.catalyst.util.METADATA_COL_ATTR_KEY))
+    metaNames = meta.map(f => f.metadata.getString(
+      org.apache.spark.sql.catalyst.util.METADATA_COL_ATTR_KEY) -> f.name).toMap
+    emitFile = metaNames.contains(GraftSparkTable.FileColumn) ||
+      metaNames.contains(GraftSparkTable.PosColumn)
+    emitPos = metaNames.contains(GraftSparkTable.PosColumn)
+    emitLineage = metaNames.contains(GraftSparkTable.RowIdColumn) ||
+      metaNames.contains(GraftSparkTable.LastUpdatedColumn)
+    emitTag = metaNames.contains(GraftSparkTable.TagColumn)
+    required = StructType(data)
   }
 
   private def toExpr(f: sources.Filter): Option[Expr] = GraftFilters.toExpr(f)
@@ -1638,7 +1641,8 @@ class GraftScanBuilder(table: IceTable, snapshotId: Option[Long] = None,
           Option(options.get("max-bytes-per-trigger")).map(_.toLong),
         // a group-based row-level operation rewrites EVERY row of each
         // selected file: there, pushed filters select files, never rows
-        pushedFilters = if (wholeFiles) Array.empty else pushed, planned = planned)
+        pushedFilters = if (wholeFiles) Array.empty else pushed, planned = planned,
+        emitTag = emitTag, metaNames = metaNames)
       // the row-level operation's write needs THIS scan at commit (the
       // CoW replacement group / the delta conflict filter)
       onScanBuilt(scan)
@@ -2036,6 +2040,9 @@ final case class GraftInputPartition(
     firstRowId: Long = -1L,
     /** the file entry's data sequence number (v3 lineage). */
     dataSeq: Long = -1L,
+    /** the task's tag in a tagged [[PlannedRead]], appended as the `_tag`
+      * metadata column after everything else. */
+    tag: Option[Long] = None,
     /** columns resolve by NAME: `readSchemaJson` carries the name
       * mapping's registration-time names at every nesting level (files
       * registered by add_files carry no field ids). */
@@ -2049,7 +2056,12 @@ final case class GraftInputPartition(
 /** Tasks an [[graft.table.IceScan]] has already planned, and the schema
   * their columns resolve against: the table-API reads run on
   * [[GraftScan]] through this instead of re-planning. */
-final case class PlannedRead(tasks: Seq[graft.table.FileScanTask], schema: Schema)
+final case class PlannedRead(tasks: Seq[graft.table.FileScanTask], schema: Schema,
+    /** one per task, emitted as the `_tag` column of the task's rows;
+      * empty = an untagged read without that column */
+    tags: Seq[Long] = Nil) {
+  require(tags.isEmpty || tags.size == tasks.size, "one tag per planned task")
+}
 
 object GraftScan {
   /** Test seam: partition count of the last planInputPartitions in this
@@ -2182,7 +2194,9 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
     schemaAtOrNull: Option[Long] = null, emitLineage: Boolean = false,
     maxBytesPerTrigger: Option[Long] = None,
     pushedFilters: Array[sources.Filter] = Array.empty,
-    planned: Option[PlannedRead] = None)
+    planned: Option[PlannedRead] = None,
+    emitTag: Boolean = false,
+    metaNames: Map[String, String] = Map.empty)
     extends Scan with Batch with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
     with SupportsReportStatistics with SupportsReportPartitioning {
@@ -2201,18 +2215,17 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
     s"GraftScan ${table.name} PushedFilters: ${pushedFilters.mkString("[", ", ", "]")}, " +
       s"ReadSchema: ${readSchema().catalogString}"
 
-  override def readSchema(): StructType =
-    if (!emitFile && !emitLineage) required
+  override def readSchema(): StructType = {
+    def meta(name: String, t: DataType) =
+      StructField(metaNames.getOrElse(name, name), t, nullable = false)
+    if (!emitFile && !emitLineage && !emitTag) required
     else StructType(required.fields ++
-      (if (emitFile) Seq(org.apache.spark.sql.types.StructField(GraftSparkTable.FileColumn,
-        org.apache.spark.sql.types.StringType, nullable = false)) else Nil) ++
-      (if (emitPos) Seq(org.apache.spark.sql.types.StructField(GraftSparkTable.PosColumn,
-        org.apache.spark.sql.types.LongType, nullable = false)) else Nil) ++
-      (if (emitLineage) Seq(
-        org.apache.spark.sql.types.StructField(GraftSparkTable.RowIdColumn,
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField(GraftSparkTable.LastUpdatedColumn,
-          org.apache.spark.sql.types.LongType, nullable = false)) else Nil))
+      (if (emitFile) Seq(meta(GraftSparkTable.FileColumn, StringType)) else Nil) ++
+      (if (emitPos) Seq(meta(GraftSparkTable.PosColumn, LongType)) else Nil) ++
+      (if (emitLineage) Seq(meta(GraftSparkTable.RowIdColumn, LongType),
+        meta(GraftSparkTable.LastUpdatedColumn, LongType)) else Nil) ++
+      (if (emitTag) Seq(meta(GraftSparkTable.TagColumn, LongType)) else Nil))
+  }
 
   override def toBatch: Batch = this
 
@@ -2427,16 +2440,16 @@ class GraftScan(table: IceTable, expr: Expr, required: StructType,
     val reads = new GraftScan.FileReads(table, readSchema, eqSchema, pushedFilters)
     // _file emission rides the row readers (a constant-per-file column
     // appended post-decode); row-level-op scans are not the hot read path
-    val allColumnar = !emitFile && !emitLineage && reads.vectorizable &&
+    val allColumnar = !emitFile && !emitLineage && !emitTag && reads.vectorizable &&
       tasks.forall(t => t.deletes.isEmpty && reads.parquetOwn(t.file))
     // when the scan reported a KeyGroupedPartitioning, every partition
     // MUST carry its key (Spark groups them; a keyless partition would
     // fail the whole scan) — same gating as outputPartitioning
     val grouping = if (spjEnabled) keyGrouping(tasks) else None
-    val pairs = tasks.map { t =>
+    val tags = if (emitTag) planned.get.tags.map(Some(_)) else tasks.map(_ => None)
+    val pairs = tasks.zip(tags).map { case (t, tag) =>
       (t, reads.partition(t, pushedLimit, allColumnar).copy(
-        emitFile = emitFile, emitPos = emitPos,
-        emitLineage = emitLineage,
+        emitFile = emitFile, emitPos = emitPos, emitLineage = emitLineage, tag = tag,
         firstRowId = if (!emitLineage) -1L else t.file.firstRowId.getOrElse(
           throw new IllegalStateException(
             s"${t.file.filePath} has no first_row_id — written before the table became v3? " +
@@ -2698,10 +2711,10 @@ class GraftReaderFactory(confEntries: Array[(String, String)])
 
   private def singleRowReader(p: GraftInputPartition): PartitionReader[InternalRow] = {
     val inner = singleRowReaderInner(p)
-    if (!p.emitFile && !p.emitLineage) inner
+    if (!p.emitFile && !p.emitLineage && p.tag.isEmpty) inner
     else new GraftFileAppendReader(inner, p.readSchemaJson, p.filePath,
       emitPos = p.emitPos, emitFile = p.emitFile, emitLineage = p.emitLineage,
-      firstRowId = p.firstRowId, dataSeq = p.dataSeq)
+      firstRowId = p.firstRowId, dataSeq = p.dataSeq, tag = p.tag)
   }
 
   private def singleRowReaderInner(p: GraftInputPartition): PartitionReader[InternalRow] =
@@ -3189,8 +3202,9 @@ trait HasRowPosition { def currentPosition: Long }
 
 /** Appends metadata columns after the data columns of an inner row
   * reader: `_file` (canon path), `_pos` (the row's file position, from
-  * the inner reader's position tracking), and the v3 lineage pair
-  * `_row_id` / `_last_updated_sequence_number`. When lineage is emitted,
+  * the inner reader's position tracking), the v3 lineage pair
+  * `_row_id` / `_last_updated_sequence_number`, and a planned task's
+  * `_tag`. When lineage is emitted,
   * the inner reader's schema carries the two RESERVED materialized
   * columns LAST (null in un-rewritten files); a non-null materialized
   * value wins over inheritance (firstRowId + position / dataSeq) — the
@@ -3198,7 +3212,7 @@ trait HasRowPosition { def currentPosition: Long }
 class GraftFileAppendReader(inner: PartitionReader[InternalRow],
     schemaJson: String, path: String, emitPos: Boolean = false,
     emitFile: Boolean = true, emitLineage: Boolean = false,
-    firstRowId: Long = -1L, dataSeq: Long = -1L)
+    firstRowId: Long = -1L, dataSeq: Long = -1L, tag: Option[Long] = None)
     extends PartitionReader[InternalRow] {
   private val types: Array[org.apache.spark.sql.types.DataType] = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -3222,10 +3236,12 @@ class GraftFileAppendReader(inner: PartitionReader[InternalRow],
   override def get(): InternalRow = {
     val r = inner.get()
     val width = dataLen + (if (emitFile) 1 else 0) + (if (emitPos) 1 else 0) +
-      (if (emitLineage) 2 else 0)
+      (if (emitLineage) 2 else 0) + tag.size
     val out = new GenericInternalRow(width)
     var i = 0
-    while (i < dataLen) { out.update(i, r.get(i, types(i))); i += 1 }
+    // a null slot stays null: ColumnarBatchRow.get returns the raw slot
+    // (0 for a null long, double, int, date) without checking isNullAt
+    while (i < dataLen) { if (!r.isNullAt(i)) out.update(i, r.get(i, types(i))); i += 1 }
     var j = dataLen
     if (emitFile) { out.update(j, pathU); j += 1 }
     if (emitPos) { out.update(j, pos); j += 1 }
@@ -3236,7 +3252,9 @@ class GraftFileAppendReader(inner: PartitionReader[InternalRow],
         if (r.isNullAt(dataLen)) firstRowId + pos else r.getLong(dataLen)))
       out.update(j + 1, java.lang.Long.valueOf(
         if (r.isNullAt(dataLen + 1)) dataSeq else r.getLong(dataLen + 1)))
+      j += 2
     }
+    tag.foreach(t => out.update(j, t))
     out
   }
 

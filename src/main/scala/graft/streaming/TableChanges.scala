@@ -65,15 +65,23 @@ object TableChanges {
     *    change, skipped.
     *
     * All reads use the range-end snapshot's schema (same policy as
-    * incrementalAppendScan). Scale: per-commit frames are Spark scans
-    * unioned lazily; only file DESCRIPTORS touch the driver, and the
+    * incrementalAppendScan). Scale: the added and copy-on-write-removed
+    * files of the whole range are read by one planned scan per kind (the
+    * rewrites netted in the aggregate, the other commits passed through),
+    * which bin-packs them into about `defaultParallelism` tasks — not one
+    * scan per commit side and one task per file. Each task is tagged
+    * ordinal * 2 + (0 insert | 1 delete) and the metadata columns decode
+    * from that tag. Merge-on-read and equality deletes are read per
+    * commit. Only file DESCRIPTORS touch the driver, and the
     * added/removed sets come from a PER-COMMIT MANIFEST DIFF (the
     * commit's own new manifests plus whatever it dropped from the
-    * parent's list, cache-served) — a steady-state stream's per-trigger
-    * metadata cost is proportional to each commit's churn, never the
-    * table's live file count. Reading removed and masked rows at the
-    * parent means a row masked by an earlier delete is never reported
-    * twice, even when a later delete or DV restates its position. */
+    * parent's list, cache-served); the removed files' tasks are built
+    * from the diff's own entries unless the parent has delete manifests —
+    * a steady-state stream's per-trigger metadata cost is proportional to
+    * each commit's churn, never the table's live file count. Reading
+    * removed and masked rows at the parent means a row masked by an
+    * earlier delete is never reported twice, even when a later delete or
+    * DV restates its position. */
   def changelog(table: IceTable, fromIdExclusive: Option[Long] = None,
       toIdInclusive: Option[Long] = None,
       changeFilter: Option[graft.core.Expr] = None): DataFrame = {
@@ -129,23 +137,30 @@ object TableChanges {
     // every data-file read runs on the table's one executor (ORC and
     // name-mapped files included — the reference applies change reads
     // irrespective of data format, io/pyarrow.py:1629)
-    def read(tasks: Seq[graft.table.FileScanTask], keepFilePos: Boolean): DataFrame =
+    def read(tasks: Seq[graft.table.FileScanTask], tags: Seq[Long] = Nil,
+        keepFilePos: Boolean = false): DataFrame =
       graft.table.IceScan.read(table, tasks, schemaAt,
-        keepFile = keepFilePos, keepPos = keepFilePos)
+        keepFile = keepFilePos, keepPos = keepFilePos, tags = tags)
     def fresh(files: Seq[graft.meta.DataFile]): Seq[graft.table.FileScanTask] =
       files.map(graft.table.FileScanTask(_, Nil, graft.core.BTrue))
     /** The PARENT's live tasks for `paths` — its deletes applied, so a row
       * an earlier merge-on-read delete masked is not read back as a
-      * change of s. A path s itself added reads delete-free. */
+      * change of s. A path s itself added reads delete-free. Where the
+      * parent has no delete manifest, no delete can apply: when the
+      * manifest diff already holds every path's entry (`known`), the
+      * tasks come from those and the parent's live set is not planned. */
     val planAt = scala.collection.mutable.Map.empty[Long, Seq[graft.table.FileScanTask]]
     def parentTasks(s: graft.meta.Snapshot, paths: Seq[String],
-        addedBy: Map[String, graft.meta.DataFile]): Seq[graft.table.FileScanTask] = {
+        known: Map[String, graft.meta.DataFile]): Seq[graft.table.FileScanTask] = {
+      val parentDeletes = s.parentSnapshotId.flatMap(m.snapshotById).exists(p =>
+        ManifestIO.readManifestList(p.manifestList).exists(_.content == 1))
+      if (!parentDeletes && paths.forall(known.contains)) return fresh(paths.map(known))
       val want = paths.toSet
       val live = s.parentSnapshotId.toSeq
         .flatMap(pid => planAt.getOrElseUpdate(pid, table.planTasksAt(pid)))
         .filter(t => want.contains(PathUtil.canon(t.file.filePath)))
       val found = live.map(t => PathUtil.canon(t.file.filePath)).toSet
-      live ++ fresh(paths.filterNot(found).flatMap(addedBy.get))
+      live ++ fresh(paths.filterNot(found).flatMap(known.get))
     }
 
     /** Data manifests of snapshot s (descriptors; cache-served). */
@@ -165,7 +180,11 @@ object TableChanges {
         }
 
     val frames = Seq.newBuilder[DataFrame]
-    val rewrites = Seq.newBuilder[DataFrame] // CoW rewrites' rows, netted below
+    // every added and CoW-removed data file of the range, each task tagged
+    // ordinal * 2 + (0 insert | 1 delete): commits that both removed and
+    // added (CoW rewrites) are netted below, the others pass through
+    val rewrites = Seq.newBuilder[(graft.table.FileScanTask, Long)]
+    val passThrough = Seq.newBuilder[(graft.table.FileScanTask, Long)]
     range.zipWithIndex.foreach { case (s, ordinal) =>
       val op = s.operation
       // 'replace' commits (compaction, manifest rewrite) are logically
@@ -204,25 +223,23 @@ object TableChanges {
           .filterNot(mf => curMfPaths.contains(mf.manifestPath))
           .flatMap(mf => entriesOf(mf).map(e => (e, mf.partitionSpecId)))
           .filter(_._1.status != EntryStatus.Deleted)
-        val removedPaths = (newEntries.collect {
+        val removedBy: Map[String, graft.meta.DataFile] = (newEntries.collect {
           case (e, sp) if e.status == EntryStatus.Deleted &&
             e.snapshotId == s.snapshotId && fileMightMatch(sp, e.dataFile) =>
-            PathUtil.canon(e.dataFile.filePath)
+            PathUtil.canon(e.dataFile.filePath) -> e.dataFile
         } ++
           droppedLive.collect {
             case (e, sp) if fileMightMatch(sp, e.dataFile) =>
-              PathUtil.canon(e.dataFile.filePath)
-          }.filterNot(presentInNew))
-          .distinct.sorted
-        val inserts = if (addedPaths.isEmpty) None
-          else Some(rowFiltered(read(fresh(addedPaths.flatMap(addedBy.get)), keepFilePos = false)))
-        val cowDeletes = if (removedPaths.isEmpty) None
-          else Some(rowFiltered(read(parentTasks(s, removedPaths, addedBy), keepFilePos = false)))
+              PathUtil.canon(e.dataFile.filePath) -> e.dataFile
+          }.filterNot(p => presentInNew(p._1))).toMap
+        val inserts = fresh(addedPaths.flatMap(addedBy.get))
+        val cowDeletes = if (removedBy.isEmpty) Nil
+          else parentTasks(s, removedBy.keys.toSeq.sorted, addedBy ++ removedBy)
         // carry-overs cancel only where a commit both removed and added
         // (CoW rewrite); append-only and pure-MoR commits skip the shuffle
-        val sink = if (inserts.isDefined && cowDeletes.isDefined) rewrites else frames
-        inserts.foreach(f => sink += withMeta(f, "insert", ordinal, s.snapshotId))
-        cowDeletes.foreach(f => sink += withMeta(f, "delete", ordinal, s.snapshotId))
+        val sink = if (inserts.nonEmpty && cowDeletes.nonEmpty) rewrites else passThrough
+        sink ++= inserts.map(_ -> ordinal * 2L)
+        sink ++= cowDeletes.map(_ -> (ordinal * 2L + 1))
 
         // merge-on-read deletes added by this commit
         val dels = addedDeleteFiles(s)
@@ -342,22 +359,41 @@ object TableChanges {
         }
       }
     }
+    // each kind is ONE planned scan over all its commits' files, which
+    // GraftScan bin-packs into about defaultParallelism tasks
+    val snapshotIds = range.map(_.snapshotId)
+    def tagged(tasks: Seq[(graft.table.FileScanTask, Long)]): Option[DataFrame] =
+      if (tasks.isEmpty) None
+      else Some(rowFiltered(read(tasks.map(_._1), tags = tasks.map(_._2))))
     // every CoW rewrite of the range netted in ONE shuffle: inserts +1,
     // deletes −1, summed per (row, commit), |net| copies out. This is the
     // plan Spark rewrites EXCEPT ALL into (RewriteExceptAll), fused across
     // commits and both directions, so the multiset semantics match: nulls
     // group together, NaN and −0.0 are normalized, maps cannot be grouped
-    rewrites.result().reduceOption(_ unionByName _).foreach { tagged =>
-      val cols = emptyOut.columns.toSeq
-      def c(n: String) = col(s"`$n`")
-      frames += tagged.groupBy(cols.filter(_ != "_change_type").map(c): _*)
-        .agg(sum(when(col("_change_type") === "insert", 1L).otherwise(-1L)).as("__n"))
+    tagged(rewrites.result()).foreach { df =>
+      val data = schemaAt.fields.map(f => col(s"`${f.name}`"))
+      frames += decodeTags(df.groupBy(data :+ shiftright(col("__tag"), 1).as("__ord"): _*)
+        .agg(sum(lit(1L) - col("__tag") % 2 * 2).as("__n"))
         .where(col("__n") =!= 0)
-        .withColumn("_change_type", when(col("__n") > 0, "insert").otherwise("delete"))
+        .withColumn("__tag", col("__ord") * 2 + when(col("__n") < 0, 1L).otherwise(0L))
         .withColumn("__n", explode(array_repeat(lit(true), abs(col("__n")).cast("int"))))
-        .select(cols.map(c): _*)
+        .select(data :+ col("__tag"): _*), snapshotIds)
     }
+    tagged(passThrough.result()).foreach(df => frames += decodeTags(df, snapshotIds))
     frames.result().reduceOption(_ unionByName _).getOrElse(emptyOut)
+  }
+
+  /** The changelog's metadata columns from a tagged read's `__tag`
+    * (ordinal * 2 + (0 insert | 1 delete)): the snapshot ids are an array
+    * literal, which generated code references rather than inlines, so the
+    * plan's code does not change with the range. */
+  private def decodeTags(df: DataFrame, snapshotIds: Seq[Long]): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val ordinal = shiftright(col("__tag"), 1)
+    df.withColumn("_change_type", when(col("__tag") % 2 === 0, "insert").otherwise("delete"))
+      .withColumn("_change_ordinal", ordinal.cast("int"))
+      .withColumn("_commit_snapshot_id", typedLit(snapshotIds.toArray).getItem(ordinal))
+      .drop("__tag")
   }
 
   /** Row-identity CDC driven as micro-batches (v3 row lineage; the
@@ -725,8 +761,9 @@ object TableChanges {
 
   /** The same slice in the changelog's shape (`_change_type` /
     * `_change_ordinal` / `_commit_snapshot_id`) for the v2-compatible
-    * `graft-changelog` source. The slice is always ordinal 0: it carries
-    * exactly one commit's (partial) inserts. */
+    * `graft-changelog` source, read and decoded like a changelog range's
+    * files. The slice is always ordinal 0: it carries exactly one
+    * commit's (partial) inserts. */
   def changelogAppendSlice(table: IceTable, snapshotId: Long, fromIdx: Long,
       toIdx: Option[Long], changeFilter: Option[graft.core.Expr] = None): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -739,20 +776,11 @@ object TableChanges {
         .map(t => graft.core.PathUtil.canon(t.file.filePath)).toSet
       tasks0.filter(t => keep.contains(graft.core.PathUtil.canon(t.file.filePath)))
     }.getOrElse(tasks0)
-    val base =
-      if (tasks.isEmpty)
-        table.spark.createDataFrame(
-          table.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          table.schema.toSpark)
-      else {
-        val b0 = table.scanForTasksAt(snapshotId, tasks)
-        changeFilter.map(f => b0.filter(graft.core.ToColumn.compile(
-          graft.core.Exprs.rewriteNot(graft.core.Binder.bind(table.schema, f)))))
-          .getOrElse(b0)
-      }
-    base.withColumn("_change_type", lit("insert"))
-      .withColumn("_change_ordinal", lit(0))
-      .withColumn("_commit_snapshot_id", lit(snapshotId))
+    val base = if (tasks.isEmpty) emptyDf(table).withColumn("__tag", lit(0L))
+      else graft.table.IceScan.read(table, tasks, table.schema, tags = tasks.map(_ => 0L))
+    decodeTags(changeFilter.map(f => base.filter(graft.core.ToColumn.compile(
+      graft.core.Exprs.rewriteNot(graft.core.Binder.bind(table.schema, f)))))
+      .getOrElse(base), Seq(snapshotId))
   }
 
   final class Handle(flag: AtomicBoolean, thread: Thread) {

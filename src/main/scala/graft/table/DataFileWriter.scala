@@ -200,36 +200,59 @@ object DataFileWriter {
   def write(df: DataFrame, spec: FileWriteSpec, prefix: String = "part"): Seq[DataFile] = {
     val rowTypes = df.schema.fields.map(_.dataType)
     val partTypes = spec.partTypes.map(StatsHarvester.parseType)
+    inTasks(df, spec, prefix) { (writer, rows) =>
+      val nPart = partTypes.size
+      if (nPart == 0) rows.foreach(writer.write("", _))
+      else {
+        val nData = rowTypes.length - nPart
+        def refs(range: Range) = range.map(i => BoundReference(i, rowTypes(i), nullable = true))
+        val data = UnsafeProjection.create(refs(0 until nData))
+        val key = UnsafeProjection.create(refs(nData until rowTypes.length))
+        var lastKey: UnsafeRow = null
+        var dir = ""
+        rows.foreach { row =>
+          val k = key(row)
+          if (lastKey == null || k != lastKey) {
+            lastKey = k.copy()
+            dir = partitionDir(spec.partNames,
+              partTypes.indices.map(i => lastKey.get(i, rowTypes(nData + i))), partTypes)
+          }
+          writer.write(dir, data(row))
+        }
+      }
+    }
+  }
+
+  /** Write position-delete rows (`file_path`, `pos`), sorted by both
+    * within each task, as one file per target data file: with FULL
+    * `file_path` bounds, each file then applies to its target alone. */
+  def writePerTarget(df: DataFrame, spec: FileWriteSpec): Seq[DataFile] =
+    inTasks(df, spec, "del") { (writer, rows) =>
+      var target: org.apache.spark.unsafe.types.UTF8String = null
+      rows.foreach { row =>
+        if (target == null || row.getUTF8String(0) != target) {
+          target = row.getUTF8String(0).clone()
+          writer.open("")
+        }
+        writer.write("", row)
+      }
+    }
+
+  /** One job: each task hands its rows to its own writer and returns
+    * the files it wrote. */
+  private def inTasks(df: DataFrame, spec: FileWriteSpec, prefix: String)(
+      body: (DataFileWriter, Iterator[InternalRow]) => Unit): Seq[DataFile] =
     org.apache.spark.sql.GraftBridge.internalRowRDD(df).mapPartitions { rows =>
       val task = org.apache.spark.TaskContext.get()
       val writer = new DataFileWriter(spec,
         f"$prefix-${task.partitionId()}%05d-${task.taskAttemptId()}")
       try {
-        val nPart = partTypes.size
-        if (nPart == 0) rows.foreach(writer.write("", _))
-        else {
-          val nData = rowTypes.length - nPart
-          def refs(range: Range) = range.map(i => BoundReference(i, rowTypes(i), nullable = true))
-          val data = UnsafeProjection.create(refs(0 until nData))
-          val key = UnsafeProjection.create(refs(nData until rowTypes.length))
-          var lastKey: UnsafeRow = null
-          var dir = ""
-          rows.foreach { row =>
-            val k = key(row)
-            if (lastKey == null || k != lastKey) {
-              lastKey = k.copy()
-              dir = partitionDir(spec.partNames,
-                partTypes.indices.map(i => lastKey.get(i, rowTypes(nData + i))), partTypes)
-            }
-            writer.write(dir, data(row))
-          }
-        }
+        body(writer, rows)
         writer.close().iterator
       } catch {
         case e: Throwable => writer.abort(); throw e
       }
     }.collect().toSeq
-  }
 
   /** `t` with every field, element and value optional — the layout
     * Spark's own parquet writer gives data files. */

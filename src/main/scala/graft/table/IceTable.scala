@@ -1597,8 +1597,11 @@ class IceTable(
       .join(live, col("file_path") === col("live_path"), "left_semi")
       .dropDuplicates("file_path", "pos")
       .orderBy(col("file_path"), col("pos"))
-    val written = DataFileWriter.write(merged, DataFileWriter.spec(spark, stage,
-      GraftDeltaWrite.PosDeleteSchema.toSpark, GraftDeltaWrite.PosDeleteSchema))
+    // one file per target data file, its FULL file_path bounds equal: a
+    // merged file spanning targets would attach to every file between them
+    val written = DataFileWriter.writePerTarget(merged, DataFileWriter.spec(spark, stage,
+      GraftDeltaWrite.PosDeleteSchema.toSpark, GraftDeltaWrite.PosDeleteSchema,
+      modes = GraftDeltaWrite.PosDeleteModes))
       .filter(_.recordCount > 0)
       .map(_.copy(content = FileContent.PositionDeletes))
     // no-op guard: identical content in the same number of files → keep

@@ -36,17 +36,22 @@ object IceScan {
 
   /** `tasks`' rows as read by the DSv2 [[graft.spark.GraftScan]]:
     * `schema`'s columns plus the metadata columns `_file`, `_pos` (and on
-    * v3 tables the lineage pair), pruned to what the caller selects. The
-    * one read path of every planned data file in the library. */
+    * v3 tables the lineage pair), pruned to what the caller selects. With
+    * `tags` (one per task) each row also carries its task's tag as
+    * `__tag`. The one read path of every planned data file in the
+    * library. Metadata columns are selected as such, so a data column of
+    * the same name cannot shadow one. */
   private[graft] def read(table: IceTable, tasks: Seq[FileScanTask], schema: Schema,
       keepFile: Boolean = false, keepPos: Boolean = false,
-      lineage: Boolean = false): DataFrame = {
+      lineage: Boolean = false, tags: Seq[Long] = Nil): DataFrame = {
     val df = org.apache.spark.sql.GraftBridge.v2Frame(table.spark,
-      new GraftPlannedTable(table, PlannedRead(tasks, schema)))
+      new GraftPlannedTable(table, PlannedRead(tasks, schema, tags)))
     df.select(schema.fields.map(f => df.col(s"`${f.name}`")) ++
-      (if (lineage) RowLineage.fields.map(f => df.col(f.name)) else Nil) ++
-      (if (keepFile) Seq(df.col(GraftSparkTable.FileColumn).as("__file")) else Nil) ++
-      (if (keepPos) Seq(df.col(GraftSparkTable.PosColumn).as("__pos")) else Nil): _*)
+      (if (lineage) RowLineage.fields.map(f => df.metadataColumn(f.name)) else Nil) ++
+      (if (keepFile) Seq(df.metadataColumn(GraftSparkTable.FileColumn).as("__file")) else Nil) ++
+      (if (keepPos) Seq(df.metadataColumn(GraftSparkTable.PosColumn).as("__pos")) else Nil) ++
+      (if (tags.nonEmpty) Seq(df.metadataColumn(GraftSparkTable.TagColumn).as("__tag"))
+       else Nil): _*)
   }
 }
 

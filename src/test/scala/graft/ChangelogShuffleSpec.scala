@@ -16,9 +16,10 @@ import graft.streaming.TableChanges
 import graft.table.{FileScanTask, IceScan, IceTable}
 
 /** Carry-over cancellation runs as one signed aggregate over every
-  * copy-on-write commit of a changelog range: its shuffle count does not
-  * grow with the commits, and its rows equal the per-commit two-way
-  * `exceptAll` it replaces, kept here as the oracle. */
+  * copy-on-write commit of a changelog range, read by one planned scan
+  * whose tasks are tagged with their commit and side: its shuffle count
+  * and scan leaves do not grow with the commits, and its rows equal the
+  * per-commit two-way `exceptAll` it replaces, kept here as the oracle. */
 class ChangelogShuffleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -67,6 +68,14 @@ class ChangelogShuffleSpec extends AnyFunSuite with BeforeAndAfterAll {
       val from = t.metadata.currentSnapshotId.get
       (0 until n).foreach(k => catalog.loadTable(s"cow_$n").delete(s"k = $k"))
       val cl = TableChanges.changelog(catalog.loadTable(s"cow_$n"), Some(from))
+      // the 8n files the n rewrites added and removed: one scan leaf,
+      // bin-packed to the session's parallelism
+      val scans = cl.queryExecution.sparkPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }
+      assert(scans.size === 1, s"scan leaves over $n commits")
+      assert(scans.head.inputPartitions.size <= spark.sparkContext.defaultParallelism,
+        s"input partitions over $n commits")
       var changed = 0L
       val stages = shuffleStagesOf { changed = cl.collect().length.toLong }
       // each commit rewrites files that keep other keys' rows: those
@@ -121,27 +130,32 @@ class ChangelogShuffleSpec extends AnyFunSuite with BeforeAndAfterAll {
     rows ++ rows.filter(_ => rnd.nextInt(4) == 0)
   }
 
-  for (seed <- Seq(1, 2)) test(s"the changelog equals per-commit exceptAll both ways (seed $seed)") {
+  /** A seeded range of overwrites, deletes and an append over a table of
+    * `props` whose rows `shape` completes, checked against the oracle
+    * whole, from its fourth commit and under two filters. */
+  def differential(name: String, seed: Int, props: Map[String, String] = Map.empty,
+      shape: DataFrame => DataFrame = identity): Unit = {
     val rnd = new Random(seed)
-    val name = s"diff_$seed"
-    val t = catalog.createTable(name, Schema.fromSpark(kvs))
-    t.append(frame(batch(rnd, 120)).repartition(3))
+    def rows(rs: Seq[Row]) = shape(frame(rs))
+    val t = catalog.createTable(name, Schema.fromSpark(rows(Nil).schema), properties = props)
+    t.append(rows(batch(rnd, 120)).repartition(3))
     val from = t.metadata.currentSnapshotId.get
     // each overwrite removes the rows one filter matches (rewriting the
     // files that also hold others) and adds fresh rows, duplicates, and
     // some of the removed rows again, which must cancel; −0.0 rewritten
     // as 0.0 cancels too, as under exceptAll
     Seq("k = 3", "k IS NULL", "v < 0.5", "s = 'b'").foreach { f =>
-      val gone = catalog.loadTable(name).scan.filter(f).toDF.collect().toSeq
+      val gone = catalog.loadTable(name).scan.filter(f).toDF.select("k", "v", "s")
+        .collect().toSeq
       val back = gone.filter(_ => rnd.nextBoolean()).map { r =>
         if (!r.isNullAt(1) && java.lang.Double.compare(r.getDouble(1), -0.0) == 0)
           Row(r.get(0), 0.0, r.get(2))
         else r
       }
-      catalog.loadTable(name).overwrite(frame(back ++ batch(rnd, 10)), ExprParser.parse(f))
+      catalog.loadTable(name).overwrite(rows(back ++ batch(rnd, 10)), ExprParser.parse(f))
     }
     catalog.loadTable(name).delete("k = 7")
-    catalog.loadTable(name).append(frame(batch(rnd, 8)))
+    catalog.loadTable(name).append(rows(batch(rnd, 8)))
     catalog.loadTable(name).delete("k = 1 AND s = 'a'")
 
     val tl = catalog.loadTable(name)
@@ -153,5 +167,51 @@ class ChangelogShuffleSpec extends AnyFunSuite with BeforeAndAfterAll {
       val want = oracle(tl, lo, to, filter)
       assert(rowsOf(got) === rowsOf(want), s"range from $lo, filter $filter")
     }
+  }
+
+  for (seed <- Seq(1, 2)) test(s"the changelog equals per-commit exceptAll both ways (seed $seed)") {
+    differential(s"diff_$seed", seed)
+  }
+
+  test("a changelog over an ORC table equals the oracle") {
+    differential("diff_orc", 3, props = Map("write.format.default" -> "orc"))
+  }
+
+  test("a data column named _tag neither shadows nor is shadowed by the task tag") {
+    differential("diff_tag", 4,
+      shape = _.withColumn("_tag", coalesce(col("k"), lit(-1L)) * 2 + 1))
+  }
+
+  test("a file one commit adds and a later one removes reads once per side") {
+    val t = catalog.createTable("add_remove", Schema.fromSpark(kvs))
+    t.append(frame((0 until 40).map(i => Row(java.lang.Long.valueOf(i % 4), i * 1.0, s"a$i"))))
+    val from = t.metadata.currentSnapshotId.get
+    catalog.loadTable("add_remove").append(
+      frame((0 until 6).map(i => Row(java.lang.Long.valueOf(i % 3 + 10), i * 1.0, s"b$i")))
+        .coalesce(1))
+    def paths(t: IceTable) =
+      t.planTasksAt(t.metadata.currentSnapshotId.get).map(_.file.filePath).toSet
+    val added = paths(catalog.loadTable("add_remove")) -- paths(t)
+    catalog.loadTable("add_remove").delete("k = 11")
+    catalog.loadTable("add_remove").append(frame(Seq(Row(12L, 0.5, "c"))))
+    val tl = catalog.loadTable("add_remove")
+    assert(added.size === 1 && (added & paths(tl)).isEmpty,
+      "the appended file is rewritten within the range")
+    val to = tl.metadata.currentSnapshotId.get
+    assert(rowsOf(TableChanges.changelog(tl, Some(from), Some(to))) ===
+      rowsOf(oracle(tl, from, to, None)))
+  }
+
+  test("the task tag is not a column of catalog tables") {
+    val wh = Files.createTempDirectory("cl-tag-wh").toString
+    spark.conf.set("spark.sql.catalog.tagcat", "graft.spark.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.tagcat.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS tagcat.db")
+    spark.sql("CREATE TABLE tagcat.db.t (k BIGINT)")
+    spark.sql("INSERT INTO tagcat.db.t VALUES (1)")
+    assert(spark.sql("SELECT _file FROM tagcat.db.t").count() === 1)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT _tag FROM tagcat.db.t").collect())
+    assert(e.getMessage.contains("_tag"))
   }
 }

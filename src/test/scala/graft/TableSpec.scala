@@ -1745,6 +1745,28 @@ class TableSpec extends AnyFunSuite with BeforeAndAfterAll {
         "not re-decode the live set")
   }
 
+  test("a copy-on-write commit's changelog decodes only the manifests of its " +
+      "diff when the parent has no deletes, never the parent's live set") {
+    import graft.streaming.TableChanges
+    import graft.meta.ManifestIO
+    import spark.implicits._
+    def rows(lo: Long) = (lo until lo + 10).map(k => (k, k * 2)).toDF("k", "v").repartition(1)
+    val t = catalog.createTable("t_cow_diff_only", Schema.fromSpark(rows(0).schema))
+    (0 until 8).foreach(i => t.append(rows(i * 10L)))
+    val from = t.refresh().metadata.currentSnapshotId
+    t.delete("k = 3")
+    val rel = t.refresh()
+    ManifestIO.clearManifestCache()
+    val before = ManifestIO.manifestOpens.get()
+    val out = TableChanges.changelog(rel, from).collect()
+    val opens = ManifestIO.manifestOpens.get() - before
+    assert(out.map(r => (r.getAs[Long]("k"), r.getAs[String]("_change_type"))).toSeq ===
+      Seq((3L, "delete")))
+    // the commit's new manifest and the one it dropped; a plan of the
+    // parent would decode all eight of the parent's manifests
+    assert(opens <= 2, s"changelog decoded $opens manifests for a one-file rewrite")
+  }
+
   test("eq-delete changelog prunes parent candidates by the delete FILE's " +
       "own footer bounds — a >1000-key commit reads only bound-overlapping " +
       "files, never the parent snapshot") {
@@ -2708,6 +2730,40 @@ class TableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.scan.toDF.count() === orders.count())
     // idempotent afterwards
     assert(t.rewritePositionDeletes() === (0, 0))
+  }
+
+  test("rewritePositionDeletes keeps each merged delete file scoped to its data file") {
+    val schema = Schema.fromSpark(orders.schema)
+    val t = catalog.createTable("t_posrw_scoped", schema)
+    // four data files of 375 keys each
+    (0 until 4).foreach(i => t.append(orders.filter(
+      col("o_orderkey") >= i * 375 && col("o_orderkey") < (i + 1) * 375).coalesce(1)))
+    val files = t.scan.planFiles().map(_.file.filePath).sorted
+    assert(files.size === 4)
+    val (a, b) = {
+      def holder(k: Int) = t.scan.filter(s"o_orderkey = $k").toDFWithFile
+        .select("__file").collect().head.getString(0)
+      (holder(10), holder(400))
+    }
+    t.deletePositional("o_orderkey < 20")
+    t.deletePositional("o_orderkey >= 400 and o_orderkey < 410")
+    t.deletePositional("o_orderkey >= 20 and o_orderkey < 30")
+    def attached() = {
+      val tasks = t.refresh().scan.planFiles()
+      files.map(f => tasks.find(_.file.filePath == f).get.deletes.size)
+    }
+    def holders(n: Int) = files.map(f => graft.core.PathUtil.canon(f) match {
+      case p if p == a => n
+      case p if p == b => 1
+      case _ => 0
+    })
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    val before = rowsOf(t.scan.toDF)
+    assert(attached() === holders(2))
+    assert(t.rewritePositionDeletes() === ((3, 2)))
+    // one file per target: the untouched data files carry no delete file
+    assert(attached() === holders(1))
+    assert(rowsOf(t.scan.toDF) === before)
   }
 
   test("write.parquet.* properties reach the writer: bloom filters + zstd") {

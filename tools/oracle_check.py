@@ -2,6 +2,7 @@
 """Local mimic of the driver's DuckDB-oracle compare.
 
 Usage: python3 tools/oracle_check.py <verify_out_dir> [sf_dir] [--timeout SECONDS]
+                                     [--only NAME,NAME,...]
 
 Reads each <out>/<name>/ parquet (Spark result) and runs the matching
 SQL from <out>/oracle_sql.json in DuckDB over the same sf tables.
@@ -9,7 +10,9 @@ Compares: schema (column names sorted), row count, and exact values
 (rows sorted by all columns). Reports per-query PASS/FAIL with diffs.
 A DuckDB query still running after --timeout seconds (default 600, 0 =
 no limit) is interrupted and reported as [TIMEOUT]; a timeout is never
-a pass, and any failure or timeout makes the exit status 1.
+a pass, and any failure or timeout makes the exit status 1. --only
+restricts the check to the named gates, like graft.Verify's third
+argument; a named gate without a result directory is a failure.
 """
 import argparse, sys, os, glob, json, threading
 import duckdb
@@ -73,6 +76,8 @@ def main():
     ap.add_argument("sf", nargs="?", default="/root/testdata/sf0.01")
     ap.add_argument("--timeout", type=float, default=600,
                     help="seconds one DuckDB query may run (0 = no limit)")
+    ap.add_argument("--only", type=lambda s: set(filter(None, s.split(","))),
+                    help="comma-separated gate names to check (default: all)")
     args = ap.parse_args()
     out, sf = args.out, args.sf
     con = duckdb.connect()
@@ -82,10 +87,13 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
     n_pass = n_fail = n_skip = n_timeout = 0
-    for name in sorted(os.listdir(out)):
+    names = sorted(n for n in os.listdir(out) if os.path.isdir(os.path.join(out, n)))
+    if args.only is not None:
+        for name in sorted(args.only - set(names)):
+            print(f"[FAIL] {name}: no spark output"); n_fail += 1
+        names = [n for n in names if n in args.only]
+    for name in names:
         d = os.path.join(out, name)
-        if not os.path.isdir(d):
-            continue
         files = glob.glob(f"{d}/*.parquet")
         if not files:
             print(f"[FAIL] {name}: no spark output"); n_fail += 1; continue
